@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Headline queries benched at sf0.1, mirroring BASELINE.md's 11-query
@@ -210,22 +209,8 @@ object Bench {
         "comparable to BASELINE/SCALE rows")
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    require(cpus.toIntOption.exists(_ > 0),
-      s"SPARK_GRAFT_CPUS must be a positive integer, got '$cpus'")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // native extensions (dot_f/ngrams/kmv_distinct + the dot-product
-      // and window-top-k rewrite rules) active in the main path
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      // events.ts is Parquet TIMESTAMP(NANOS); Spark 4 needs this to
-      // read it at all (FIXTURES.md:85-91).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cpus(32)
+    val spark = Sessions.local(cpus)
     // Warm-up: run every headline query once at the bench SF so JIT +
     // whole-stage-codegen compilation and parquet footer caches are
     // paid outside timing (BASELINE.md timed a warm PySpark session;

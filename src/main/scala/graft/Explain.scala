@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-inspection utility: print the plan of named declared queries
   * (all of them with no args) at a given SF dir — the `.explain`
@@ -21,24 +20,7 @@ object Explain {
     val names: Seq[String] =
       if (args.length > 1) args(1).split(",").map(_.trim).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    // validate before interpolating into master()/shuffle.partitions:
-    // a non-numeric value otherwise surfaces as an opaque
-    // SparkException at session build (ADVICE r19)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS") match {
-      case Some(v) =>
-        require(v.toIntOption.exists(_ > 0),
-          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")
-        v
-      case None => "4"
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus(4))
     spark.sparkContext.setLogLevel("ERROR")
     val formatted =
       sys.env.get("GRAFT_EXPLAIN_MODE").contains("formatted")

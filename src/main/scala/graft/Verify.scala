@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -15,20 +14,7 @@ object Verify {
       case Array(s, o, f) =>
         (s, o, Some(f.split(",").map(_.trim).filter(_.nonEmpty).toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // native extensions (dot_f/ngrams/kmv_distinct + the dot-product
-      // and window-top-k rewrite rules) active in the main path
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      // events.ts is Parquet TIMESTAMP(NANOS); Spark 4 needs this to
-      // read it at all (FIXTURES.md:85-91).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus(4))
     new java.io.File(outDir).mkdirs()
     // run queries on a small thread pool: Spark schedules concurrent
     // jobs fine, and the dump is dominated by per-query fixed cost

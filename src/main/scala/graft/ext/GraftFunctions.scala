@@ -89,19 +89,28 @@ object GraftFunctions {
       BloomMightContain(args(0), args(1))
     })
 
+  /** One info per function, shared by both paths: a registry entry
+    * holding graft's builder is left as it is. */
+  private val infos: Map[String, ExpressionInfo] = functions.map {
+    case (name, _) => name -> new ExpressionInfo("graft.ext.GraftFunctions", name)
+  }.toMap
+
+  /** Binds every graft function not already bound to graft's own
+    * builder; a name bound to anything else is replaced. A repeat call
+    * changes nothing, so the ops may call it per use without the
+    * registry logging a "replaced" warning per function. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, builder) =>
-      registry.createOrReplaceTempFunction(name, builder, "built-in")
+      val id = FunctionIdentifier(name)
+      if (!registry.lookupFunctionBuilder(id).exists(_ eq builder))
+        registry.registerFunction(id, infos(name), builder)
     }
   }
 
   def inject(extensions: SparkSessionExtensions): Unit = {
     functions.foreach { case (name, builder) =>
-      extensions.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.ext.GraftFunctions", name),
-        builder))
+      extensions.injectFunction((FunctionIdentifier(name), infos(name), builder))
     }
     extensions.injectOptimizerRule(_ => RewriteDotProduct)
     extensions.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)

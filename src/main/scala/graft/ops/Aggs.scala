@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Op, OpModule, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -745,43 +746,20 @@ object Aggs extends OpModule {
     * buckets (possible only when n < 16) never appear — exactly the
     * buckets the per-row rank form emits. The previous form ranked
     * all rows (`Ranks.withGlobalRank`: range shuffle + double
-    * per-partition sort + an RDD zipWithIndex row-conversion of the
-    * whole table — 4 of the 5 data-sized stages, ~510 core-s at
-    * sf10); this form collapses the table map-side to the price
-    * domain (60 M rows → 581 k distinct cents at sf10, and at 100 TB
-    * the domain stays bounded while rows grow), so the only ordered
-    * pass is the domain-sized cumulative window (the `winsorize`
-    * posture). Per-bucket money sums still accumulate in
-    * decimal(38,0) (12-digit cell sums diverge in double — the sf10
-    * lesson): cents·contrib products are exact integers in both
-    * forms. */
+    * per-partition sort + an RDD row-conversion of the whole table —
+    * 4 of the 5 data-sized stages, ~510 core-s at sf10); this form
+    * collapses the table map-side to the price domain (60 M rows →
+    * 581 k distinct cents at sf10, and at 100 TB the domain stays
+    * bounded while rows grow), so the only ordered pass is the
+    * domain-sized cumulative count — `Ranks.withPrefixSum` over the
+    * rollup, so not even that runs in one task. Per-bucket money sums
+    * still accumulate in decimal(38,0) (12-digit cell sums diverge in
+    * double — the sf10 lesson): cents·contrib products are exact
+    * integers in both forms. */
   val equiDepthHist = Op(
     "equi_depth_hist",
-    (s, d) => {
-      val cents = Tables(s, d, "lineitem")
-        .select(floor(col("l_extendedprice") * 100).cast("long").as("cents"))
-      val n = cents.agg(count(lit(1)).as("__n"))
-      val wc = Window.orderBy(col("cents"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cdf = cents.groupBy(col("cents")).agg(count(lit(1)).as("m"))
-        .withColumn("c1", sum(col("m")).over(wc))
-        .withColumn("c0", col("c1") - col("m"))
-      cdf.crossJoin(broadcast(n))
-        .withColumn("bucket",
-          explode(sequence(expr("(c0 * 16) div __n"),
-            expr("((c1 - 1) * 16) div __n"))))
-        .withColumn("contrib",
-          least(expr("((bucket + 1) * __n - 1) div 16"), col("c1") - 1) -
-            greatest(expr("(bucket * __n + 15) div 16"), col("c0")) +
-            lit(1L))
-        .filter(col("contrib") > 0)
-        .groupBy(col("bucket"))
-        .agg(sum(col("contrib")).as("n_rows"),
-          min(col("cents")).as("lo_cents"),
-          max(col("cents")).as("hi_cents"),
-          sum(col("cents").cast("decimal(38,0)") * col("contrib"))
-            .cast("long").as("total_cents"))
-    },
+    (s, d) => equiDepthBuckets(Tables(s, d, "lineitem")
+      .select(floor(col("l_extendedprice") * 100).cast("long").as("cents"))),
     Some("""
       WITH c AS (
         SELECT CAST(FLOOR(l_extendedprice * 100) AS BIGINT) AS cents,
@@ -799,6 +777,32 @@ object Aggs extends OpModule {
              MAX(cents) AS hi_cents,
              CAST(SUM(cents) AS BIGINT) AS total_cents
       FROM r GROUP BY bucket"""))
+
+  /** `equi_depth_hist`'s bucket assignment: the 16-bucket equi-depth
+    * histogram of a long `cents` column, from the distinct-value CDF
+    * (see the op). The CDF's cumulative count `c1` is the distributed
+    * prefix sum of each value's multiplicity, never a global window. */
+  def equiDepthBuckets(cents: DataFrame): DataFrame = {
+    val n = cents.agg(count(lit(1)).as("__n"))
+    val m = cents.groupBy(col("cents")).agg(count(lit(1)).as("m"))
+    Ranks.withPrefixSum(m, "c1", "m", col("cents"))
+      .withColumn("c0", col("c1") - col("m"))
+      .crossJoin(broadcast(n))
+      .withColumn("bucket",
+        explode(sequence(expr("(c0 * 16) div __n"),
+          expr("((c1 - 1) * 16) div __n"))))
+      .withColumn("contrib",
+        least(expr("((bucket + 1) * __n - 1) div 16"), col("c1") - 1) -
+          greatest(expr("(bucket * __n + 15) div 16"), col("c0")) +
+          lit(1L))
+      .filter(col("contrib") > 0)
+      .groupBy(col("bucket"))
+      .agg(sum(col("contrib")).as("n_rows"),
+        min(col("cents")).as("lo_cents"),
+        max(col("cents")).as("hi_cents"),
+        sum(col("cents").cast("decimal(38,0)") * col("contrib"))
+          .cast("long").as("total_cents"))
+  }
 
   override def ops: Seq[Op] =
     Seq(pricingAgg, aggDistinct, aggRollup, aggStats, udafGeomean, aggHll,

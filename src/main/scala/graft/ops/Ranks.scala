@@ -1,18 +1,20 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 /** Distributed exact order statistics (SURVEY.md §2.10 scale note).
   *
-  * `withGlobalRank` materializes each row's exact 1-based global rank
-  * under a total order WITHOUT a single-partition sort: range-partition
-  * on the sort key (each reducer owns a contiguous key range), sort
-  * within partitions, then `zipWithIndex` — whose per-partition count
-  * pass and final pass read the same materialized shuffle stage, so
-  * every row gets start-offset-of-partition + local position. All
-  * stages are parallel; nothing single-partition, nothing data-sized
-  * on the driver (the counts array is ≤#partitions longs).
+  * `withPrefixSum` materializes each row's exact running sum of a
+  * weight under a total order WITHOUT a single-partition sort or
+  * window: range-partition on the sort key (each reducer owns a
+  * contiguous key range), sort within partitions, sum each
+  * partition's weights, then give every row its partition's offset +
+  * its local running sum. `withGlobalRank` is the unit-weight case:
+  * the exact 1-based global rank. All stages are parallel; nothing
+  * single-partition, nothing data-sized collected (the totals array
+  * is ≤#partitions longs).
   *
   * `ntileFromRank` then reproduces SQL NTILE(k) bit-exactly as a pure
   * closed-form function of (rank, n): the first n%k buckets take
@@ -23,49 +25,68 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Ranks {
 
-  /** Adds `rankCol` = exact global 1-based rank of each row under
-    * `sortCols` (which must form a total order — include a unique
-    * tie-break column). One range shuffle + per-partition sort, then
-    * `zipWithIndex` assigns global offsets; no data-sized
-    * single-partition stage anywhere.
+  /** Adds `out` = the inclusive prefix sum of the long column
+    * `weight` under `sortCols` (which must form a total order —
+    * include a unique tie-break column). One range shuffle +
+    * per-partition sort, then a job that sums each partition's weights
+    * and a final pass that adds each partition's offset to its running
+    * sum; no data-sized single-partition stage anywhere, and only the
+    * ≤#partitions totals are collected.
     *
-    * Why RDD zipWithIndex and not a __pid offsets self-join: the
-    * offsets approach evaluates the range-shuffled branch TWICE (once
-    * for the per-partition counts, once as the join's data side), and
-    * the two evaluations may disagree on partition layout (AQE
-    * coalescing + range-bound resampling are per-evaluation), silently
-    * dropping rows on the inner __pid join — observed nondeterministic
-    * row loss at sf1 (r6). zipWithIndex's count job and the final pass
-    * both read the SAME materialized shuffle stage (DAGScheduler
-    * reuses shuffle map output across jobs) with a deterministic
-    * within-partition total-order sort, so offsets and data can never
-    * diverge.
+    * Why not a __pid offsets self-join: the offsets approach evaluates
+    * the range-shuffled branch TWICE (once for the per-partition
+    * totals, once as the join's data side), and the two evaluations
+    * may disagree on partition layout (AQE coalescing + range-bound
+    * resampling are per-evaluation), silently dropping rows on the
+    * inner __pid join — observed nondeterministic row loss at sf1
+    * (r6). Here the totals job and the final pass both read the SAME
+    * materialized shuffle stage (DAGScheduler reuses shuffle map
+    * output across jobs) with a deterministic within-partition
+    * total-order sort, so offsets and data can never diverge.
     *
-    * Known, accepted cost: shuffle MAP output is reused across
-    * zipWithIndex's two jobs but the reduce-side SORT is not, so each
-    * partition sorts twice (~2.4 s wall of equi_depth_hist's 8 s at
-    * sf10 — StageProbe r13). Materializing the sorted frame
-    * (`localCheckpoint`) to dodge the re-sort was MEASURED WORSE:
-    * it leaks ~2 GB of materialized rows per call (nothing can
-    * unpersist them — the final pass is lazy, inside the caller's
-    * job) and bench runs went 8.3 s → min 10.7 s with 30–36 s
-    * spreads under the resulting memory pressure. The double sort is
-    * the deterministic-layout price; it scales as one extra in-memory
-    * sort pass, never as data motion (SCALE.md r13). */
-  def withGlobalRank(df: DataFrame, rankCol: String,
+    * Known, accepted cost: shuffle MAP output is reused across the
+    * two jobs but the reduce-side SORT is not, so each partition sorts
+    * twice (~2.4 s wall of the row-ranking equi_depth_hist's 8 s at
+    * sf10 — r13). Materializing the sorted frame (`localCheckpoint`)
+    * to dodge the re-sort was MEASURED WORSE: it leaks ~2 GB of
+    * materialized rows per call (nothing can unpersist them — the
+    * final pass is lazy, inside the caller's job) and bench runs went
+    * 8.3 s → min 10.7 s with 30–36 s spreads under the resulting
+    * memory pressure. The double sort is the deterministic-layout
+    * price; it scales as one extra in-memory sort pass, never as data
+    * motion (SCALE.md r13). */
+  def withPrefixSum(df: DataFrame, out: String, weight: String,
       sortCols: Column*): DataFrame = {
-    val spark = df.sparkSession
+    val at = df.schema.fieldIndex(weight)
+    prefixSum(df, out, _.getLong(at), sortCols)
+  }
+
+  /** Adds `rankCol` = exact global 1-based rank of each row under
+    * `sortCols`: the prefix sum of a unit weight. */
+  def withGlobalRank(df: DataFrame, rankCol: String,
+      sortCols: Column*): DataFrame =
+    prefixSum(df, rankCol, _ => 1L, sortCols)
+
+  /** The totals job skips the last partition (its total offsets
+    * nothing), as zipWithIndex's count job does. */
+  private def prefixSum(df: DataFrame, out: String, weightOf: Row => Long,
+      sortCols: Seq[Column]): DataFrame = {
     val sorted = df
       .repartitionByRange(sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
-    val schema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields :+
-        org.apache.spark.sql.types.StructField(rankCol,
-          org.apache.spark.sql.types.LongType, nullable = false))
-    val ranked = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1L))
+    val schema = sorted.schema.add(out, LongType, nullable = false)
+    val rows = sorted.rdd
+    val n = rows.getNumPartitions
+    val totals =
+      if (n <= 1) Array.empty[Long]
+      else rows.sparkContext.runJob(rows, (it: Iterator[Row]) =>
+        it.foldLeft(0L)((acc, r) => acc + weightOf(r)), 0 until n - 1)
+    val offsets = totals.scanLeft(0L)(_ + _)
+    val summed = rows.mapPartitionsWithIndex { (p, it) =>
+      var acc = offsets(p)
+      it.map { r => acc += weightOf(r); Row.fromSeq(r.toSeq :+ acc) }
     }
-    spark.createDataFrame(ranked, schema)
+    df.sparkSession.createDataFrame(summed, schema)
   }
 
   /** Exact integer division for non-negative long columns (numerator

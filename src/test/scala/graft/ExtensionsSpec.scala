@@ -306,4 +306,27 @@ class ExtensionsSpec extends AnyFunSuite {
     val two = spark.sql("SELECT char_entropy('abab')").head.getDouble(0)
     assert(math.abs(two - math.log(2.0)) < 1e-12)
   }
+
+  test("GraftFunctions.register is idempotent: a second call rebinds " +
+      "nothing") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    ext.GraftFunctions.register(s)
+    def builders = reg.listFunction().map(id =>
+      id -> reg.lookupFunctionBuilder(id).get).toMap
+    val before = builders
+    ext.GraftFunctions.register(s)
+    val after = builders
+    assert(after.keySet == before.keySet)
+    val rebound = before.keys.filterNot(id => after(id) eq before(id))
+    assert(rebound.isEmpty, s"rebound: ${rebound.mkString(", ")}")
+    // a name bound to something else is still taken back
+    val id = FunctionIdentifier("dot_f")
+    reg.createOrReplaceTempFunction("dot_f",
+      _ => org.apache.spark.sql.catalyst.expressions.Literal(0), "scala_udf")
+    ext.GraftFunctions.register(s)
+    val graftDot = ext.GraftFunctions.functions.toMap.apply("dot_f")
+    assert(reg.lookupFunctionBuilder(id).exists(_ eq graftDot))
+  }
 }

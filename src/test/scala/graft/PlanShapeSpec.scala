@@ -319,31 +319,28 @@ class PlanShapeSpec extends AnyFunSuite {
     val boundedGlobalWindow = Map(
       "window_frame" -> "per-day rollup: calendar-sized at any SF",
       "session_concurrency" -> "per-day carry rollup: calendar-sized",
-      "rolling_wau" -> "per-day rollup: calendar-sized",
-      "period_compare" -> "per-period rollup: calendar-sized",
-      "trend_slope" -> "per-day rollup: calendar-sized",
       "decile_lift" -> "10-row decile rollup cum-share",
-      "quantile_exact" -> "(group, distinct-value) rollup: value-domain-bounded",
-      "winsorize" -> "(group, distinct-value) rollup: value-domain-bounded",
-      "gini_concentration" -> "(group, distinct-value) rollup: value-domain-bounded",
-      "value_histogram" -> "bucket rollup: ≤nBuckets rows per group",
-      "order_lines_hist" -> "line-count domain rollup: ≤7 distinct values",
-      "mad_outliers" -> "(group, distinct-value) rollup: value-domain-bounded",
-      "pareto_front" -> "(group, distinct-value) dominance rollup",
       "interval_overlaps" -> "day-grid prefix sums: calendar-sized",
       "ccnet_buckets" -> "per-lang rank-offset rollup: ≤|langs| rows")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+    val globals = SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>
-        val globals = fn(spark, sfDir).queryExecution.optimizedPlan.collect {
+        name -> fn(spark, sfDir).queryExecution.optimizedPlan.collect {
           case w: org.apache.spark.sql.catalyst.plans.logical.Window
               if w.partitionSpec.isEmpty => w
-        }
-        if (globals.nonEmpty && !boundedGlobalWindow.contains(name))
-          Some(s"$name: ${globals.size} global window(s)")
-        else None
+        }.size
+    }
+    val offenders = globals.collect {
+      case (name, k) if k > 0 && !boundedGlobalWindow.contains(name) =>
+        s"$name: $k global window(s)"
     }
     assert(offenders.isEmpty,
       "data-sized global window(s) planned:\n" + offenders.mkString("\n"))
+    // the allow-list only shrinks: an entry whose op no longer plans a
+    // global window is stale and must go, not linger as headroom
+    val stale = boundedGlobalWindow.keys.toSeq.sorted
+      .filterNot(name => globals.toMap.getOrElse(name, 0) > 0)
+    assert(stale.isEmpty,
+      "allow-listed but planning no global window: " + stale.mkString(", "))
   }
 
   test("the near-dup verify stays row-local: array_intersect, no " +

@@ -264,33 +264,8 @@ class Round6OpsSpec extends AnyFunSuite {
             .as("total_cents"))
       val got =
         if (limit == Long.MaxValue) q("equi_depth_hist", dir)
-        else {
-          // n<16 edge: drive the declared kernel shape on the slice
-          // through the same CDF construction the op uses
-          val cents = base.select(col("cents"))
-          val nn = cents.agg(count(lit(1)).as("__n"))
-          val wc = Window.orderBy(col("cents"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          cents.groupBy(col("cents")).agg(count(lit(1)).as("m"))
-            .withColumn("c1", sum(col("m")).over(wc))
-            .withColumn("c0", col("c1") - col("m"))
-            .crossJoin(broadcast(nn))
-            .withColumn("bucket",
-              explode(sequence(expr("(c0 * 16) div __n"),
-                expr("((c1 - 1) * 16) div __n"))))
-            .withColumn("contrib",
-              least(expr("((bucket + 1) * __n - 1) div 16"),
-                col("c1") - 1) -
-                greatest(expr("(bucket * __n + 15) div 16"),
-                  col("c0")) + lit(1L))
-            .filter(col("contrib") > 0)
-            .groupBy(col("bucket"))
-            .agg(sum(col("contrib")).as("n_rows"),
-              min(col("cents")).as("lo_cents"),
-              max(col("cents")).as("hi_cents"),
-              sum(col("cents").cast("decimal(38,0)") * col("contrib"))
-                .cast("long").as("total_cents"))
-        }
+        // n<16 edge: the op's own bucket assignment on the slice
+        else graft.ops.Aggs.equiDepthBuckets(base.select(col("cents")))
       val r = ref.collect().map(_.toSeq).sortBy(_.head.toString)
       val g = got.collect().map(_.toSeq).sortBy(_.head.toString)
       assert(g.toSeq == r.toSeq,

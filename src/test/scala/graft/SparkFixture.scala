@@ -4,27 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared local SparkSession for the whole forked test JVM.
   *
-  * Mirrors Verify/Bench session config exactly (UTC, nanosAsLong,
-  * shuffle.partitions=cpus) so test results reproduce driver runs.
+  * Built by `Sessions.local`, the builder Verify and Bench use, at a
+  * fixed 4 cores so results do not depend on the host's core count.
   * Tests run on sf0.001 (6k lineitem rows) for speed.
   */
 object SparkFixture {
   val sfDir = "/root/testdata/sf0.001"
   val sfDir01 = "/root/testdata/sf0.01"
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    ext.GraftFunctions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local(4)
 
   def q(name: String, dir: String = sfDir): DataFrame =
     SparkEntry.queries(name)(spark, dir)

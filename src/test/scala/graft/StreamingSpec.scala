@@ -134,6 +134,14 @@ class StreamingSpec extends AnyFunSuite {
         col("event_type"), col("n_events"), col("total_value"))
       .collect().map(_.toString).sorted
     assert(got.sameElements(batch))
+    // the same shape replayed from the events parquet as a file
+    // stream equals the declared batch query
+    val replayed = runToEnd(
+      StreamOps.tumblingCounts(StreamOps.replay(spark, sfDir)),
+      "t_tumbling_replay", OutputMode.Complete())
+      .collect().map(_.toString).sorted
+    val declared = q("window_tumbling").collect().map(_.toString).sorted
+    assert(replayed.nonEmpty && replayed.sameElements(declared))
   }
 
   test("sliding window: each event lands in exactly 2 slides") {
