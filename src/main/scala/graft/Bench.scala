@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 object Bench {
 
   /** Headline queries benched at sf0.1, mirroring BASELINE.md's 11-query
@@ -248,21 +251,26 @@ object Bench {
           df => df.write.format("noop").mode("overwrite").save()
         case _ => df => { df.count(); () }
       }
-    set.filter(queries.contains).foreach { name =>
-      try consume(queries(name)(spark, sfDir))
-      catch { case _: Throwable => () }
-    }
+    // query -> its first failure ("ExceptionClass: message"), warm-up
+    // included: a failure is reported, never swallowed
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def attempt(name: String): Boolean =
+      try { consume(queries(name)(spark, sfDir)); true }
+      catch {
+        case NonFatal(e) =>
+          errors.getOrElseUpdate(name, s"${e.getClass.getName}: ${e.getMessage}")
+          false
+      }
+    set.filter(queries.contains).foreach(attempt)
     // min-of-3 within the warm session: a single-shot time cannot
     // distinguish a plan regression from machine-load noise (r4→r5
     // moved 22% on identical code); the min is the steady-state
     // number, and the per-query spread (max-min) quantifies how much
     // of any round-over-round delta is noise
     val results = set.filter(queries.contains).map { name =>
-      val fn = queries(name)
       val times = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
-        val ok = try { consume(fn(spark, sfDir)); true }
-          catch { case _: Throwable => false }
+        val ok = attempt(name)
         // a failed query must not masquerade as a fast one: report -1
         if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       }
@@ -294,7 +302,18 @@ object Bench {
     // with (VERDICT r19 #2: the driver benches at two core counts but
     // could not see which JSON line came from which — the scaling
     // block had to guess)
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"spreads":$spreads,"runs":3,"failed":$failed,"cpus":$cpus,"heap_gb":$heapGb,"heap_bytes":${Runtime.getRuntime.maxMemory},"off_protocol":$offProtocol,"sf":"$sfDir"}""")
+    val errs = errors.map { case (k, e) => s""""$k":${jsonString(e)}""" }
+      .mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"spreads":$spreads,"runs":3,"failed":$failed,"cpus":$cpus,"heap_gb":$heapGb,"heap_bytes":${Runtime.getRuntime.maxMemory},"off_protocol":$offProtocol,"sf":"$sfDir","errors":$errs}""")
     spark.stop()
   }
+
+  /** `v` as a JSON string literal. */
+  private def jsonString(v: String): String =
+    "\"" + v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
 }

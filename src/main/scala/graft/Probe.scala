@@ -23,7 +23,7 @@ import scala.collection.concurrent.TrieMap
   *
   * A probed run prints one `[stage]` row per stage it ran (wall, max
   * and summed task time, the owning RDD chain) and then one `[site]`
-  * row per call site (summed job wall). Since the curation tick
+  * row per call site (summed job wall and job count). Since the curation tick
   * overlaps its stage-table commits with compute, site walls can
   * overlap: read them as per-site cost, not additive wall shares.
   */
@@ -40,7 +40,8 @@ object Probe {
     // lambda, so the execution description is the only stable label
     private val execDesc = TrieMap.empty[Long, String]
     private val jobs = TrieMap.empty[Int, (Long, String)]
-    private val siteWall = TrieMap.empty[String, Double]
+    // call site -> (summed job wall, job count)
+    private val siteWall = TrieMap.empty[String, (Double, Int)]
 
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case s: SparkListenerSQLExecutionStart =>
@@ -79,8 +80,10 @@ object Probe {
 
     override def onJobEnd(je: SparkListenerJobEnd): Unit =
       for ((t0, site) <- jobs.remove(je.jobId))
-        siteWall.updateWith(site)(w =>
-          Some(w.getOrElse(0.0) + (je.time - t0) / 1e3))
+        siteWall.updateWith(site) { w =>
+          val (wall, n) = w.getOrElse((0.0, 0))
+          Some((wall + (je.time - t0) / 1e3, n + 1))
+        }
 
     /** Runs `body` with recording on, waits for the listener bus to
       * deliver the end events of what it started, then prints the
@@ -97,8 +100,9 @@ object Probe {
       while ((jobs.nonEmpty || taskTimes.nonEmpty) &&
         System.nanoTime() < deadline) Thread.sleep(200)
       println(f"[total] $label $total%6.2f s")
-      siteWall.toSeq.sortBy(-_._2).foreach { case (site, w) =>
-        println(f"[site] $w%7.2f s  ${w / total * 100}%5.1f%%  $site")
+      siteWall.toSeq.sortBy(-_._2._1).foreach { case (site, (w, n)) =>
+        println(f"[site] $w%7.2f s  ${w / total * 100}%5.1f%%  " +
+          f"$n%4d jobs  $site")
       }
       siteWall.clear()
     }

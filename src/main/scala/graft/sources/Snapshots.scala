@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -15,6 +16,21 @@ import java.nio.charset.StandardCharsets.UTF_8
   *     PER WRITER (the nonce is a random suffix)
   *   - `_commits/<N>` — the commit marker; its CONTENT names the
   *     winning writer's data directory
+  *   - `_manifests/<N>` — present only for partition-committed
+  *     versions (`commitPartitioned`, `commitPartitions` and their
+  *     `As` forms), written before the marker. UTF-8 text, one entry
+  *     per line:
+  *     - `#schema<TAB><StructType JSON>` — the version's read schema:
+  *       the data columns in file order, then the partition column
+  *       with its committed type, every field nullable. `readAsOf`
+  *       reads each source dir with it, so no Parquet schema
+  *       inference (a footer-reading Spark job per dir) runs before
+  *       the caller's first action. Manifests written before this
+  *       header carry `#type<TAB><partition type>` or no header and
+  *       are read by inference.
+  *     - `<hive partition dir><TAB><data dir>`, sorted: each live
+  *       partition (`day=2024-01-03`, hive-escaped) and the data dir
+  *       of the version that last wrote it.
   *
   * Commit protocol (write-ordered, marker-last, writer-unique dirs):
   *   1. write the data to `v=<N>-<nonce>/` (Spark job; may take
@@ -296,57 +312,47 @@ object Snapshots {
     val v = vs.last
     manifestOf(s, base, v) match {
       case None => s.read.parquet(s"$base/${dataDirOf(s, base, v)}")
-      case Some(m) => readManifest(s, base, m, manifestPartType(s, base, v))
+      case Some(m) => readManifest(s, base, m)
     }
   }
 
   // ---- partition-incremental commits -------------------------------
 
-  /** A manifest line: (hive partition dir like "day=2024-01-03",
-    * data dir like "v=3-ab12cd34" that owns its current bytes). */
-  private type Manifest = Seq[(String, String)]
+  /** A parsed `_manifests/<N>` file (format in the object scaladoc).
+    * `schema` is the recorded read schema; `partType` the partition
+    * column's writer-side type from the `#type` header that manifests
+    * carried before `#schema` (r16). Hive partition-value type
+    * inference is per-READ and data-dependent — a source dir whose
+    * live partition values all parse numeric infers the column as int
+    * while its siblings carry strings — so both headers pin the
+    * column to its committed type; a manifest with neither is read
+    * by plain inference. `parts` holds one (hive partition dir like
+    * "day=2024-01-03", data dir like "v=3-ab12cd34" that owns its
+    * current bytes) pair per live partition. */
+  private final case class Manifest(schema: Option[StructType],
+      partType: Option[String], parts: Seq[(String, String)])
 
+  /** Version `v`'s manifest, parsed from one read; None for a version
+    * committed flat (`commit`/`commitAs`), which has no manifest. */
   private def manifestOf(s: SparkSession, base: String,
       v: Long): Option[Manifest] = {
-    val f = fs(s, base)
     val p = new Path(manifestDir(base), v.toString)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(text.split('\n').toSeq
-        .filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map { line =>
+    val in =
+      try Some(fs(s, base).open(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    in.map { in =>
+      val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      val (headers, parts) = text.split('\n').toSeq.filter(_.nonEmpty)
+        .partition(_.startsWith("#"))
+      def header(key: String): Option[String] = headers
+        .find(_.startsWith(s"#$key\t")).map(_.stripPrefix(s"#$key\t"))
+      Manifest(
+        header("schema").map(DataType.fromJson(_).asInstanceOf[StructType]),
+        header("type").map(_.trim),
+        parts.map { line =>
           val i = line.lastIndexOf('\t')
           (line.substring(0, i), line.substring(i + 1))
         })
-    }
-  }
-
-  /** The partition column's WRITER-side type, recorded as the
-    * manifest's `#type` header (r16). Hive partition-value type
-    * inference is per-READ and data-dependent — a version whose live
-    * partition values happen to all parse numeric infers the column
-    * as int, while its sibling versions (or the in-flight frames it
-    * merges with) carry strings, and the join coercion then casts
-    * e.g. hash prefix 'b' to BIGINT and throws. Recording the type
-    * once at write time makes every read return the column exactly
-    * as committed. Absent for pre-header manifests → reads fall back
-    * to inference (the old behavior). */
-  private def manifestPartType(s: SparkSession, base: String,
-      v: Long): Option[String] = {
-    val f = fs(s, base)
-    val p = new Path(manifestDir(base), v.toString)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      text.split('\n').find(_.startsWith("#type\t"))
-        .map(_.stripPrefix("#type\t").trim)
     }
   }
 
@@ -356,17 +362,41 @@ object Snapshots {
   private def referencedDirs(s: SparkSession, base: String,
       version: Long): Seq[String] =
     (dataDirOf(s, base, version) +:
-      manifestOf(s, base, version).toSeq.flatten.map(_._2)).distinct
+      manifestOf(s, base, version).toSeq.flatMap(_.parts.map(_._2))).distinct
 
   private def writeManifest(s: SparkSession, base: String, v: Long,
-      m: Manifest, partType: String): Unit = {
+      schema: StructType, parts: Seq[(String, String)]): Unit = {
     val f = fs(s, base)
     val out = f.create(new Path(manifestDir(base), v.toString), false)
     try out.write(
-      (s"#type\t$partType" +:
-        m.map { case (p, d) => s"$p\t$d" }).mkString("\n").getBytes(UTF_8))
+      (s"#schema\t${schema.json}" +:
+        parts.map { case (p, d) => s"$p\t$d" }).mkString("\n")
+        .getBytes(UTF_8))
     finally out.close()
   }
+
+  /** `fields` with every field, nested field, element and map value
+    * nullable — the shape a Parquet read returns whatever the writer
+    * declared. */
+  private def nullable(fields: Seq[StructField]): StructType = {
+    def go(t: DataType): DataType = t match {
+      case st: StructType => nullable(st.fields.toSeq)
+      case ArrayType(e, _) => ArrayType(go(e), containsNull = true)
+      case MapType(k, v, _) => MapType(go(k), go(v), true)
+      case other => other
+    }
+    StructType(fields.map(f => f.copy(dataType = go(f.dataType),
+      nullable = true)))
+  }
+
+  /** The read schema a partition-committed version records: the data
+    * columns of `schema` (every column but `partCol`, in the order
+    * `partitionBy` writes them to the files), then `partCol` with
+    * `partType`. */
+  private def recordedSchema(schema: StructType, partCol: String,
+      partType: DataType): StructType =
+    nullable(schema.fields.toSeq.filterNot(_.name == partCol) :+
+      StructField(partCol, partType))
 
   /** The hive null-partition sentinel directory name. */
   private val HiveNullPart = "__HIVE_DEFAULT_PARTITION__"
@@ -408,12 +438,12 @@ object Snapshots {
     * format manifest would enumerate, reached through O(#partitions)
     * metadata. */
   private def readManifest(s: SparkSession, base: String,
-      m: Manifest, partType: Option[String] = None): DataFrame = {
-    require(m.nonEmpty,
+      m: Manifest): DataFrame = {
+    require(m.parts.nonEmpty,
       "empty manifest: this version committed no partitions and owns " +
         "no inherited ones — an empty partitioned table version is " +
         "rejected at commit time; use commit() for full snapshots")
-    m.groupBy(_._2).toSeq.sortBy(_._1).map { case (dir, parts) =>
+    m.parts.groupBy(_._2).toSeq.sortBy(_._1).map { case (dir, parts) =>
       val partCol = manifestPartCol(parts.head._1)
       val c = org.apache.spark.sql.functions.col(partCol).cast("string")
       val raw = parts.map(p => p._1.substring(p._1.indexOf('=') + 1))
@@ -423,16 +453,21 @@ object Snapshots {
         if (vals.isEmpty) c.isNull
         else if (nulls.isEmpty) c.isin(vals: _*)
         else c.isin(vals: _*) || c.isNull
-      val g = s.read.option("basePath", s"$base/$dir")
+      val g = reader(s, m).option("basePath", s"$base/$dir")
         .parquet(s"$base/$dir")
         .filter(pred)
-      // pin the partition column to its committed type: per-dir hive
-      // inference is data-dependent (an all-numeric dir group infers
-      // int where the table's column is string) — see manifestPartType
-      partType.fold(g)(t => g.withColumn(partCol,
+      // a pre-`#schema` manifest pins the inferred partition column to
+      // its `#type` (see Manifest)
+      m.partType.fold(g)(t => g.withColumn(partCol,
         org.apache.spark.sql.functions.col(partCol).cast(t)))
     }.reduce(_ unionByName _)
   }
+
+  /** A reader of `m`'s source dirs: with its recorded schema (no
+    * inference job), else inferring as manifests before `#schema`
+    * were read. */
+  private def reader(s: SparkSession, m: Manifest) =
+    m.schema.fold(s.read)(s.read.schema(_))
 
   /** Full commit of a hive-partitioned table version: writes every
     * partition of `df` under one writer-unique dir (partitionBy) and
@@ -478,8 +513,8 @@ object Snapshots {
           "for full — possibly empty — snapshots")
     }
     // manifest before marker: a version is only visible complete
-    writeManifest(s, base, v, parts,
-      df.schema(partCol).dataType.catalogString)
+    writeManifest(s, base, v,
+      recordedSchema(df.schema, partCol, df.schema(partCol).dataType), parts)
     if (tryMarker(s, base, v, dir)) true
     else {
       f.delete(new Path(manifestDir(base), v.toString), false)
@@ -585,9 +620,31 @@ object Snapshots {
         s"commitPartitions needs a partition-committed previous " +
           s"version at $base (v=$prevVersion has no manifest); seed " +
           "the table with commitPartitioned"))
-    require(prev.forall(p => manifestPartCol(p._1) == partCol),
+    require(prev.parts.forall(p => manifestPartCol(p._1) == partCol),
       s"partition column mismatch: table is partitioned on " +
-        s"${manifestPartCol(prev.head._1)}, got $partCol")
+        s"${manifestPartCol(prev.parts.head._1)}, got $partCol")
+    // the merged version keeps the PRIOR version's partition type when
+    // it recorded one (the table's committed contract outranks this
+    // batch frame's — a caller-side cast must not flip the column type
+    // mid-table), else this frame's; a pre-`#schema` prior's data
+    // columns are inferred once here, so the table is recorded from
+    // this version on
+    val schema = prev.schema.getOrElse(recordedSchema(
+      readManifest(s, base, prev).schema, partCol,
+      prev.partType.map(DataType.fromDDL)
+        .getOrElse(df.schema(partCol).dataType)))
+    // the merged version reads the inherited partitions' files with
+    // this schema: a frame whose data columns differ would null-fill
+    // there (or, read by inference, fail), so it is refused before
+    // anything is written
+    def columns(st: StructType): Seq[String] =
+      st.fields.toSeq.filterNot(_.name == partCol)
+        .map(f => s"${f.name}:${f.dataType.catalogString}").sorted
+    if (columns(df.schema) != columns(schema))
+      throw new IllegalArgumentException(
+        s"commitPartitions at $base: the frame's data columns " +
+          s"${columns(df.schema).mkString(", ")} differ from version " +
+          s"$prevVersion's ${columns(schema).mkString(", ")}")
     val dir = s"v=$v-${nonce()}"
     df.write.mode("overwrite").partitionBy(partCol)
       .parquet(s"$base/$dir")
@@ -596,15 +653,9 @@ object Snapshots {
       .map(_.getPath.getName)
       .filter(n => n.contains('=') && !n.startsWith("_"))
       .toSet
-    val merged = (prev.filterNot(p => touched(p._1)) ++
+    val merged = (prev.parts.filterNot(p => touched(p._1)) ++
       touched.toSeq.sorted.map(p => (p, dir))).sortBy(_._1)
-    // the merged version keeps the PRIOR version's recorded partition
-    // type when it has one (the table's committed contract outranks
-    // this batch frame's — a caller-side cast must not flip the
-    // column type mid-table), else this frame's
-    writeManifest(s, base, v, merged,
-      manifestPartType(s, base, prevVersion)
-        .getOrElse(df.schema(partCol).dataType.catalogString))
+    writeManifest(s, base, v, schema, merged)
     if (tryMarker(s, base, v, dir)) true
     else {
       f.delete(new Path(manifestDir(base), v.toString), false)
@@ -650,7 +701,7 @@ object Snapshots {
     val m = manifestOf(s, base, version).getOrElse(
       throw new IllegalArgumentException(
         s"partitionFiles needs a partition-committed version at $base"))
-    m.map { case (part, dir) =>
+    m.parts.map { case (part, dir) =>
       val p = new Path(base, s"$dir/$part")
       val files = f.listStatus(p).count { st =>
         val n = st.getPath.getName
@@ -684,15 +735,15 @@ object Snapshots {
     val v = latest(s, base)
     val audit = partitionFiles(s, base, v)
     val m = manifestOf(s, base, v).get // partitionFiles proved it exists
-    val owner = m.toMap
+    val owner = m.parts.toMap
     val flagged = audit.filter { case (_, files, bytes) =>
       files > math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
     }
     if (flagged.isEmpty) return (v, Seq.empty)
-    val partCol = manifestPartCol(m.head._1)
+    val partCol = manifestPartCol(m.parts.head._1)
     val rewritten = flagged.map { case (part, _, bytes) =>
       val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-      s.read.option("basePath", s"$base/${owner(part)}")
+      reader(s, m).option("basePath", s"$base/${owner(part)}")
         .parquet(s"$base/${owner(part)}/$part")
         .repartition(n.toInt)
     }.reduce(_ unionByName _)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Source/sink parity (SURVEY.md §2.1): the reference ingests JSON
   * API payloads; we support csv/json/parquet read + write round-trips
   * with schema preservation, plus the JSON-payload column path
@@ -436,6 +438,176 @@ class SourcesSpec extends AnyFunSuite {
         full.filter(col("k") > 99), base, "part")
     }
     assert(sources.Snapshots.latest(spark, base) == v2)
+  }
+
+  /** Runs `body` with `version`'s manifest header lines replaced by
+    * `edit`'s (a header `edit` maps to None is dropped), then restores
+    * the manifest. Goes through the Hadoop filesystem so the local
+    * checksum file stays in step. */
+  private def withManifestHeader[T](base: String, version: Long)(
+      edit: String => Option[String])(body: => T): T = {
+    val p = new org.apache.hadoop.fs.Path(s"$base/_manifests/$version")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def write(text: String): Unit = {
+      val out = fs.create(p, true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    val in = fs.open(p)
+    val orig = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    write(orig.split('\n').toSeq
+      .flatMap(l => if (l.startsWith("#")) edit(l) else Some(l))
+      .mkString("\n"))
+    try body finally write(orig)
+  }
+
+  /** The header a manifest carried before `#schema`: `#type` and the
+    * partition column's type. */
+  private def asTypeHeader(line: String): Option[String] =
+    if (!line.startsWith("#schema\t")) Some(line)
+    else Some("#type\t" + DataType.fromJson(line.stripPrefix("#schema\t"))
+      .asInstanceOf[StructType].fields.last.dataType.catalogString)
+
+  /** The schema and the sorted rows of a snapshot read. */
+  private def snapshot(base: String, version: Long): (StructType, Seq[String]) = {
+    val df = sources.Snapshots.readAsOf(spark, base, version)
+    (df.schema, df.collect().map(_.toString).sorted.toSeq)
+  }
+
+  /** The number of Spark jobs `body` starts on this thread. They are
+    * tagged with a job group; a fence job started afterwards shows
+    * once the listener bus has delivered every earlier job start. */
+  private def jobsStartedBy(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val fence = s"fence-$group"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(fence, "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(fence) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(fence), "the fence job's start never arrived")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("snapshots: a recorded #schema reads back the inference path's " +
+      "schema and rows for seed, incremental and escaped/NULL versions") {
+    import spark.implicits._
+    val base = tmp() + "/snap_schema"
+    val full = (1 to 3).flatMap(p => (1 to 20).map(i => (p * 100 + i, p)))
+      .toDF("k", "p")
+      .select(col("k"), (col("k") * 1.5).as("x"),
+        concat(lit("p"), col("p")).as("part"),
+        array(col("k"), col("p")).as("arr"),
+        struct(col("k").as("a"), lit("b").as("b")).as("st"),
+        map(lit("m"), col("k")).as("mp"),
+        timestamp_seconds(col("k")).as("ts"),
+        col("k").cast("decimal(10,2)").as("d"))
+    val v1 = sources.Snapshots.commitPartitioned(full, base, "part")
+    val v2 = sources.Snapshots.commitPartitions(
+      full.filter(col("part") === "p2" && col("k") % 2 === 0), base, "part")
+    val esc = tmp() + "/snap_schema_esc"
+    val e1 = sources.Snapshots.commitPartitioned(Seq(
+      (1, "a b"), (2, "x=y"), (3, "p:q"), (4, null.asInstanceOf[String]),
+      (5, "plain")).toDF("k", "part"), esc, "part")
+    val e2 = sources.Snapshots.commitPartitions(
+      Seq((20, "x=y"), (40, null.asInstanceOf[String])).toDF("k", "part"),
+      esc, "part")
+    for ((b, v) <- Seq(base -> v1, base -> v2, esc -> e1, esc -> e2)) {
+      val recorded = snapshot(b, v)
+      // the recorded schema is every field nullable, partition last
+      assert(recorded._1.fields.last.name == "part")
+      assert(recorded._1.fields.forall(_.nullable))
+      assert(withManifestHeader(b, v)(asTypeHeader)(snapshot(b, v)) ==
+        recorded, s"$b@$v: #type header read differs")
+      // a manifest with no header at all (stripped #schema) too
+      assert(withManifestHeader(b, v)(_ => None)(snapshot(b, v)) ==
+        recorded, s"$b@$v: header-less read differs")
+    }
+    assert(snapshot(base, v2)._2.size == 50)
+    assert(snapshot(esc, e2)._2.size == 5)
+  }
+
+  test("snapshots: a string partition whose live values are all " +
+      "digits stays string, leading zeros included") {
+    import spark.implicits._
+    val base = tmp() + "/snap_digits"
+    sources.Snapshots.commitPartitioned(
+      Seq((1, "1"), (2, "2"), (3, "10"), (4, "07")).toDF("k", "part"),
+      base, "part")
+    val v2 = sources.Snapshots.commitPartitions(
+      Seq((20, "2")).toDF("k", "part"), base, "part")
+    val df = sources.Snapshots.readAsOf(spark, base, v2)
+    assert(df.schema("part").dataType == StringType)
+    assert(df.as[(Int, String)].collect().toSet ==
+      Set((1, "1"), (20, "2"), (3, "10"), (4, "07")))
+  }
+
+  test("snapshots: readAsOf of a manifest version runs no Spark job " +
+      "before its first action; a header-less manifest infers per dir") {
+    import spark.implicits._
+    val base = tmp() + "/snap_jobs"
+    sources.Snapshots.commitPartitioned(
+      Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "part"), base, "part")
+    val v2 = sources.Snapshots.commitPartitions(
+      Seq((20, "b")).toDF("k", "part"), base, "part")
+    assert(jobsStartedBy(sources.Snapshots.readAsOf(spark, base, v2)) == 0)
+    // two source dirs (v1 owns a and c, v2 owns b): one schema
+    // inference job each when nothing is recorded
+    assert(withManifestHeader(base, v2)(_ => None)(
+      jobsStartedBy(sources.Snapshots.readAsOf(spark, base, v2))) == 2)
+    assert(sources.Snapshots.readAsOf(spark, base, v2).count() == 3)
+    // a commit on top of a header-less version records the schema
+    val v3 = withManifestHeader(base, v2)(_ => None)(
+      sources.Snapshots.commitPartitions(
+        Seq((30, "c")).toDF("k", "part"), base, "part"))
+    assert(jobsStartedBy(sources.Snapshots.readAsOf(spark, base, v3)) == 0)
+    assert(sources.Snapshots.readAsOf(spark, base, v3).as[(Int, String)]
+      .collect().toSet == Set((1, "a"), (20, "b"), (30, "c")))
+  }
+
+  test("snapshots: commitPartitions refuses a frame whose data columns " +
+      "differ from the table's, before writing anything") {
+    import spark.implicits._
+    val base = tmp() + "/snap_refuse"
+    val v1 = sources.Snapshots.commitPartitioned(
+      Seq((1, "x", "a"), (2, "y", "b")).toDF("k", "s", "part"), base, "part")
+    def files: Set[String] = {
+      val st = java.nio.file.Files.walk(java.nio.file.Paths.get(base))
+      try st.iterator().asScala.map(_.toString).toSet finally st.close()
+    }
+    val before = files
+    val bad = Seq(
+      Seq((1L, "x", "a")).toDF("k", "s", "part"),          // k widened
+      Seq((1, "x", 2, "a")).toDF("k", "s", "extra", "part"), // extra
+      Seq((1, "a")).toDF("k", "part"))                     // s missing
+    bad.foreach { df =>
+      val e = intercept[IllegalArgumentException](
+        sources.Snapshots.commitPartitions(df, base, "part"))
+      assert(e.getMessage.contains("k:int, s:string"), e.getMessage)
+      intercept[IllegalArgumentException](
+        sources.Snapshots.commitPartitionsAs(df, base, "part", 7L))
+    }
+    assert(files == before, "a refused commit left files behind")
+    assert(sources.Snapshots.versions(spark, base) == Seq(v1))
+    // the same columns in another order are the same table
+    val v2 = sources.Snapshots.commitPartitions(
+      Seq(("b", 3, "z")).toDF("part", "k", "s"), base, "part")
+    assert(sources.Snapshots.readAsOf(spark, base, v2)
+      .as[(Int, String, String)].collect().toSet ==
+      Set((1, "x", "a"), (3, "z", "b")))
   }
 
   test("zorder_write: the z-clustered layout makes most files " +
