@@ -48,62 +48,78 @@ object Bench {
     "merge_upsert", "merge_partitioned", "table_diff", "fk_orphans",
     "equi_depth_hist", "key_skew", "page_transitions", "pagerank")
 
-  /** The round-8 additions, timed when SPARK_GRAFT_BENCH_SET=r8:
-    * the new curation/vector/journey ops. `semdedup` is
-    * quadratic-within-cluster by design (bounded by cluster size —
-    * see SCALE.md) and stays in the set deliberately so its growth
-    * is measured, not assumed. */
-  val r8: Seq[String] = Seq(
-    "entropy_filter", "cooccur_topk", "compaction_plan",
-    "attribution_position", "cart_abandonment", "semdedup", "pq_topk",
-    "dsir_weights", "bpe_encode", "markov_removal", "cohort_ltv",
-    "ab_lift", "shingle_containment", "winnowing_fingerprint",
-    "ewma_smooth", "zipf_fit", "dau_mau")
+  /** The LLM-curation family beyond `pipeline`, timed when
+    * SPARK_GRAFT_BENCH_SET=curation: quality batteries, corpus
+    * statistics, mixing and sampling plans, the dedup reports and the
+    * two text-index appends. */
+  val curation: Seq[String] = Seq(
+    "entropy_filter", "cooccur_topk", "dsir_weights", "bpe_encode",
+    "shingle_containment", "winnowing_fingerprint", "zipf_fit",
+    "domain_cap", "mix_temperature", "shuffle_shard", "bigram_logprob",
+    "kl_source_divergence", "dedup_spans", "dedup_append",
+    "perplexity_mix", "minhash_append", "gopher_filter", "epoch_plan",
+    "curation_funnel", "dataset_card", "oov_rate", "ccnet_buckets",
+    "weighted_sample", "gopher_ablation")
 
-  /** The round-11 additions, timed when SPARK_GRAFT_BENCH_SET=r11:
-    * snapshot lifecycle (commit/read/diff/compact — timings include
-    * the setup commits by design: the write path IS the op),
-    * the chunked GA report, the curation additions, and the
-    * Lloyd-trained ANN variants. */
-  val r11: Seq[String] = Seq(
-    "snapshot_read", "snapshot_diff", "snapshot_compact", "ga_chunked",
-    "domain_cap", "mix_temperature", "shuffle_shard",
-    "ivf_topk_trained", "pq_topk_trained")
+  /** The vector family beyond `pipeline`, timed when
+    * SPARK_GRAFT_BENCH_SET=vector: trained and quantized ANN indexes,
+    * recall evaluation and the two vector-index appends. `semdedup`
+    * is quadratic-within-cluster by design (bounded by cluster size —
+    * see SCALE.md) and stays in the set deliberately so its growth is
+    * measured, not assumed. */
+  val vector: Seq[String] = Seq(
+    "semdedup", "pq_topk", "ivf_topk_trained", "pq_topk_trained",
+    "ivfpq_topk", "hard_negatives", "semdedup_append", "ann_recall",
+    "ivfpq_append", "ann_recall_suite", "ivfpq_rerank_topk")
 
-  /** The round-12 additions, timed when SPARK_GRAFT_BENCH_SET=r12:
-    * the incremental snapshot merge and the z-order writer (both
-    * timings include their setup commits by design — the write path
-    * IS the op). */
-  val r12: Seq[String] = Seq("snapshot_merge", "zorder_write")
+  /** The analytics family beyond `ga`, timed when
+    * SPARK_GRAFT_BENCH_SET=analytics: attribution, cohort, A/B and
+    * engagement ops, the chunked GA report and the interval join. */
+  val analytics: Seq[String] = Seq(
+    "attribution_position", "cart_abandonment", "markov_removal",
+    "cohort_ltv", "ab_lift", "ewma_smooth", "dau_mau", "ga_chunked",
+    "interval_overlaps")
 
-  /** The round-13 additions, timed when SPARK_GRAFT_BENCH_SET=r13:
-    * partition-scoped compaction (timing includes its three setup
-    * commits by design — the write path IS the op) and the two new
-    * corpus-statistics ops. */
-  val r13: Seq[String] =
-    Seq("compact_partitions", "bigram_logprob", "kl_source_divergence")
+  /** The snapshot-table family, timed when
+    * SPARK_GRAFT_BENCH_SET=snapshot: commit, read, diff, compaction
+    * and layout. Timings include the setup commits by design — the
+    * write path IS the op. */
+  val snapshot: Seq[String] = Seq(
+    "compaction_plan", "snapshot_read", "snapshot_diff",
+    "snapshot_compact", "snapshot_merge", "zorder_write",
+    "compact_partitions")
 
-  /** The round-14 additions, timed when SPARK_GRAFT_BENCH_SET=r14
-    * (`dedup_append`'s timing includes its two snapshot commits by
-    * design — the write path IS the op). */
-  val r14: Seq[String] =
-    Seq("dedup_spans", "ivfpq_topk", "hard_negatives", "dedup_append",
-      "interval_overlaps", "perplexity_mix", "minhash_append",
-      "gopher_filter", "epoch_plan", "semdedup_append",
-      "curation_funnel", "ann_recall", "dataset_card", "oov_rate")
+  /** Every op that commits onto an existing partitioned snapshot
+    * table, timed when SPARK_GRAFT_BENCH_SET=append: the four index
+    * appends (`Snapshots.appendPartitions`), the keeper/count merge,
+    * the upsert merge and partition compaction. Timings include the
+    * setup commits. */
+  val append: Seq[String] = Seq(
+    "minhash_append", "ivf_append", "semdedup_append", "ivfpq_append",
+    "dedup_append", "snapshot_merge", "compact_partitions")
 
-  /** The round-15 additions, timed when SPARK_GRAFT_BENCH_SET=r15
-    * (`ivfpq_append`'s timing includes its two snapshot commits by
-    * design — the write path IS the op; `ann_recall_suite` includes
-    * the Lloyd training of its trained-IVF path). */
-  val r15: Seq[String] = Seq("ivfpq_append", "ann_recall_suite",
-    "ccnet_buckets", "weighted_sample", "gopher_ablation")
+  /** The named sets, by their SPARK_GRAFT_BENCH_SET value. */
+  val sets: Seq[(String, Seq[String])] = Seq(
+    "headline" -> headline, "pipeline" -> pipeline, "ga" -> ga,
+    "curation" -> curation, "vector" -> vector,
+    "analytics" -> analytics, "snapshot" -> snapshot,
+    "append" -> append)
 
-  /** The round-17 addition, timed when SPARK_GRAFT_BENCH_SET=r17:
-    * the two-stage IVF×PQ query (ADC shortlist + exact rerank of
-    * 100 raw rows — the rerank adds one broadcast point-lookup join
-    * over `ivfpq_topk`'s plan). */
-  val r17: Seq[String] = Seq("ivfpq_rerank_topk")
+  /** The queries a SPARK_GRAFT_BENCH_SET value names: unset is
+    * `headline`, `custom:a,b` times the listed keys (ad-hoc targeted
+    * timing, e.g. "custom:pagerank,page_transitions"), and any other
+    * value must be a name in `sets` — an unknown one throws, listing
+    * the valid names. */
+  def selectSet(name: Option[String]): Seq[String] = name match {
+    case None => headline
+    case Some(s) if s.startsWith("custom:") =>
+      s.stripPrefix("custom:").split(",").map(_.trim)
+        .filter(_.nonEmpty).toSeq
+    case Some(s) => sets.toMap.getOrElse(s,
+      throw new IllegalArgumentException(
+        s"unknown SPARK_GRAFT_BENCH_SET '$s': valid sets are " +
+          sets.map(_._1).mkString(", ") + ", or custom:<key>,<key>,..."))
+  }
 
   /** Bench protocol: timings are only comparable on the pinned 8 GB
     * driver heap (the identical binary moves ~1.5 s between 8 GB and
@@ -192,6 +208,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    val set = selectSet(sys.env.get("SPARK_GRAFT_BENCH_SET"))
     // enforce the heap protocol BEFORE any Spark work: an
     // off-protocol launch re-execs at 8 GB (fallback: measure here
     // and stamp off_protocol so the artifact is self-labeling)
@@ -221,22 +238,6 @@ object Bench {
     // warming at a smaller SF doesn't help because AQE picks different
     // physical plans there). Steady-state throughput is the number
     // that extrapolates to the 100 TB target.
-    val set = sys.env.get("SPARK_GRAFT_BENCH_SET") match {
-      case Some("pipeline") => pipeline
-      case Some("ga")       => ga
-      case Some("r8")       => r8
-      case Some("r11")      => r11
-      case Some("r12")      => r12
-      case Some("r13")      => r13
-      case Some("r14")      => r14
-      case Some("r15")      => r15
-      case Some("r17")      => r17
-      // ad-hoc targeted timing, e.g. "custom:pagerank,page_transitions"
-      case Some(s) if s.startsWith("custom:") =>
-        s.stripPrefix("custom:").split(",").map(_.trim)
-          .filter(_.nonEmpty).toSeq
-      case _                => headline
-    }
     val queries = SparkEntry.queries
     // Sink choice (SPARK_GRAFT_BENCH_SINK): `count` (default) keeps
     // methodology parity with BASELINE.md, whose PySpark baseline

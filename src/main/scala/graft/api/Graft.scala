@@ -1542,16 +1542,18 @@ object Graft {
     * hash-prefix-partitioned snapshot table under `base`
     * (`quality/`, `exact/`, `near/`, plus `bands/` — the MinHash band
     * index over the exact-dedup keepers, `minhash_append`'s layout),
-    * seeded by the first call (`commitPartitioned`) and maintained by
-    * `commitPartitions`-merging each ingest batch's stage survivors —
-    * per tick, each stage rewrites ONLY the hash-prefix partitions
-    * its batch rows land in, O(touched) write amplification instead
-    * of [[curate]]'s full-snapshot-per-stage. (The fixture layout
-    * uses 16 prefixes; at 100 TB the prefix space is sized so
-    * |batch| ≪ #prefixes, and the natural next step — manifests
-    * allowing multiple dirs per partition — would make survivor
-    * appends zero-rewrite, with `compactPartitions` bounding the
-    * file count.)
+    * each seeded by its first batch and maintained by appending each
+    * ingest batch's stage survivors through
+    * `Snapshots.appendPartitions` — per tick, each stage rewrites
+    * ONLY the hash-prefix partitions its batch rows land in,
+    * O(touched) write amplification instead of [[curate]]'s
+    * full-snapshot-per-stage. (The fixture layout uses 16 prefixes;
+    * at 100 TB the prefix space is sized so |batch| ≪ #prefixes, and
+    * the natural next step — manifests allowing multiple dirs per
+    * partition — would make survivor appends zero-rewrite, with
+    * `compactPartitions` bounding the file count; every append here
+    * goes through `appendPartitions`, so that step changes only
+    * `Snapshots`.)
     *
     * Tick-by-tick ≡ one-shot because doc_ids are MONOTONE across
     * ticks (the append contract): quality is per-doc pure; exact
@@ -1574,8 +1576,8 @@ object Graft {
     * to a CALLER-FIXED version — the streaming `foreachBatch` ledger
     * mode ([[graft.streaming.StreamOps.curateStreamMerge]] passes
     * batchId + 1): every stage table commits AT `v` via
-    * `commitPartitionedAs`/`commitPartitionsAs`, a stage whose `v` is
-    * already committed is skipped (per-TABLE idempotency — a tick
+    * `appendPartitionsAs` (`commitAs` for `semseeds/`), a stage whose
+    * `v` is already committed is skipped (per-TABLE idempotency — a tick
     * that crashed between stage commits resumes exactly where it
     * died), and every pre-tick read uses `latestBefore(table, v)` so
     * a replayed tick recomputes against the same table states the
@@ -1691,9 +1693,6 @@ object Graft {
       return Seq.empty[(Int, String, Long, Long, Long)]
         .toDF("stage_no", "stage", "n_docs", "n_tokens", "version")
     }
-    // the batch/ledger commit dispatch, shared by every stage: batch
-    // mode takes the optimistic next version, ledger mode commits AT
-    // the tick's fixed version
     // a false from the As-commits means the version was already there
     // (either this tick's own guard raced a replay — benign — or a
     // concurrent second writer took it, violating the single-writer-
@@ -1708,59 +1707,27 @@ object Graft {
           "writer shares the table, the single-writer contract is " +
           "broken and the stage's reported rows are the other " +
           "writer's. Audit the table's writers.")
-    // cluster every tick commit by its partition column: unclustered,
-    // partitionBy writes up to #tasks files PER hive partition (≤512
-    // tiny files per tick commit at 32 threads), and the tick is
-    // commit-bound (TickProbe r16: 31–41% of the tick is the write
-    // sites) while successive versions compound the small-file count
-    // every pruned read then lists. The hash repartition sends each
-    // partition value to ONE task → one file per partition per
-    // version; the extra exchange moves only this tick's touched-
-    // partition rows. Deliberately NOT in Snapshots.attemptPartitioned
-    // — z-order writers must keep their within-file ordering.
-    def clustered(rows: DataFrame, partCol: String): DataFrame =
-      rows.repartition(col(partCol))
-    def seedCommit(rows: DataFrame, table: String,
-        partCol: String): Long = version match {
-      case Some(v) =>
-        if (!Snapshots.commitPartitionedAs(clustered(rows, partCol),
-            table, partCol, v))
-          unconfirmed(table, v)
-        v
-      case None =>
-        Snapshots.commitPartitioned(clustered(rows, partCol), table,
-          partCol)
-    }
-    def mergeCommit(merged: DataFrame, table: String,
-        partCol: String): Long = version match {
-      case Some(v) =>
-        if (!Snapshots.commitPartitionsAs(clustered(merged, partCol),
-            table, partCol, v))
-          unconfirmed(table, v)
-        v
-      case None =>
-        Snapshots.commitPartitions(clustered(merged, partCol), table,
-          partCol)
-    }
-    // merge a batch's survivor rows into a stage table: touched
-    // hash-prefix partitions only (the dedup_append merge shape)
-    def mergeInto(table: String, rows: DataFrame, partCol: String,
-        cols: Seq[String]): Long = {
-      if (version.exists(v => Snapshots.versionExists(s, table, v)))
-        return version.get // this stage already committed its tick
-      val prevV = preV(table)
-      if (prevV == 0L)
-        seedCommit(rows.select(cols.map(col): _*), table, partCol)
-      else if (rows.isEmpty) prevV // nothing to merge this tick
-      else mergeCommit(
-        Snapshots.readAsOf(s, table, prevV)
-          .join(broadcast(rows.select(col(partCol)).distinct()),
-            Seq(partCol), "left_semi")
-          .select(cols.map(col): _*)
-          .unionByName(rows.select(cols.map(col): _*)),
-        table, partCol)
-    }
-    val fQ = asyncCommit(mergeInto(qT, qb, "hp", survivorCols))
+    // the batch/ledger append dispatch, shared by every stage table
+    // (Snapshots.appendPartitions builds the touched-partitions merge,
+    // clusters it one file per partition, seeds a fresh table and
+    // commits nothing for empty rows): batch mode appends at the
+    // optimistic next version, ledger mode AT the tick's fixed
+    // version, skipping a table that already holds it (per-table
+    // resume). Returns the version the report reads: the tick's, or
+    // the table's pre-tick version when `rows` was empty.
+    def append(table: String, rows: DataFrame, partCol: String): Long =
+      version match {
+        case None => Snapshots.appendPartitions(rows, table, partCol)
+        case Some(v) =>
+          if (Snapshots.versionExists(s, table, v) ||
+              Snapshots.appendPartitionsAs(rows, table, partCol, v)) v
+          else if (Snapshots.versionExists(s, table, v)) {
+            unconfirmed(table, v); v
+          } else preV(table) // empty rows: nothing to commit this tick
+      }
+    def survivors(rows: DataFrame): DataFrame =
+      rows.select(survivorCols.map(col): _*)
+    val fQ = asyncCommit(append(qT, survivors(qb), "hp"))
     // stage-2: batch keepers — hash unseen in the committed table
     // (probe prunes to the batch's own hash prefixes) AND batch-group
     // min doc_id
@@ -1778,7 +1745,7 @@ object Graft {
         .select(col("doc_id")),
       Seq("doc_id"), "left_semi")
       .localCheckpoint() // consumers: exact merge, bands, near verify
-    val fE = asyncCommit(mergeInto(eT, kb, "hp", survivorCols))
+    val fE = asyncCommit(append(eT, survivors(kb), "hp"))
     // stage-3: probe the persisted band index with the batch keepers'
     // band rows; a batch doc is dropped iff a LOWER-id exact keeper
     // (committed or batch-mate) verifies at jaccard >= threshold
@@ -1808,23 +1775,14 @@ object Graft {
       .filter(col("jaccard") >= threshold)
       .select(col("doc_b").as("doc_id")).distinct()
     // materialized: nb's lineage is the whole band-probe + verify
-    // chain, and it has 2-4 consumers (mergeInto's isEmpty + union,
-    // plus the semantic stage's embed join and anti-join) — unchecked
-    // it re-executed the verify per consumer (TickProbe r16: the
-    // isEmpty alone was 12% of the tick)
+    // chain, and it has 2-4 consumers (the append's touched-partition
+    // list and union, plus the semantic stage's embed join and
+    // anti-join) — unchecked it re-executed the verify per consumer
+    // (TickProbe r16)
     val nb = kb.join(dropped, Seq("doc_id"), "left_anti")
       .localCheckpoint()
-    val fN = asyncCommit(mergeInto(nT, nb, "hp", survivorCols))
-    asyncCommit {
-      if (!kbBands.isEmpty &&
-          !version.exists(v => Snapshots.versionExists(s, bT, v))) {
-        if (prevB == 0L) seedCommit(kbBands, bT, "pb")
-        else mergeCommit(
-          SimilarityOps.minhashIndexMergeFrames(
-            Snapshots.readAsOf(s, bT, prevB), kbBands),
-          bT, "pb")
-      } else 0L
-    }
+    val fN = asyncCommit(append(nT, survivors(nb), "hp"))
+    asyncCommit(append(bT, kbBands, "pb"))
     // stage-4 (armed by `embeddings`): semantic dedup of the batch's
     // stage-3 survivors against the persisted cluster index — three
     // more tables (sem/ survivors by hp, semidx/ cluster index by
@@ -1991,11 +1949,11 @@ object Graft {
             .localCheckpoint() // consumers: touched semi, merge, probe
           val prevI = preV(iT)
           val touched = batchIdx.select(col("cc_id")).distinct()
-          // one read of the committed index, shared by the evidence
-          // semi-join and the merge below; a pre-coarse-cell table
-          // (no cc_id) fails HERE with the migration path instead of
-          // a downstream missing-column AnalysisException (ADVICE
-          // r17 — this is the read the streaming merge also runs)
+          // the committed index for the evidence semi-join; a
+          // pre-coarse-cell table (no cc_id) fails HERE with the
+          // migration path instead of a downstream missing-column
+          // AnalysisException (ADVICE r17 — the streaming maintainer
+          // runs the same check)
           val prevIdx =
             if (prevI == 0L) None
             else {
@@ -2029,22 +1987,14 @@ object Graft {
             .withColumn("_s", round(expr("dot_f(_bemb, _aemb)"), 4))
             .filter(col("_s") >= semThreshold)
             .select(col("_bid").as("doc_id")).distinct()
-          asyncCommit {
-            if (!batchIdx.isEmpty &&
-                !version.exists(v => Snapshots.versionExists(s, iT, v))) {
-              if (prevIdx.isEmpty) seedCommit(batchIdx, iT, "cc_id")
-              else mergeCommit(
-                VectorOps.semdedupIndexMergeFrames(prevIdx.get, batchIdx),
-                iT, "cc_id")
-            } else 0L
-          }
+          asyncCommit(append(iT, batchIdx, "cc_id"))
           drops
         }
-      // materialized for mergeInto's two passes (isEmpty + union) —
-      // sb's lineage re-runs the cluster probe otherwise
+      // materialized for the append's two reads (touched partitions +
+      // union) — sb's lineage re-runs the cluster probe otherwise
       val sb = nb.join(dropped, Seq("doc_id"), "left_anti")
         .localCheckpoint()
-      val fS = asyncCommit(mergeInto(sT, sb, "hp", survivorCols))
+      val fS = asyncCommit(append(sT, survivors(sb), "hp"))
       (sT, fS)
     }
     def stageRow(no: Int, name: String, table: String,

@@ -49,6 +49,25 @@ import java.nio.charset.StandardCharsets.UTF_8
   * grace period. `commit` retries the loser at the next version
   * number (optimistic concurrency); `commitAs` reports the loss.
   *
+  * Partition commits write the manifest between steps 1 and 2 with
+  * the same `overwrite = false` create, so two writers of one version
+  * collide there first. A loser that finds the winner's manifest AND
+  * marker treats it as a lost marker race: it deletes only its own
+  * dir and retries at the next version (the fixed-version `As` forms
+  * return false). A manifest with no marker beside it is crash debris
+  * and still fails loudly.
+  *
+  * Appends: `appendPartitions(rows, base, partCol)` is the one way to
+  * add rows to a partitioned table. Each attempt builds the merge —
+  * the committed rows of every partition `rows` touches, plus `rows`,
+  * clustered one file per partition — from the version it commits on
+  * top of, so a writer that loses the race rebuilds on the winner's
+  * version and two concurrent appends both keep their rows. An empty
+  * `rows` commits nothing. `commitPartitions` instead takes a
+  * caller-built frame that REPLACES the partitions it holds (upserts,
+  * rewrites): a caller that built it from a read older than the
+  * version it lands on replaces the concurrent winner's rows.
+  *
   * The one non-atomicity left is marker content: a reader can list a
   * marker in the instant between its create and its content write.
   * That window resolves to a LOUD failure (the named dir is not yet
@@ -364,15 +383,29 @@ object Snapshots {
     (dataDirOf(s, base, version) +:
       manifestOf(s, base, version).toSeq.flatMap(_.parts.map(_._2))).distinct
 
+  /** Create version `v`'s manifest (`overwrite = false`). Returns
+    * false when it exists because another writer committed `v` (its
+    * marker is there too): a lost race, which the caller retries. A
+    * manifest with no marker beside it is crash debris (or a writer
+    * between its manifest and its marker) and the create failure
+    * propagates. */
   private def writeManifest(s: SparkSession, base: String, v: Long,
-      schema: StructType, parts: Seq[(String, String)]): Unit = {
+      schema: StructType, parts: Seq[(String, String)]): Boolean = {
     val f = fs(s, base)
-    val out = f.create(new Path(manifestDir(base), v.toString), false)
+    val p = new Path(manifestDir(base), v.toString)
+    val out =
+      try f.create(p, false)
+      catch {
+        case e: java.io.IOException =>
+          if (f.exists(p) && versionExists(s, base, v)) return false
+          else throw e
+      }
     try out.write(
       (s"#schema\t${schema.json}" +:
         parts.map { case (p, d) => s"$p\t$d" }).mkString("\n")
         .getBytes(UTF_8))
     finally out.close()
+    true
   }
 
   /** `fields` with every field, nested field, element and map value
@@ -475,51 +508,132 @@ object Snapshots {
     * version `commitPartitions` increments from. Returns the version.
     * Single string partition column (the fixture-scale form; the
     * manifest format already carries full hive dir names, so nesting
-    * is a reader-side extension, not a layout change). */
+    * is a reader-side extension, not a layout change). Throws on an
+    * empty DataFrame: a version with zero partitions cannot be read
+    * back. */
   def commitPartitioned(df: DataFrame, base: String,
-      partCol: String): Long = {
-    val s = df.sparkSession
-    var v = latest(s, base) + 1
-    while (true) {
-      if (attemptPartitioned(df, base, partCol, v)) return v
-      v = latest(s, base) + 1
+      partCol: String): Long =
+    optimistic(df.sparkSession, base)(v =>
+      attempt(df, base, partCol, v, None, append = false))
+
+  /** The optimistic-concurrency loop of the partition commits: try at
+    * latest + 1 and, after a lost race, again at the new latest + 1 —
+    * each attempt re-reads what it inherits, so a concurrent winner's
+    * rewrites are never merged away. Returns the committed version,
+    * or the latest one when the attempt wrote nothing (`attempt`'s
+    * None). */
+  @annotation.tailrec
+  private def optimistic(s: SparkSession, base: String)(
+      attempt: Long => Option[Boolean]): Long = {
+    val v = latest(s, base) + 1
+    attempt(v) match {
+      case Some(true) => v
+      case Some(false) => optimistic(s, base)(attempt)
+      case None => v - 1
     }
-    v // unreachable
   }
 
-  /** One optimistic attempt to partition-commit `df` AT `v`: data dir
-    * → manifest → marker. Returns false (all traces cleaned up) when
-    * the marker race is lost; throws on an empty DataFrame. */
-  private def attemptPartitioned(df: DataFrame, base: String,
-      partCol: String, v: Long): Boolean = {
-    val s = df.sparkSession
+  /** Version `prevV`'s manifest, for a partition commit on `partCol`
+    * that inherits from it. Throws when `prevV` is not
+    * partition-committed on `partCol`. */
+  private def inherited(s: SparkSession, base: String, partCol: String,
+      prevV: Long): Manifest = {
+    val m = manifestOf(s, base, prevV).getOrElse(
+      throw new IllegalArgumentException(
+        s"a partition commit at $base needs a partition-committed " +
+          s"previous version (v=$prevV has no manifest); seed the " +
+          "table with commitPartitioned or appendPartitions"))
+    require(m.parts.forall(p => manifestPartCol(p._1) == partCol),
+      s"partition column mismatch: table is partitioned on " +
+        s"${manifestPartCol(m.parts.head._1)}, got $partCol")
+    m
+  }
+
+  /** One optimistic attempt to partition-commit AT `v`: data dir →
+    * manifest → marker. `prev` is the manifest of the version `v`
+    * inherits every partition it does not write from (None: `v` holds
+    * only what it writes). Without `append` the written frame is
+    * `rows`; with it, `rows` appended to `prev`'s copy of each
+    * partition they touch, clustered by `partCol` (see
+    * `appendPartitions`). Returns
+    * Some(true) when committed; Some(false) when another writer
+    * committed `v` first, with this attempt's dir and manifest
+    * removed; None when an append wrote no partition — its dir is
+    * removed and nothing is committed. A full commit (`prev` None)
+    * of an empty frame throws. */
+  private def attempt(rows: DataFrame, base: String, partCol: String,
+      v: Long, prev: Option[Manifest],
+      append: Boolean): Option[Boolean] = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    val s = rows.sparkSession
     val f = fs(s, base)
+    // the version keeps the PRIOR version's partition type when it
+    // recorded one (the table's committed contract outranks this
+    // batch frame's — a caller-side cast must not flip the column
+    // type mid-table), else this frame's; a pre-`#schema` prior's
+    // data columns are inferred once here, so the table is recorded
+    // from this version on
+    val schema = prev.fold(recordedSchema(rows.schema, partCol,
+        rows.schema(partCol).dataType)) { m =>
+      val table = m.schema.getOrElse(recordedSchema(
+        readManifest(s, base, m).schema, partCol,
+        m.partType.map(DataType.fromDDL)
+          .getOrElse(rows.schema(partCol).dataType)))
+      // the version reads the inherited partitions' files with this
+      // schema: a frame whose data columns differ would null-fill
+      // there (or, read by inference, fail), so it is refused before
+      // anything is written
+      def columns(st: StructType): Seq[String] =
+        st.fields.toSeq.filterNot(_.name == partCol)
+          .map(fd => s"${fd.name}:${fd.dataType.catalogString}").sorted
+      if (columns(rows.schema) != columns(table))
+        throw new IllegalArgumentException(
+          s"a partition commit at $base: the frame's data columns " +
+            s"${columns(rows.schema).mkString(", ")} differ from the " +
+            s"table's ${columns(table).mkString(", ")}")
+      table
+    }
+    val df =
+      if (!append) rows
+      else prev.fold(rows) { m =>
+        readManifest(s, base, m)
+          .join(broadcast(rows.select(col(partCol)).distinct()),
+            Seq(partCol), "left_semi")
+          .select(rows.columns.toSeq.map(col): _*)
+          .unionByName(rows)
+      }.repartition(col(partCol))
     val dir = s"v=$v-${nonce()}"
     df.write.mode("overwrite").partitionBy(partCol)
       .parquet(s"$base/$dir")
-    val parts = f.listStatus(new Path(base, dir)).toSeq
+    val touched = f.listStatus(new Path(base, dir)).toSeq
       .filter(_.isDirectory)
       .map(_.getPath.getName)
       .filter(n => n.contains('=') && !n.startsWith("_"))
-      .sorted.map(p => (p, dir))
-    if (parts.isEmpty) {
+      .sorted
+    if (touched.isEmpty && (append || prev.isEmpty)) {
+      f.delete(new Path(base, dir), true)
+      if (append) return None
       // an empty manifest is unreadable (no partition dirs, no
       // schema to infer) — refuse to publish it rather than commit
       // a version readAsOf can never resolve
-      f.delete(new Path(base, dir), true)
       throw new IllegalArgumentException(
         "commitPartitioned refuses an empty DataFrame (a version " +
           "with zero partitions cannot be read back); use commit() " +
           "for full — possibly empty — snapshots")
     }
+    val own = touched.toSet
+    val parts = (prev.toSeq.flatMap(_.parts).filterNot(p => own(p._1)) ++
+      touched.map(p => (p, dir))).sortBy(_._1)
     // manifest before marker: a version is only visible complete
-    writeManifest(s, base, v,
-      recordedSchema(df.schema, partCol, df.schema(partCol).dataType), parts)
-    if (tryMarker(s, base, v, dir)) true
+    if (!writeManifest(s, base, v, schema, parts)) {
+      // `v` is committed under another writer's manifest: a lost race
+      f.delete(new Path(base, dir), true)
+      Some(false)
+    } else if (tryMarker(s, base, v, dir)) Some(true)
     else {
       f.delete(new Path(manifestDir(base), v.toString), false)
       f.delete(new Path(base, dir), true)
-      false
+      Some(false)
     }
   }
 
@@ -555,7 +669,8 @@ object Snapshots {
     if (versionExists(s, base, version)) false
     else {
       clearOrphanManifest(s, base, version)
-      attemptPartitioned(df, base, partCol, version)
+      attempt(df, base, partCol, version, None, append = false)
+        .contains(true)
     }
   }
 
@@ -577,6 +692,22 @@ object Snapshots {
       f.delete(m, false)
   }
 
+  /** The fixed-version form of a commit that inherits from the latest
+    * committed version: false without touching the table when
+    * `version` is already committed (the replay/no-op case), else
+    * `attempt(latest)`'s outcome — false on a lost race or when it
+    * wrote nothing. Requires `version` > the current latest. */
+  private def atVersion(s: SparkSession, base: String, version: Long)(
+      attempt: Long => Option[Boolean]): Boolean =
+    !versionExists(s, base, version) && {
+      val prevV = latest(s, base)
+      require(prevV < version,
+        s"fixed version $version is not ahead of the latest committed " +
+          s"version $prevV at $base")
+      clearOrphanManifest(s, base, version)
+      attempt(prevV).contains(true)
+    }
+
   /** INCREMENTAL commit — the 100 TB write path: rewrite ONLY the
     * partitions present in `df`, inherit every other live partition
     * from the previous version by manifest reference, and commit the
@@ -589,79 +720,19 @@ object Snapshots {
     * pins every dir a retained manifest references). Returns the
     * committed version number.
     *
+    * `df` REPLACES each partition it holds rows for, so the caller
+    * builds that partition's new contents — an upsert or a rewrite —
+    * and it is written as given (z-order writers keep their
+    * within-file order). An append that keeps the committed rows is
+    * `appendPartitions`, which builds the merge inside the retry.
+    *
     * Requires the table's previous version to be partition-committed
-    * (`commitPartitioned` / `commitPartitions`) on the same column —
-    * the manifest is the inheritance mechanism. */
+    * on the same column — the manifest is the inheritance mechanism. */
   def commitPartitions(df: DataFrame, base: String,
       partCol: String): Long = {
     val s = df.sparkSession
-    var v = latest(s, base) + 1
-    while (true) {
-      // the inherited manifest is re-read EVERY attempt: after a lost
-      // marker race the new latest version may itself have rewritten
-      // partitions, and merging against the pre-race manifest would
-      // silently discard the concurrent winner's rewrites — the lost
-      // update the optimistic retry exists to prevent
-      if (attemptPartitions(df, base, partCol, v, v - 1)) return v
-      v = latest(s, base) + 1
-    }
-    v // unreachable
-  }
-
-  /** One optimistic attempt at an incremental commit AT `v`,
-    * inheriting untouched partitions from `prevVersion`'s manifest.
-    * Returns false (all traces cleaned up) on a lost marker race. */
-  private def attemptPartitions(df: DataFrame, base: String,
-      partCol: String, v: Long, prevVersion: Long): Boolean = {
-    val s = df.sparkSession
-    val f = fs(s, base)
-    val prev = manifestOf(s, base, prevVersion).getOrElse(
-      throw new IllegalArgumentException(
-        s"commitPartitions needs a partition-committed previous " +
-          s"version at $base (v=$prevVersion has no manifest); seed " +
-          "the table with commitPartitioned"))
-    require(prev.parts.forall(p => manifestPartCol(p._1) == partCol),
-      s"partition column mismatch: table is partitioned on " +
-        s"${manifestPartCol(prev.parts.head._1)}, got $partCol")
-    // the merged version keeps the PRIOR version's partition type when
-    // it recorded one (the table's committed contract outranks this
-    // batch frame's — a caller-side cast must not flip the column type
-    // mid-table), else this frame's; a pre-`#schema` prior's data
-    // columns are inferred once here, so the table is recorded from
-    // this version on
-    val schema = prev.schema.getOrElse(recordedSchema(
-      readManifest(s, base, prev).schema, partCol,
-      prev.partType.map(DataType.fromDDL)
-        .getOrElse(df.schema(partCol).dataType)))
-    // the merged version reads the inherited partitions' files with
-    // this schema: a frame whose data columns differ would null-fill
-    // there (or, read by inference, fail), so it is refused before
-    // anything is written
-    def columns(st: StructType): Seq[String] =
-      st.fields.toSeq.filterNot(_.name == partCol)
-        .map(f => s"${f.name}:${f.dataType.catalogString}").sorted
-    if (columns(df.schema) != columns(schema))
-      throw new IllegalArgumentException(
-        s"commitPartitions at $base: the frame's data columns " +
-          s"${columns(df.schema).mkString(", ")} differ from version " +
-          s"$prevVersion's ${columns(schema).mkString(", ")}")
-    val dir = s"v=$v-${nonce()}"
-    df.write.mode("overwrite").partitionBy(partCol)
-      .parquet(s"$base/$dir")
-    val touched = f.listStatus(new Path(base, dir)).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(n => n.contains('=') && !n.startsWith("_"))
-      .toSet
-    val merged = (prev.parts.filterNot(p => touched(p._1)) ++
-      touched.toSeq.sorted.map(p => (p, dir))).sortBy(_._1)
-    writeManifest(s, base, v, schema, merged)
-    if (tryMarker(s, base, v, dir)) true
-    else {
-      f.delete(new Path(manifestDir(base), v.toString), false)
-      f.delete(new Path(base, dir), true)
-      false
-    }
+    optimistic(s, base)(v => attempt(df, base, partCol, v,
+      Some(inherited(s, base, partCol, v - 1)), append = false))
   }
 
   /** `commitPartitions` at a CALLER-FIXED version, inheriting from
@@ -669,19 +740,50 @@ object Snapshots {
     * sparse under a batch-ledger scheme — a skipped empty batch
     * leaves a gap). Returns false without touching the table when
     * `version` already exists (the replay/no-op case) or on a lost
-    * marker race. Requires `version` > the current latest. */
+    * race. Requires `version` > the current latest. */
   def commitPartitionsAs(df: DataFrame, base: String, partCol: String,
       version: Long): Boolean = {
     val s = df.sparkSession
-    if (versionExists(s, base, version)) false
-    else {
-      val prevV = latest(s, base)
-      require(prevV < version,
-        s"commitPartitionsAs version $version is not ahead of the " +
-          s"latest committed version $prevV at $base")
-      clearOrphanManifest(s, base, version)
-      attemptPartitions(df, base, partCol, version, prevV)
-    }
+    atVersion(s, base, version)(prevV => attempt(df, base, partCol,
+      version, Some(inherited(s, base, partCol, prevV)), append = false))
+  }
+
+  /** APPEND `rows` to a hive-partitioned table and commit the result
+    * as the next version: each partition `rows` touches is rewritten
+    * as its committed rows plus `rows`' (no dedup, no upsert), and
+    * every other live partition is inherited by manifest reference.
+    * The merge — `prev ⋉ broadcast(distinct partCol) ∪ rows`,
+    * hash-repartitioned by `partCol` so each touched partition is one
+    * file per version — is built INSIDE each optimistic attempt from
+    * the version that attempt commits on top of. A writer that loses
+    * the race to a concurrent append therefore retries on the
+    * winner's version and keeps its rows: no append is lost. A fresh
+    * table is seeded with `rows` (`commitPartitioned`'s layout).
+    *
+    * An empty `rows` writes no partition dir and commits nothing;
+    * the latest version is returned. `rows` is read twice (the
+    * touched-partition list and the union), so callers materialize
+    * it. Its data columns must match the table's (any order). */
+  def appendPartitions(rows: DataFrame, base: String,
+      partCol: String): Long = {
+    val s = rows.sparkSession
+    optimistic(s, base)(v => attempt(rows, base, partCol, v,
+      Option.when(v > 1L)(inherited(s, base, partCol, v - 1)),
+      append = true))
+  }
+
+  /** `appendPartitions` at a CALLER-FIXED version, appending to the
+    * LATEST committed version below it (the `commitPartitionsAs`
+    * ledger form). Returns false without touching the table when
+    * `version` is already committed, on a lost race, and when `rows`
+    * is empty (nothing is committed; `version` stays a gap). Requires
+    * `version` > the current latest. */
+  def appendPartitionsAs(rows: DataFrame, base: String, partCol: String,
+      version: Long): Boolean = {
+    val s = rows.sparkSession
+    atVersion(s, base, version)(prevV => attempt(rows, base, partCol,
+      version, Option.when(prevV > 0L)(inherited(s, base, partCol, prevV)),
+      append = true))
   }
 
   /** Bytes under every data dir `version` wrote ITSELF (its marker

@@ -432,9 +432,10 @@ object StreamOps {
     * frame by its partition column before the partitioned write —
     * unclustered, partitionBy writes up to #tasks tiny files per
     * partition per commit and successive versions compound the file
-    * count every pruned read lists (the curateIngest precedent, r16;
-    * TickProbe measured the maintainers commit-bound). The exchange
-    * moves only the tick's touched-partition rows. */
+    * count every pruned read lists (TickProbe measured the
+    * maintainers commit-bound; `Snapshots.appendPartitions` clusters
+    * appends the same way). The exchange moves only the tick's
+    * touched-partition rows. */
   private def clustered(rows: DataFrame, partCol: String): DataFrame =
     rows.repartition(org.apache.spark.sql.functions.col(partCol))
 
@@ -446,12 +447,12 @@ object StreamOps {
     * signatures are pure functions of a doc's own text, so
     * batch-isolated signatures ARE the full-corpus signatures — and
     * merges them into ONLY the touched (band, bk mod 16) partitions
-    * of the persisted snapshot index (batch 0 seeds with
-    * `commitPartitionedAs`; later batches union-merge with
-    * `commitPartitionsAs`). The rollup and the merge are
-    * `minhash_append`'s own kernel (SimilarityOps.minhashIndexRollup
-    * / minhashIndexMergeFrames), so the streamed index cannot drift
-    * from the batch op — StreamingSpec asserts streamed ≡ one-shot.
+    * of the persisted snapshot index (`Snapshots.appendPartitionsAs`
+    * seeds the table on the first batch with band rows and appends
+    * later ones). The rollup and the append are `minhash_append`'s
+    * own (SimilarityOps.minhashIndexRollup, appendPartitions), so the
+    * streamed index cannot drift from the batch op — StreamingSpec
+    * asserts streamed ≡ one-shot.
     *
     * Exactly-once, empty-batch gaps, and the checkpoint–table
     * coupling caveat are IDENTICAL to [[dedupIndexMerge]] (batch i ↔
@@ -475,21 +476,12 @@ object StreamOps {
     if (Snapshots.versionExists(s, base, v)) {
       replayGuard(s, base, v, "minhashIndexMerge"); false // replay no-op
     }
-    else if (batch.isEmpty) false // nothing to apply; v stays a gap
-    else {
-      val b = SimilarityOps.minhashIndexRollup(batch)
-        .localCheckpoint() // 2 consumers: touched semi + merge
-      if (b.isEmpty) false // no doc had >= 3 tokens; v stays a gap
-      else {
-        val prevV = Snapshots.latest(s, base)
-        if (prevV == 0L)
-          Snapshots.commitPartitionedAs(clustered(b, "pb"), base, "pb", v)
-        else Snapshots.commitPartitionsAs(
-          clustered(SimilarityOps.minhashIndexMergeFrames(
-            Snapshots.readAsOf(s, base, prevV), b), "pb"),
-          base, "pb", v)
-      }
-    }
+    // an empty batch, or one whose docs all have < 3 tokens, rolls up
+    // no band rows: the append commits nothing and v stays a gap
+    else Snapshots.appendPartitionsAs(
+      SimilarityOps.minhashIndexRollup(batch)
+        .localCheckpoint(), // 2 consumers: touched partitions + union
+      base, "pb", v)
   }
 
   /** Streaming incremental semantic-dedup cluster-index maintenance —
@@ -502,11 +494,12 @@ object StreamOps {
     * pure functions of (own embedding, frozen seeds), so
     * batch-isolated rollups ARE full-corpus assignment slices) and
     * merged into ONLY the touched coarse-cell partitions of the persisted
-    * snapshot index. The rollup and merge are `semdedup_append`'s own
-    * kernel (VectorOps.semdedupIndexRollup / semdedupIndexMergeFrames)
-    * so stream and batch cannot drift — StreamingSpec asserts
-    * streamed ≡ one-shot assignment. Re-clustering (new k as the
-    * corpus grows) stays a scheduled full rebuild, NOT a stream tick.
+    * snapshot index. The rollup and the append are
+    * `semdedup_append`'s own (VectorOps.semdedupIndexRollup,
+    * appendPartitions), so stream and batch cannot drift —
+    * StreamingSpec asserts streamed ≡ one-shot assignment.
+    * Re-clustering (new k as the corpus grows) stays a scheduled full
+    * rebuild, NOT a stream tick.
     *
     * Exactly-once, empty-batch gaps, and the checkpoint–table
     * coupling caveat are IDENTICAL to [[dedupIndexMerge]] (batch i ↔
@@ -524,17 +517,21 @@ object StreamOps {
     if (Snapshots.versionExists(s, base, v)) {
       replayGuard(s, base, v, "semdedupIndexMerge"); false // replay no-op
     }
-    else if (batch.isEmpty) false // nothing to apply; v stays a gap
     else {
-      val b = VectorOps.semdedupIndexRollup(batch, seeds)
-        .localCheckpoint() // 2 consumers: touched semi + merge
+      // a pre-coarse-cell index (one dir per CLUSTER, no cc_id column)
+      // cannot be appended to: fail with the migration path instead
+      // of a partition-column mismatch (ADVICE r17)
       val prevV = Snapshots.latest(s, base)
-      if (prevV == 0L)
-        Snapshots.commitPartitionedAs(clustered(b, "cc_id"), base,
-          "cc_id", v)
-      else Snapshots.commitPartitionsAs(
-        clustered(VectorOps.semdedupIndexMergeFrames(
-          Snapshots.readAsOf(s, base, prevV), b), "cc_id"),
+      require(prevV == 0L ||
+        Snapshots.readAsOf(s, base, prevV).columns.contains("cc_id"),
+        "persisted semantic index predates the coarse-cell layout " +
+          "(no cc_id partition column) — rebuild it against the " +
+          "current seeds with Graft.reclusterSem (or re-run the base " +
+          "build) before merging new batches")
+      // an empty batch appends nothing; v stays a gap
+      Snapshots.appendPartitionsAs(
+        VectorOps.semdedupIndexRollup(batch, seeds)
+          .localCheckpoint(), // 2 consumers: touched partitions + union
         base, "cc_id", v)
     }
   }

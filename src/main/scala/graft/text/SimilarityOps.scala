@@ -646,31 +646,15 @@ object SimilarityOps extends OpModule {
         (col("band") * 16 + pmod(col("bk"), lit(16))).cast("int"))
       .select(col("pb"), col("doc_id"), col("band"), col("bk"))
 
-  /** Merge a rolled-up batch into the previous index contents: band
-    * rows are append-only per doc (batches carry disjoint doc sets),
-    * so the merge is a union restricted to touched partitions —
-    * emits only touched-partition rows (the `commitPartitions`
-    * contract). `batch` is consumed twice (touched semi + union) —
-    * callers materialize it. */
-  private[graft] def minhashIndexMergeFrames(
-      prev: org.apache.spark.sql.DataFrame,
-      batch: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    prev
-      .join(broadcast(batch.select(col("pb")).distinct()),
-        Seq("pb"), "left_semi")
-      .select(col("pb"), col("doc_id"), col("band"), col("bk"))
-      .unionByName(batch
-        .select(col("pb"), col("doc_id"), col("band"), col("bk")))
-
   /** The PERSISTED MinHash-LSH band index with incremental ingest —
     * `dedup_append`'s near-dup twin, and together with it the full
     * rolling-crawl dedup lifecycle: the index is a snapshot table of
     * (doc_id, band, bk) rows hive-partitioned by (band, bk mod 16)
     * (64 partitions; bk is the xxhash64'd band key — see
     * [[bandRows]]), built once from the base corpus and
-    * maintained by `commitPartitions`-merging each ingest batch's
-    * band rows — only partitions receiving batch buckets rewrite.
+    * maintained by appending each ingest batch's band rows
+    * (`Snapshots.appendPartitions`) — only partitions receiving batch
+    * buckets rewrite.
     * Because a doc's signature is a pure function of its own text
     * (deterministic salted-md5 family, no training), batch signatures
     * computed in isolation are IDENTICAL to full-corpus signatures,
@@ -716,42 +700,27 @@ object SimilarityOps extends OpModule {
       // recompute past the cap — see graft.Ckpt for the trade
       val allBands = graft.Ckpt.boundedLocal(minhashIndexRollup(docs),
         "minhash_append band rows") // consumers: both slices × (commit, merge, probe)
-      // ingest tick: the 50 newest docs' band rows, merged into ONLY
-      // the touched (band, bk mod 16) partitions
+      // v1: the base index; v2: the ingest tick — the 50 newest docs'
+      // band rows appended to ONLY the touched (band, bk mod 16)
+      // partitions. Both commits are clustered one file per pb dir per
+      // version: unclustered, partitionBy wrote up to #tasks files into
+      // each of the 64 dirs, and the commit's file-creation fan-out —
+      // not the verify — was the op's measured floor for three rounds
+      // (VERDICT r17 #2). A corpus no larger than the ingest batch has
+      // no base rows (a doc emits band rows iff it has >= 3 tokens), so
+      // v1 commits nothing and the tick seeds the index: signatures are
+      // per-doc pure functions, so the batch-only index IS the one-shot
+      // build.
       val batchBands = allBands.filter(col("doc_id") > mxd - 50)
-      val baseBands = allBands.filter(col("doc_id") <= mxd - 50)
-      val v2 =
-        // a doc emits band rows iff it has >= 3 tokens, so base
-        // emptiness is a filter over the checkpointed band rows —
-        // no extra corpus pass
-        if (baseBands.isEmpty) {
-          // corpus no larger than the ingest batch: signatures are
-          // per-doc pure functions, so the batch-only index IS the
-          // one-shot build — seed with it rather than tripping the
-          // empty-commit guard. A fully degenerate corpus (no doc
-          // anywhere with >= 3 tokens) has NO band rows at all: fail
-          // loudly with the actual problem, not the commit guard's
-          // message (the ivf_append/semdedup_append pattern).
-          require(!batchBands.isEmpty,
-            "minhash_append needs at least one document with >= 3 " +
-              "tokens — the corpus produces no band rows to index")
-          Snapshots.commitPartitioned(
-            batchBands.repartition(col("pb")), base, "pb")
-        } else {
-          // cluster every commit by the partition column (one file
-          // per pb dir per version): unclustered, partitionBy wrote
-          // up to #tasks files into each of the 64 dirs, and the
-          // commit's file-creation fan-out — not the verify — was
-          // the op's measured floor for three rounds (VERDICT r17
-          // #2; the streaming tick kernels already write clustered)
-          val v1 = Snapshots.commitPartitioned(
-            baseBands.repartition(col("pb")), base, "pb")
-          Snapshots.commitPartitions(
-            minhashIndexMergeFrames(
-              Snapshots.readAsOf(s, base, v1), batchBands)
-              .repartition(col("pb")),
-            base, "pb")
-        }
+      Snapshots.appendPartitions(
+        allBands.filter(col("doc_id") <= mxd - 50), base, "pb")
+      val v2 = Snapshots.appendPartitions(batchBands, base, "pb")
+      // a fully degenerate corpus (no doc anywhere with >= 3 tokens)
+      // has NO band rows at all: fail loudly with the actual problem
+      // (the ivf_append/semdedup_append pattern)
+      require(v2 > 0L,
+        "minhash_append needs at least one document with >= 3 " +
+          "tokens — the corpus produces no band rows to index")
       // discovery: batch buckets probe the merged index
       val cand = Snapshots.readAsOf(s, base, v2)
         .select(col("doc_id").as("ia"), col("band"), col("bk"))

@@ -949,39 +949,12 @@ object VectorOps extends OpModule {
       .select(col("cc_id"), col("c_id"), col("vec_id"),
         col("embedding"))
 
-  /** Merge a rolled-up batch into the previous index contents:
-    * assignment rows are append-only per vector (batches carry
-    * disjoint vec_id sets), so the merge is a union restricted to
-    * touched COARSE-CELL partitions — emits only touched-partition
-    * rows (the `commitPartitions` contract). `batch` is consumed
-    * twice (touched semi + union) — callers materialize it.
-    * A pre-coarse-cell index (one dir per CLUSTER, no cc_id column)
-    * cannot be merged into incrementally — fail with the migration
-    * path instead of a downstream missing-column AnalysisException
-    * (ADVICE r17). */
-  private[graft] def semdedupIndexMergeFrames(prev: DataFrame,
-      batch: DataFrame): DataFrame = {
-    require(prev.columns.contains("cc_id"),
-      "persisted semantic index predates the coarse-cell layout " +
-        "(no cc_id partition column) — rebuild it against the " +
-        "current seeds with Graft.reclusterSem (or re-run the base " +
-        "build) before merging new batches")
-    prev
-      .join(broadcast(batch.select(col("cc_id")).distinct()),
-        Seq("cc_id"), "left_semi")
-      .select(col("cc_id"), col("c_id"), col("vec_id"),
-        col("embedding"))
-      .unionByName(batch
-        .select(col("cc_id"), col("c_id"), col("vec_id"),
-          col("embedding")))
-  }
-
   /** The PERSISTED inverted-file index with frozen-centroid ingest —
     * how a 100 TB vector store actually lives: the index is a snapshot
     * table hive-partitioned by inverted list (`list=<c_id>`), built
-    * once from the base corpus (Lloyd-trained centroids,
-    * `commitPartitioned`), and a new ingest batch is assigned against
-    * the FROZEN centroids and merged with `commitPartitions` — only
+    * once from the base corpus (Lloyd-trained centroids), and a new
+    * ingest batch is assigned against the FROZEN centroids and
+    * appended with `Snapshots.appendPartitions` — only
     * the list partitions that received new vectors are rewritten
     * (write amplification O(touched lists), not O(index); the
     * untouched lists are inherited by manifest reference), and no
@@ -1040,24 +1013,16 @@ object VectorOps extends OpModule {
       val allIdx = graft.Ckpt.boundedLocal(assignTo(emb),
         "ivf_append assignments",
         Some(emb)) // consumers: base commit + batch + probe target
-      // v1: the base index, clustered by inverted list (repartition
-      // on the partition column: one file per list dir per version —
-      // the clustered-commit doctrine)
-      val v1 = Snapshots.commitPartitioned(
-        allIdx.filter(col("vec_id") <= mxv - 4)
-          .repartition(col("list")), base, "list")
-      // ingest: the 4 NEWEST vec_ids (the base's complement), assigned
-      // to the FROZEN centroids; merge = full new contents of ONLY the
-      // touched list partitions
-      val batch = allIdx.filter(col("vec_id") > mxv - 4)
-        .select(col("vec_id"), col("embedding"), col("list"))
-      val touched = batch.select(col("list")).distinct()
-      val merged = Snapshots.readAsOf(s, base, v1)
-        .join(broadcast(touched), Seq("list"), "left_semi")
-        .unionByName(batch.select(col("list"), col("vec_id"),
-          col("embedding")))
-      val v2 = Snapshots.commitPartitions(
-        merged.repartition(col("list")), base, "list")
+      // v1: the base index; v2: the ingest tick — the 4 NEWEST
+      // vec_ids (the base's complement), assigned to the FROZEN
+      // centroids and appended to ONLY the touched list partitions.
+      // Both commits are clustered one file per list dir per version.
+      Snapshots.appendPartitions(
+        allIdx.filter(col("vec_id") <= mxv - 4), base, "list")
+      val v2 = Snapshots.appendPartitions(
+        allIdx.filter(col("vec_id") > mxv - 4)
+          .select(col("vec_id"), col("embedding"), col("list")),
+        base, "list")
       // probe the merged index with the NEWEST vector — the
       // freshly-ingested document immediately querying the index it
       // just joined: top-2 lists for the target, then exact scoring
@@ -1126,11 +1091,12 @@ object VectorOps extends OpModule {
     * k = ⌈N/τ⌉ makes that k ∝ N dirs and #tasks·k files per commit
     * (measured: 181 s at sf10m vs 8 s for the r16 45-dir build);
     * cells keep the dir count ∝ ∛N and each cell is one bounded
-    * file per version (the writes repartition by cc_id — the
-    * curateIngest `clustered` doctrine). Built once from the
+    * file per version (`Snapshots.appendPartitions` repartitions
+    * its writes by cc_id). Built once from the
     * base corpus (all but the 5 newest vec_ids — a bounded ingest
     * tick, like `ivf_append`’s), maintained by
-    * `commitPartitions`-merging each ingest batch: only coarse-cell
+    * appending each ingest batch (`Snapshots.appendPartitions`):
+    * only coarse-cell
     * partitions that received batch vectors rewrite (write
     * amplification O(touched cells)); at ingest the batch probes
     * the merged index for its semantic duplicates — same-cluster
@@ -1198,22 +1164,18 @@ object VectorOps extends OpModule {
         semdedupIndexRollup(emb, seeds),
         "semdedup_append assignments",
         Some(emb)) // consumers: base commit + batch's 4 reads
-      val baseIdx = allIdx.filter(col("vec_id") <= mxv - 5)
       // v1: the base index, cell-partitioned and cell-clustered (the
-      // repartition sends each cc_id to ONE task → one file per cell
-      // per version; unclustered partitionBy wrote #tasks files per
-      // dir — the 181 s sf10m regression)
-      val v1 = Snapshots.commitPartitioned(
-        baseIdx.repartition(col("cc_id")), base, "cc_id")
-      // ingest tick: the 5 newest vectors, assigned to the FROZEN
-      // seeds, merged into ONLY the touched coarse-cell partitions
+      // append sends each cc_id to ONE task → one file per cell per
+      // version; unclustered partitionBy wrote #tasks files per dir —
+      // the 181 s sf10m regression); v2: the ingest tick — the 5
+      // newest vectors, assigned to the FROZEN seeds, appended to
+      // ONLY the touched coarse-cell partitions
+      Snapshots.appendPartitions(
+        allIdx.filter(col("vec_id") <= mxv - 5), base, "cc_id")
       val batch = allIdx.filter(col("vec_id") > mxv - 5)
       val touchedCells = batch.select(col("cc_id")).distinct()
       val touched = batch.select(col("c_id")).distinct()
-      val v2 = Snapshots.commitPartitions(
-        semdedupIndexMergeFrames(Snapshots.readAsOf(s, base, v1), batch)
-          .repartition(col("cc_id")),
-        base, "cc_id")
+      val v2 = Snapshots.appendPartitions(batch, base, "cc_id")
       // at-ingest discovery: batch vectors score against their merged
       // cluster's members — the read prunes to touched CELL
       // partitions (broadcast semi on the partition key), then
@@ -1977,8 +1939,8 @@ object VectorOps extends OpModule {
     * float bytes stores as 4+8+8 ≈ 20 B of index row) — and serves
     * the query from a partition-pruned read of the committed codes.
     * The layout is `ivf_append`'s (hive-partitioned by inverted
-    * list); ingest ticks are `commitPartitions` merges that rewrite
-    * ONLY the touched list partitions.
+    * list); ingest ticks are `Snapshots.appendPartitions` commits that
+    * rewrite ONLY the touched list partitions.
     *
     * Both quantizer halves are FROZEN pure functions of the BASE
     * corpus (coarse centroids = base vec_id < 16, sub-codebooks = the
@@ -2062,21 +2024,14 @@ object VectorOps extends OpModule {
       val allRows = graft.Ckpt.boundedLocal(indexRows(emb),
         "ivfpq_append code rows",
         Some(emb)) // consumers: base commit + batch's 3 reads
-      // v1: the base index, clustered by inverted list (one file per
-      // list dir per version — the clustered-commit doctrine)
-      val v1 = Snapshots.commitPartitioned(
-        allRows.filter(col("vec_id") <= mxv - 4)
-          .repartition(col("list")), base, "list")
-      // ingest tick: the 4 newest vectors, encoded against the FROZEN
-      // halves, merged into ONLY the touched list partitions
-      val batch = allRows.filter(col("vec_id") > mxv - 4)
-      val touched = batch.select(col("list")).distinct()
-      val merged = Snapshots.readAsOf(s, base, v1)
-        .join(broadcast(touched), Seq("list"), "left_semi")
-        .select(col("list"), col("vec_id"), col("ck"))
-        .unionByName(batch)
-      val v2 = Snapshots.commitPartitions(
-        merged.repartition(col("list")), base, "list")
+      // v1: the base index; v2: the ingest tick — the 4 newest
+      // vectors, encoded against the FROZEN halves and appended to
+      // ONLY the touched list partitions. Both commits are clustered
+      // one file per list dir per version.
+      Snapshots.appendPartitions(
+        allRows.filter(col("vec_id") <= mxv - 4), base, "list")
+      val v2 = Snapshots.appendPartitions(
+        allRows.filter(col("vec_id") > mxv - 4), base, "list")
       // the query: the newest vector probes the merged index — top-2
       // lists, ADC table from its sub-vectors, then a PRUNED read of
       // the committed code longs only (the vec_id = mxv point filter

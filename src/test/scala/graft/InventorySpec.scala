@@ -17,6 +17,23 @@ class InventorySpec extends AnyFunSuite {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("Bench sets name declared queries; an unknown set name fails " +
+      "and lists the valid ones") {
+    for ((name, keys) <- Bench.sets) {
+      val missing = keys.filterNot(SparkEntry.queries.contains)
+      assert(missing.isEmpty, s"set $name names undeclared keys: $missing")
+    }
+    assert(Bench.selectSet(None) == Bench.headline)
+    assert(Bench.selectSet(Some("append")) == Bench.append)
+    assert(Bench.selectSet(Some("custom:topk, pagerank,")) ==
+      Seq("topk", "pagerank"))
+    val e = intercept[IllegalArgumentException](
+      Bench.selectSet(Some("r14")))
+    Bench.sets.foreach { case (name, _) =>
+      assert(e.getMessage.contains(name), e.getMessage)
+    }
+  }
+
   test("flagship entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -610,6 +610,143 @@ class SourcesSpec extends AnyFunSuite {
       Set((1, "x", "a"), (3, "z", "b")))
   }
 
+  /** Every path under `base` (dirs and files), for before/after
+    * comparisons of commits that must write nothing. */
+  private def pathsUnder(base: String): Set[String] = {
+    val st = java.nio.file.Files.walk(java.nio.file.Paths.get(base))
+    try st.iterator().asScala.map(_.toString).toSet finally st.close()
+  }
+
+  /** The hive partition dirs that version `v`'s own data dir holds. */
+  private def ownPartitions(base: String, v: Long): Set[String] = {
+    val root = java.nio.file.Paths.get(base)
+    val dir = java.nio.file.Files.list(root).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith(s"v=$v-")).toSeq
+    assert(dir.size == 1, s"version $v data dirs: $dir")
+    java.nio.file.Files.list(root.resolve(dir.head)).iterator().asScala
+      .map(_.getFileName.toString).filter(_.contains("=")).toSet
+  }
+
+  test("snapshots: appendPartitions seeds a fresh table as " +
+      "commitPartitioned does, then rewrites only the touched " +
+      "partitions, one file each") {
+    import spark.implicits._
+    val full = (1 to 3)
+      .flatMap(p => (1 to 50).map(i => (p * 100 + i, s"s$i", s"p$p")))
+      .toDF("k", "s", "part").repartition(4)
+    val base = tmp() + "/append"
+    val ref = tmp() + "/append_ref"
+    assert(sources.Snapshots.appendPartitions(full, base, "part") == 1L)
+    sources.Snapshots.commitPartitioned(full, ref, "part")
+    assert(snapshot(base, 1L) == snapshot(ref, 1L))
+    assert(sources.Snapshots.partitionFiles(spark, base, 1L)
+      .forall(_._2 == 1), "the seed is not one file per partition")
+    val batch = Seq((900, "x", "p2"), (901, "y", "p4")).toDF("k", "s", "part")
+    val v2 = sources.Snapshots.appendPartitions(batch, base, "part")
+    assert(v2 == 2L)
+    assert(ownPartitions(base, v2) == Set("part=p2", "part=p4"))
+    val files = sources.Snapshots.partitionFiles(spark, base, v2)
+    assert(files.map(_._1).toSet ==
+      Set("part=p1", "part=p2", "part=p3", "part=p4"))
+    assert(files.forall(_._2 == 1), s"not one file per partition: $files")
+    assert(sources.Snapshots.readAsOf(spark, base, v2)
+      .as[(Int, String, String)].collect().toSet ==
+      full.as[(Int, String, String)].collect().toSet ++
+        Set((900, "x", "p2"), (901, "y", "p4")))
+    // the appended version reads back as a partitionBy write of the
+    // same rows would, schema included
+    val vRef = sources.Snapshots.commitPartitioned(
+      sources.Snapshots.readAsOf(spark, base, v2), ref, "part")
+    assert(snapshot(base, v2) == snapshot(ref, vRef))
+  }
+
+  test("snapshots: an empty append commits nothing, a committed " +
+      "version is not rewritten, and mismatched columns are refused") {
+    import spark.implicits._
+    val base = tmp() + "/append_noop"
+    val rows = Seq((1, "x", "a"), (2, "y", "b")).toDF("k", "s", "part")
+    val empty = rows.filter(col("k") > 99)
+    // a fresh table: nothing seeded, no dir left
+    assert(sources.Snapshots.appendPartitions(empty, base, "part") == 0L)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(base)) ||
+      pathsUnder(base).forall(p => !p.contains("v=")))
+    val v1 = sources.Snapshots.appendPartitions(rows, base, "part")
+    val before = pathsUnder(base)
+    assert(sources.Snapshots.appendPartitions(empty, base, "part") == v1)
+    assert(!sources.Snapshots.appendPartitionsAs(empty, base, "part", 5L))
+    assert(pathsUnder(base) == before, "an empty append left files")
+    assert(sources.Snapshots.versions(spark, base) == Seq(v1))
+    // a committed version: false, nothing written
+    assert(!sources.Snapshots.appendPartitionsAs(
+      Seq((3, "z", "a")).toDF("k", "s", "part"), base, "part", v1))
+    assert(pathsUnder(base) == before, "a replayed append wrote files")
+    // the data-column refusal fires before anything is written
+    Seq(
+      Seq((1L, "x", "a")).toDF("k", "s", "part"),
+      Seq((1, "x", 2, "a")).toDF("k", "s", "extra", "part"),
+      Seq((1, "a")).toDF("k", "part")).foreach { df =>
+      val e = intercept[IllegalArgumentException](
+        sources.Snapshots.appendPartitions(df, base, "part"))
+      assert(e.getMessage.contains("k:int, s:string"), e.getMessage)
+      intercept[IllegalArgumentException](
+        sources.Snapshots.appendPartitionsAs(df, base, "part", 7L))
+    }
+    assert(pathsUnder(base) == before, "a refused append left files")
+    // the fixed-version form appends on top of the latest version
+    assert(sources.Snapshots.appendPartitionsAs(
+      Seq((3, "z", "a")).toDF("k", "s", "part"), base, "part", 7L))
+    assert(sources.Snapshots.readAsOf(spark, base, 7L)
+      .as[(Int, String, String)].collect().toSet ==
+      Set((1, "x", "a"), (2, "y", "b"), (3, "z", "a")))
+  }
+
+  test("snapshots: an append built before a concurrent append " +
+      "committed keeps the winner's rows") {
+    import spark.implicits._
+    val base = tmp() + "/append_stale"
+    sources.Snapshots.appendPartitions(
+      Seq((1, "p"), (9, "q")).toDF("id", "part"), base, "part")
+    // writer B holds its batch from before writer A's append lands
+    val b = Seq((3, "p")).toDF("id", "part")
+    assert(sources.Snapshots.appendPartitions(
+      Seq((2, "p")).toDF("id", "part"), base, "part") == 2L)
+    assert(sources.Snapshots.appendPartitions(b, base, "part") == 3L)
+    assert(sources.Snapshots.readAsOf(spark, base, 3L)
+      .as[(Int, String)].collect().toSet ==
+      Set((1, "p"), (2, "p"), (3, "p"), (9, "q")))
+  }
+
+  test("snapshots: two appends racing for one version both commit " +
+      "and the latest version holds both rows") {
+    import spark.implicits._
+    val base = tmp() + "/append_race"
+    sources.Snapshots.appendPartitions(
+      Seq((1, "p"), (9, "q")).toDF("id", "part"), base, "part")
+    // the slow batch finishes its write after the fast one committed
+    // the version both started on, so its manifest create finds the
+    // winner's manifest and marker
+    val slow = udf { (id: Int) => Thread.sleep(5000); id }
+    val batches = Seq(
+      Seq((2, "p")).toDF("id", "part"),
+      Seq((3, "p")).toDF("id", "part").withColumn("id", slow(col("id"))))
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val versions = new Array[Long](2)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val threads = batches.zipWithIndex.map { case (df, i) =>
+      new Thread(() => {
+        barrier.await()
+        try versions(i) = sources.Snapshots.appendPartitions(df, base, "part")
+        catch { case e: Throwable => errors.add(e) }
+      })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(errors.isEmpty, errors.asScala.map(_.toString).mkString("; "))
+    assert(versions.sorted.toSeq == Seq(2L, 3L), versions.toSeq)
+    assert(sources.Snapshots.readAsOf(spark, base, 3L)
+      .as[(Int, String)].collect().toSet ==
+      Set((1, "p"), (2, "p"), (3, "p"), (9, "q")))
+  }
+
   test("zorder_write: the z-clustered layout makes most files " +
       "skippable for a both-dim predicate; round-robin makes none") {
     // the pruning evidence behind the declared zorder_write op: write

@@ -1101,6 +1101,30 @@ class StreamingSpec extends AnyFunSuite {
     assert(want.size == 24)
   }
 
+  test("semdedupIndexMerge: a pre-coarse-cell index (partitioned by " +
+      "c_id) fails with the migration path, writing nothing") {
+    import spark.implicits._
+    ext.GraftFunctions.register(spark)
+    val base = freshDir() + "/sem_idx_old"
+    def emb(i: Long): Array[Float] =
+      Array.tabulate(8)(j => (((i * 31 + j * 17) % 13) - 6).toFloat / 6f)
+    val vecs = (0L until 12L).map(i => (i, emb(i)))
+    val seeds = vecs.take(4).toDF("c_id", "c_emb")
+    // the one-dir-per-cluster layout: the rollup without its cc_id
+    sources.Snapshots.commitPartitioned(
+      vec.VectorOps.semdedupIndexRollup(
+        vecs.take(8).toDF("vec_id", "embedding"), seeds).drop("cc_id"),
+      base, "c_id")
+    val e = intercept[IllegalArgumentException](
+      streaming.StreamOps.semdedupIndexMerge(
+        vecs.drop(8).toDF("vec_id", "embedding"), 1L, base, seeds))
+    assert(e.getMessage.contains(
+      "persisted semantic index predates the coarse-cell layout"),
+      e.getMessage)
+    assert(e.getMessage.contains("Graft.reclusterSem"), e.getMessage)
+    assert(sources.Snapshots.versions(spark, base) == Seq(1L))
+  }
+
   test("sf1 replay throughput: minhash band-index ingest") {
     import spark.implicits._
     assume(new java.io.File("/tmp/sf1/documents.parquet").exists(),
