@@ -1481,17 +1481,9 @@ object Graft {
     val e2 = Snapshots.readAsOf(s, base, v2)
     val v3 = Snapshots.commit(
       graft.text.CurationOps.nearDupSurvivors(e2, threshold), base)
-    def stageRow(no: Int, name: String, v: Long): DataFrame =
-      Snapshots.readAsOf(s, base, v)
-        .agg(count(lit(1)).as("n_docs"),
-          // a stage that legitimately keeps zero docs sums to NULL —
-          // downstream getLong consumers NPE; 0 is the true total
-          coalesce(sum(col("n_tokens")), lit(0L)).as("n_tokens"))
-        .select(lit(no).as("stage_no"), lit(name).as("stage"),
-          col("n_docs"), col("n_tokens"), lit(v).as("version"))
-    val report3 = stageRow(1, "quality", v1)
-      .unionByName(stageRow(2, "dedup_exact", v2))
-      .unionByName(stageRow(3, "dedup_near", v3))
+    val report3 = stageRow(s, 1, "quality", base, v1)
+      .unionByName(stageRow(s, 2, "dedup_exact", base, v2))
+      .unionByName(stageRow(s, 3, "dedup_near", base, v3))
     embeddings match {
       case None => report3
       case Some(embAll) =>
@@ -1506,9 +1498,21 @@ object Graft {
         val dropped = semanticDroppedIds(ne, seeds, semThreshold)
         val v4 = Snapshots.commit(
           e3.join(dropped, Seq("doc_id"), "left_anti"), base)
-        report3.unionByName(stageRow(4, "dedup_semantic", v4))
+        report3.unionByName(stageRow(s, 4, "dedup_semantic", base, v4))
     }
   }
+
+  /** One row (stage_no, stage, n_docs, n_tokens, version) of the
+    * [[curate]] / [[curateIngest]] report: `table` read at `v`. */
+  private def stageRow(s: SparkSession, no: Int, name: String,
+      table: String, v: Long): DataFrame =
+    graft.sources.Snapshots.readAsOf(s, table, v)
+      .agg(count(lit(1)).as("n_docs"),
+        // a stage that legitimately keeps zero docs sums to NULL —
+        // downstream getLong consumers NPE; 0 is the true total
+        coalesce(sum(col("n_tokens")), lit(0L)).as("n_tokens"))
+      .select(lit(no).as("stage_no"), lit(name).as("stage"),
+        col("n_docs"), col("n_tokens"), lit(v).as("version"))
 
   /** The semantic-dedup drop set shared by [[curate]] and
     * [[curateIngest]]'s one-shot form: assign `embedded` (doc_id,
@@ -1572,20 +1576,25 @@ object Graft {
     * Returns the [[curate]]-shaped report (stage_no, stage, n_docs,
     * n_tokens, version) from the three committed survivor tables.
     *
-    * `version` (None for batch callers) switches the commit protocol
-    * to a CALLER-FIXED version — the streaming `foreachBatch` ledger
-    * mode ([[graft.streaming.StreamOps.curateStreamMerge]] passes
-    * batchId + 1): every stage table commits AT `v` via
-    * `appendPartitionsAs` (`commitAs` for `semseeds/`), a stage whose
-    * `v` is already committed is skipped (per-TABLE idempotency — a tick
-    * that crashed between stage commits resumes exactly where it
-    * died), and every pre-tick read uses `latestBefore(table, v)` so
-    * a replayed tick recomputes against the same table states the
-    * first attempt saw (plain `latest` would include the crashed
-    * attempt's own partial commits and double-merge). Per-table
-    * idempotency is sufficient for exactly-once overall because each
-    * stage's output is a deterministic function of (batch, pre-tick
-    * table states) — the monotone-doc_id contract again.
+    * Every call is one LEDGER TICK at a single version `v` shared by
+    * all of the tick's tables ([[curateTables]]): the caller's
+    * `version` (the streaming `foreachBatch` ledger —
+    * [[graft.streaming.StreamOps.curateStreamMerge]] passes
+    * batchId + 1), or, when `version` is None, the next free version
+    * 1 + the highest committed version across those tables. Every
+    * stage table commits AT `v` via `appendPartitionsAs` (`commitAs`
+    * for `semseeds/`), a stage whose `v` is already committed is
+    * skipped (per-TABLE idempotency — a tick that crashed between
+    * stage commits resumes exactly where it died when it is replayed
+    * at the same `version`), and every pre-tick read uses
+    * `latestBefore(table, v)` so a replayed tick recomputes against
+    * the same table states the first attempt saw (plain `latest`
+    * would include the crashed attempt's own partial commits and
+    * double-merge). Per-table idempotency is sufficient for
+    * exactly-once overall because each stage's output is a
+    * deterministic function of (batch, pre-tick table states) — the
+    * monotone-doc_id contract again. A first tick whose batch keeps
+    * no quality survivor commits nothing and returns an empty report.
     *
     * `embeddings` (r16) arms the semantic FOURTH stage: a static
     * (doc_id, embedding) lookup the tick joins against. Three more
@@ -1602,22 +1611,10 @@ object Graft {
     * survivors of the seed tick — under the monotone-id contract
     * those ARE the corpus's k lowest, making ticks ≡ [[curate]]'s
     * one-shot stage exactly (give the seed batch ≥ semK embedded
-    * survivors; fewer freezes a smaller set and logs).
-    *
-    * Guard asymmetry (VERDICT r18): only LEDGER mode (`version`
-    * fixed) tracks the RUNNING ingested max across ticks — batch
-    * mode (`version = None`) keeps the cheaper seed-tick-max-only
-    * guard, because the running-max sidecar's always-on min/max
-    * batch scan measured ~+2–3.5 s per one-shot curate at sf10m for
-    * a protection only multi-tick composition needs. Consequence: a
-    * caller composing REPEATED batch-mode `curateIngest` calls can
-    * ingest a batch that is above the frozen seed max but below an
-    * earlier batch's max without tripping the monotone-id guard
-    * (the seed set stays valid; pair evidence may silently differ
-    * from a one-shot curate). If you ingest more than once into the
-    * same `base`, run in ledger mode — pass an increasing `version`
-    * — which detects exactly that case via the per-tick
-    * `_ledger/ingest_max` sidecar. */
+    * survivors; fewer freezes a smaller set and logs). A batch whose
+    * min doc_id is at or below the running ingested max (the
+    * per-tick `_ledger/ingest_max` sidecar) or the seed tick's
+    * `seed_max_id` logs a counted monotone-id warning. */
   def curateIngest(batch: DataFrame, base: String,
       threshold: Double = 0.4,
       version: Option[Long] = None,
@@ -1628,15 +1625,14 @@ object Graft {
     graft.ext.GraftFunctions.register(s)
     import graft.sources.Snapshots
     import graft.text.{CurationOps, SimilarityOps}
-    val qT = s"$base/quality"; val eT = s"$base/exact"
-    val nT = s"$base/near"; val bT = s"$base/bands"
+    val tables = curateTables(base, embeddings.isDefined)
+    val Seq(qT, eT, nT, bT) = tables.take(4)
     val survivorCols = Seq("hp", "h", "doc_id", "text", "n_tokens")
-    // the pre-tick read point: in ledger mode, the latest version
-    // BELOW the tick's own (replay must not see the crashed attempt's
-    // partial commits); in batch mode, plain latest
-    def preV(table: String): Long = version
-      .map(v => Snapshots.latestBefore(s, table, v))
-      .getOrElse(Snapshots.latest(s, table))
+    val v = version.getOrElse(
+      1L + tables.map(t => Snapshots.latest(s, t)).max)
+    // the pre-tick read point: the latest version BELOW the tick's
+    // own (replay must not see the crashed attempt's partial commits)
+    def preV(table: String): Long = Snapshots.latestBefore(s, table, v)
     // Overlap the stage-table commits with the next stage's compute
     // (guide §2.6 — independent actions submitted from a small pool
     // back-fill each other): a stage's commit is consumed only by
@@ -1680,15 +1676,10 @@ object Graft {
       .withColumn("hp", substring(col("h"), 1, 1))
       .select(survivorCols.map(col): _*)
       .localCheckpoint() // consumers: quality merge + exact stage
-    val seeded = preV(qT) > 0L
-    if (version.isEmpty)
-      require(seeded || !qb.isEmpty,
-        "curateIngest's first batch must contain at least one " +
-          "quality survivor — an empty frame cannot seed the tables")
-    else if (!seeded && qb.isEmpty) {
-      // ledger mode can't throw on a degenerate first tick — the
-      // stream must keep running; the tick leaves a version gap on
-      // all four tables and reports nothing
+    if (preV(qT) == 0L && qb.isEmpty) {
+      // a degenerate first tick can't throw — a stream must keep
+      // running; the tick leaves a version gap on every table and
+      // reports nothing
       import s.implicits._
       return Seq.empty[(Int, String, Long, Long, Long)]
         .toDF("stage_no", "stage", "n_docs", "n_tokens", "version")
@@ -1698,7 +1689,7 @@ object Graft {
     // concurrent second writer took it, violating the single-writer-
     // per-table contract and interleaving another stream's rows into
     // the ledger). Silent before r16 (ADVICE); now always surfaced.
-    def unconfirmed(table: String, v: Long): Unit =
+    def unconfirmed(table: String): Unit =
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"curateIngest: fixed-version commit of $table@$v returned " +
           "false — the version was committed by someone else between " +
@@ -1707,24 +1698,18 @@ object Graft {
           "writer shares the table, the single-writer contract is " +
           "broken and the stage's reported rows are the other " +
           "writer's. Audit the table's writers.")
-    // the batch/ledger append dispatch, shared by every stage table
-    // (Snapshots.appendPartitions builds the touched-partitions merge,
-    // clusters it one file per partition, seeds a fresh table and
-    // commits nothing for empty rows): batch mode appends at the
-    // optimistic next version, ledger mode AT the tick's fixed
-    // version, skipping a table that already holds it (per-table
-    // resume). Returns the version the report reads: the tick's, or
-    // the table's pre-tick version when `rows` was empty.
+    // the append shared by every stage table (Snapshots.appendPartitionsAs
+    // builds the touched-partitions merge, clusters it one file per
+    // partition, seeds a fresh table and commits nothing for empty
+    // rows) AT the tick's version, skipping a table that already holds
+    // it (per-table resume). Returns the version the report reads: the
+    // tick's, or the table's pre-tick version when `rows` was empty.
     def append(table: String, rows: DataFrame, partCol: String): Long =
-      version match {
-        case None => Snapshots.appendPartitions(rows, table, partCol)
-        case Some(v) =>
-          if (Snapshots.versionExists(s, table, v) ||
-              Snapshots.appendPartitionsAs(rows, table, partCol, v)) v
-          else if (Snapshots.versionExists(s, table, v)) {
-            unconfirmed(table, v); v
-          } else preV(table) // empty rows: nothing to commit this tick
-      }
+      if (Snapshots.versionExists(s, table, v) ||
+          Snapshots.appendPartitionsAs(rows, table, partCol, v)) v
+      else if (Snapshots.versionExists(s, table, v)) {
+        unconfirmed(table); v
+      } else preV(table) // empty rows: nothing to commit this tick
     def survivors(rows: DataFrame): DataFrame =
       rows.select(survivorCols.map(col): _*)
     val fQ = asyncCommit(append(qT, survivors(qb), "hp"))
@@ -1798,81 +1783,67 @@ object Graft {
     // unseeded (version gaps) until the seed tick.
     val semStage = embeddings.map { embAll =>
       import graft.vec.VectorOps
-      val sT = s"$base/sem"; val iT = s"$base/semidx"
-      val dT = s"$base/semseeds"
-      // rebuild-collision guard (ADVICE r17): a batch-mode
-      // reclusterSem run against a ledger pipeline commits
-      // semseeds/semidx at latest+1 — versions that land in (or
-      // outrun) future tick slots, so later ticks would skip their
-      // semidx merge as "replays" or read cross-epoch seeds/index.
-      // Two fingerprints, both failed loudly with the migration
-      // path: (1) a ledger pipeline freezes seeds exactly ONCE (the
-      // seed tick; reclusterSemLedger's reset also leaves exactly
-      // one version), so a second semseeds version can only be a
-      // batch-mode rebuild or a foreign writer; (2) a table ahead of
-      // this tick's version without this version committed (a
-      // genuine replay always has its own version committed).
-      version.foreach { v =>
-        val dvs = Snapshots.versions(s, dT)
-        require(dvs.size <= 1,
-          s"curateIngest: $dT has ${dvs.size} committed versions " +
-            s"(${dvs.mkString(", ")}) — a fixed-version ledger " +
-            "freezes seeds exactly once, so a second version means " +
-            "a batch-mode Graft.reclusterSem (or a second writer) " +
-            "has run against this pipeline's tables. Stop the " +
-            "stream at a tick boundary and rebuild with " +
-            "Graft.reclusterSemLedger(lastBatchId), which resets " +
-            "the semantic tables into the tick version space")
-        Seq(dT, iT).foreach { t =>
-          val lt = Snapshots.latest(s, t)
-          require(lt <= v || Snapshots.versionExists(s, t, v),
-            s"curateIngest: $t is at version $lt — ahead of this " +
-              s"tick's fixed version $v, which is itself not " +
-              "committed. A batch-mode Graft.reclusterSem has run " +
-              "against this ledger-mode pipeline's tables (its " +
-              "latest+1 commits land in future tick slots). Stop " +
-              "the stream at a tick boundary and rebuild with " +
-              "Graft.reclusterSemLedger(lastBatchId) instead")
-        }
+      val Seq(sT, iT, dT) = tables.drop(4)
+      // rebuild-collision guard (ADVICE r17): a ledger freezes seeds
+      // exactly ONCE (the seed tick; reclusterSemLedger's reset also
+      // leaves exactly one version), so a second semseeds version, or
+      // a semantic table ahead of this tick's version without this
+      // version committed (a genuine replay always has its own
+      // version committed), can only come from a second writer —
+      // whose commits land in future tick slots, so later ticks would
+      // skip their semidx merge as "replays" or read cross-epoch
+      // seeds/index. Both fail loudly with the rebuild path.
+      val dvs = Snapshots.versions(s, dT)
+      require(dvs.size <= 1,
+        s"curateIngest: $dT has ${dvs.size} committed versions " +
+          s"(${dvs.mkString(", ")}) — a ledger freezes seeds exactly " +
+          "once, so a second version means a second writer has " +
+          "committed to this pipeline's tables. Stop the ticks at a " +
+          "tick boundary and rebuild with " +
+          "Graft.reclusterSemLedger(lastBatchId), which resets the " +
+          "semantic tables into the tick version space")
+      Seq(dT, iT).foreach { t =>
+        val lt = Snapshots.latest(s, t)
+        require(lt <= v || Snapshots.versionExists(s, t, v),
+          s"curateIngest: $t is at version $lt — ahead of this " +
+            s"tick's version $v, which is itself not committed. A " +
+            "second writer has committed to this pipeline's tables " +
+            "(its commits land in future tick slots). Stop the ticks " +
+            "at a tick boundary and rebuild with " +
+            "Graft.reclusterSemLedger(lastBatchId)")
       }
       val nbe = nb.select(col("doc_id"))
         .join(embAll.select(col("doc_id"), col("embedding")),
           Seq("doc_id"))
         .localCheckpoint() // consumers: seed slice + assignment rollup
-      def seedCommitFlat(rows: DataFrame, table: String): Long =
-        version match {
-          case Some(v) =>
-            if (!Snapshots.commitAs(rows, table, v)) unconfirmed(table, v)
-            v
-          case None => Snapshots.commit(rows, table)
-        }
       // running ingest max (ADVICE r17): the seed-tick max alone
       // misses a batch arriving above it but below a PREVIOUSLY
       // committed batch's max — also a monotone-contract break (the
       // 'committed rows are the lower-id side' pair evidence). Each
-      // LEDGER tick records running-max(ingested doc_id) as a tiny
+      // tick records running-max(ingested doc_id) as a tiny
       // driver-written sidecar keyed by its version; the guard reads
       // the latest record STRICTLY BELOW this tick's version, so a
       // replayed tick never false-alarms against its own record.
-      // Ledger mode ONLY: batch mode keeps the seed-max-only guard —
-      // the extra full-batch min/max scan is paid exactly where
-      // replayable multi-tick semantics need the memory (a one-shot
-      // curate measured the always-on scan as ~+3.5 s at sf10m).
-      // batch mode's sidecar-free tickV is the quality commit's
-      // version — awaited only on that (rare) path
-      def tickV = version.getOrElse(await(fQ))
+      // One job: NULLs mean an empty batch.
+      val mm = batch.agg(min(col("doc_id")), max(col("doc_id"))).head
       val batchMinMax =
-        if (version.isEmpty || batch.isEmpty) None
-        else {
-          val r = batch.agg(min(col("doc_id")), max(col("doc_id"))).head
-          Some((r.getLong(0), r.getLong(1)))
-        }
-      val priorMax =
-        if (version.isDefined) readIngestMax(s, base, tickV) else None
+        if (mm.isNullAt(0)) None else Some((mm.getLong(0), mm.getLong(1)))
+      val priorMax = readIngestMax(s, base, v)
       val prevD = preV(dT)
-      val seedsT: DataFrame =
-        if (prevD > 0L) {
-          val t = Snapshots.readAsOf(s, dT, prevD)
+      // the committed seed set this tick assigns against: the
+      // pre-tick version, or this tick's own on a replayed seed tick
+      val seedV =
+        if (prevD > 0L) prevD
+        else if (Snapshots.versionExists(s, dT, v)) v
+        else 0L
+      // (seeds, non-empty flag)
+      val (seedsT, hasSeeds) =
+        if (seedV > 0L) {
+          val t = Snapshots.readAsOf(s, dT, seedV)
+          // one job: the seed count and the freeze tick's recorded max
+          val r = t.agg(count(lit(1)),
+            if (t.columns.contains("seed_max_id")) max(col("seed_max_id"))
+            else lit(null).cast("long")).head
           // monotone-id guard (VERDICT r16 #5): the frozen seed set
           // is the corpus's semK lowest ids ONLY under the
           // monotone-doc_id append contract. A batch dipping below
@@ -1881,14 +1852,10 @@ object Graft {
           // the full corpus would have picked a different seed set
           // or different pair evidence — convert that silent
           // divergence into a loud, counted warning.
-          if (t.columns.contains("seed_max_id") && !batch.isEmpty) {
-            val recorded = math.max(
-              t.agg(max(col("seed_max_id"))).head.getLong(0),
+          if (prevD > 0L && !r.isNullAt(1) && batchMinMax.isDefined) {
+            val recorded = math.max(r.getLong(1),
               priorMax.getOrElse(Long.MinValue))
-            // ledger mode already has the batch min; batch mode
-            // computes it here (only when seeds exist — r17's cost)
-            val bmin = batchMinMax.map(_._1).getOrElse(
-              batch.agg(min(col("doc_id"))).head.getLong(0))
+            val bmin = batchMinMax.get._1
             if (bmin <= recorded) {
               monotoneWarnings.incrementAndGet()
               org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -1898,50 +1865,50 @@ object Graft {
                   "frozen seeds are NOT the corpus's lowest ids " +
                   "and/or committed rows are no longer the lower-id " +
                   "pair side; tick results diverge from a one-shot " +
-                  "curate. Re-cluster (Graft.reclusterSem, or " +
-                  "reclusterSemLedger for a ledger stream) or fix " +
-                  "the feed order")
+                  "curate. Re-cluster with Graft.reclusterSemLedger " +
+                  "or fix the feed order")
             }
           }
-          t
+          (t, r.getLong(0) > 0L)
         }
-        else if (version.exists(v => Snapshots.versionExists(s, dT, v)))
-          Snapshots.readAsOf(s, dT, version.get) // replayed seed tick
-        else if (nbe.isEmpty) // nothing to seed from yet: pass-through
-          nbe.limit(0).select(col("doc_id").as("c_id"),
-            col("embedding").as("c_emb"))
         else {
           val sd = nbe.orderBy(col("doc_id")).limit(semK)
             .select(col("doc_id").as("c_id"),
               col("embedding").as("c_emb"))
-            .localCheckpoint() // consumers: count, max, commit, rollup
-          val nSeeds = sd.count()
-          if (nSeeds < semK)
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"curateIngest: seeding $dT with $nSeeds < semK=$semK " +
-                "embedded survivors — the frozen seed set is smaller " +
-                "than requested, and a one-shot curate over the full " +
-                "corpus would pick a different (larger) set; for " +
-                "tick ≡ one-shot give the seed batch ≥ semK embedded " +
-                "docs")
-          // the guard metadata: every seed row carries the freeze
-          // tick's max seed id (constant column — the snapshot
-          // commit IS the record)
-          val sdMax = sd.agg(max(col("c_id"))).head.getLong(0)
-          seedCommitFlat(sd.withColumn("seed_max_id", lit(sdMax)), dT)
-          sd
+            .localCheckpoint() // consumers: count/max, commit, rollup
+          val r = sd.agg(count(lit(1)), max(col("c_id"))).head
+          val nSeeds = r.getLong(0)
+          // no embedded survivor yet: nothing to seed from, so the
+          // stage passes the batch through and semseeds stays a gap
+          if (nSeeds > 0L) {
+            if (nSeeds < semK)
+              org.slf4j.LoggerFactory.getLogger(getClass).warn(
+                s"curateIngest: seeding $dT with $nSeeds < semK=$semK " +
+                  "embedded survivors — the frozen seed set is smaller " +
+                  "than requested, and a one-shot curate over the full " +
+                  "corpus would pick a different (larger) set; for " +
+                  "tick ≡ one-shot give the seed batch ≥ semK embedded " +
+                  "docs")
+            // the guard metadata: every seed row carries the freeze
+            // tick's max seed id (constant column — the snapshot
+            // commit IS the record)
+            if (!Snapshots.commitAs(
+                sd.withColumn("seed_max_id", lit(r.getLong(1))), dT, v))
+              unconfirmed(dT)
+          }
+          (sd, nSeeds > 0L)
         }
       // record this tick's running max (idempotent on replay: the
       // same batch re-derives the same value)
       batchMinMax.foreach { case (_, bmax) =>
-        writeIngestMax(s, base, tickV,
+        writeIngestMax(s, base, v,
           math.max(priorMax.getOrElse(Long.MinValue), bmax))
       }
       // the assignment kernels take exactly (c_id, c_emb); the guard
       // column stays in the table, not the kernel input
       val seeds = seedsT.select(col("c_id"), col("c_emb"))
       val dropped =
-        if (seeds.isEmpty) nbe.limit(0).select(col("doc_id"))
+        if (!hasSeeds) nbe.limit(0).select(col("doc_id"))
         else {
           val batchIdx = VectorOps.semdedupIndexRollup(
             nbe.select(col("doc_id").as("vec_id"), col("embedding")),
@@ -1962,8 +1929,7 @@ object Graft {
                 s"curateIngest: persisted semantic index $iT " +
                   "predates the coarse-cell layout (no cc_id " +
                   "partition column) — rebuild it with " +
-                  "Graft.reclusterSem (ledger streams: " +
-                  "reclusterSemLedger) before ticking against it")
+                  "Graft.reclusterSemLedger before ticking against it")
               Some(t)
             }
           // evidence = committed index (all earlier embedded stage-3
@@ -1997,22 +1963,16 @@ object Graft {
       val fS = asyncCommit(append(sT, survivors(sb), "hp"))
       (sT, fS)
     }
-    def stageRow(no: Int, name: String, table: String,
-        v: Long): DataFrame =
-      Snapshots.readAsOf(s, table, v)
-        .agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(col("n_tokens")), lit(0L)).as("n_tokens"))
-        .select(lit(no).as("stage_no"), lit(name).as("stage"),
-          col("n_docs"), col("n_tokens"), lit(v).as("version"))
     // the commit barrier: EVERY submitted commit (bands and semidx
     // have no report row) lands before the report reads versions
     // back and before the tick returns
     pending.toList.foreach(await)
-    val report3 = stageRow(1, "quality", qT, await(fQ))
-      .unionByName(stageRow(2, "dedup_exact", eT, await(fE)))
-      .unionByName(stageRow(3, "dedup_near", nT, await(fN)))
+    val report3 = stageRow(s, 1, "quality", qT, await(fQ))
+      .unionByName(stageRow(s, 2, "dedup_exact", eT, await(fE)))
+      .unionByName(stageRow(s, 3, "dedup_near", nT, await(fN)))
     semStage.map { case (sT, fS) =>
-      report3.unionByName(stageRow(4, "dedup_semantic", sT, await(fS)))
+      report3.unionByName(
+        stageRow(s, 4, "dedup_semantic", sT, await(fS)))
     }.getOrElse(report3)
     } // tick()
     try tick()
@@ -2025,17 +1985,26 @@ object Graft {
     } finally commitPool.shutdown()
   }
 
+  /** The snapshot tables one [[curateIngest]] tick commits under
+    * `base`: quality, exact, near and the band index, plus sem,
+    * semidx and semseeds when the semantic stage is armed. */
+  private[graft] def curateTables(base: String,
+      semantic: Boolean): Seq[String] =
+    (Seq("quality", "exact", "near", "bands") ++
+      (if (semantic) Seq("sem", "semidx", "semseeds") else Nil))
+      .map(t => s"$base/$t")
+
   /** STREAMING curation — the third member of the family
-    * ([[curate]] one-shot audit, [[curateIngest]] batch ticks, this
+    * ([[curate]] one-shot audit, [[curateIngest]] ledger ticks, this
     * op a continuous crawl): attaches
     * `graft.streaming.StreamOps.curateStreamMerge` as the
     * `foreachBatch` body of `docs` (a streaming DataFrame of
     * doc_id/text/n_chars rows, doc_ids monotone across batches — the
-    * append contract) and starts the query. Each micro-batch runs the
-    * curateIngest tick kernel in its fixed-version ledger mode
-    * (version = batchId + 1), so the committed stage tables under
-    * `base` are identical to batch ticks over the same slices, crash
-    * recovery is per-table resume, and replays are no-ops — see
+    * append contract) and starts the query. Each micro-batch runs one
+    * curateIngest tick at the caller-fixed version batchId + 1, so
+    * the committed stage tables under `base` are identical to
+    * curateIngest ticks over the same slices, crash recovery is
+    * per-table resume, and replays are no-ops — see
     * curateStreamMerge's scaladoc for the checkpoint–table coupling
     * caveats. The returned query runs until stopped (pair with
     * `Trigger.AvailableNow` upstream semantics by configuring the
@@ -2202,68 +2171,28 @@ object Graft {
     * grows past the frozen k the clusters fatten and the at-ingest
     * pair work drifts above its |batch|·O(τ) budget — this is the
     * rebuild that re-pins it, completing the lifecycle
-    * `semdedup_append`'s scaladoc promises).
-    *
-    * Derives FRESH seeds from the CURRENT corpus: the embedded
-    * stage-3 survivors (latest `near/` joined to the `embeddings`
-    * lookup), k = max(8, ⌈n/τ⌉) lowest doc_ids — `semdedup`'s τ rule
-    * sized to today's corpus, not the seed tick's — re-assigns every
-    * embedded survivor with the shared three-level kernel, and commits
-    * `semseeds/` then `semidx/` as the NEXT versions of their
-    * tables. Time-travel consistency is the snapshot tables' own:
-    * a reader pinned at version v keeps seeing the old seeds with
-    * the old index (nothing is mutated in place, so the rebuild is
-    * vacuum-safe under `Snapshots.vacuum`'s retain rules); ticks
-    * issued AFTER both commits assign against the new seeds and
-    * merge into the new index.
-    *
-    * Crash/concurrency contract (documented, like the stream trio's
-    * checkpoint–table coupling): the two commits are not atomic —
-    * do not run ingest ticks concurrently with a rebuild, and after
-    * a crash between the commits simply re-run reclusterSem (seeds
-    * are a deterministic function of the corpus, so the re-run
-    * re-derives the same set and completes the pair).
-    *
-    * BATCH-MODE ONLY (ADVICE r17): the optimistic latest+1 commits
-    * live outside the fixed-version ledger a `curateStream` /
-    * fixed-version `curateIngest` pipeline pins (tick i → version
-    * i+1), so a rebuild here can land semseeds/semidx versions that
-    * collide with — or silently outrun — upcoming tick versions.
-    * For a ledger-mode pipeline, stop the stream at a tick boundary
-    * and use [[reclusterSemLedger]] instead; the tick kernel fails
-    * loudly if it finds the semantic tables ahead of its own version
-    * without its version committed (the batch-rebuild fingerprint).
-    *
-    * Returns (semseedsVersion, semidxVersion). */
-  def reclusterSem(s: SparkSession, base: String,
-      embeddings: DataFrame, tau: Int = 100): (Long, Long) = {
-    import graft.sources.Snapshots
-    val (sdM, idx) = semRebuildFrames(s, base, embeddings, tau)
-    val vSeeds = Snapshots.commit(sdM, s"$base/semseeds")
-    // a rebuild touches every cell by definition → full partitioned
-    // commit, cell-clustered (one file per cc_id per version)
-    val vIdx = Snapshots.commitPartitioned(
-      idx.repartition(col("cc_id")), s"$base/semidx", "cc_id")
-    (vSeeds, vIdx)
-  }
-
-  /** [[reclusterSem]] for a FIXED-VERSION LEDGER pipeline
-    * (`curateStream` / `curateIngest(version = Some(_))`, where tick
-    * i commits version i+1): the executable form of the trio's
+    * `semdedup_append`'s scaladoc promises). Every [[curateIngest]]
+    * base is a ledger (tick i of a stream commits version i+1; a
+    * version-less tick commits at the next free version), so this is
+    * the one rebuild: the executable form of the stream trio's
     * "reset tables and checkpoint together" maintenance step, scoped
     * to the two semantic tables so the checkpoint and every other
     * stage table keep running untouched.
     *
-    * Protocol: STOP the stream at a tick boundary, call this with
-    * the batchId of the last COMPLETED batch, restart the stream on
-    * the same checkpoint. The rebuild derives fresh seeds and a full
-    * re-assigned index from the current corpus (exactly
-    * [[reclusterSem]]'s derivation — it reads only `near/` and
-    * `embeddings`, never the tables it replaces), then RESETS
-    * `semseeds/` and `semidx/` and commits the rebuilt contents at
-    * version lastBatchId + 1 — the last completed tick's version —
-    * so the next tick (version lastBatchId + 2) reads the new seed
-    * epoch via its latestBefore and merges strictly ahead of it.
+    * Protocol: STOP the ticks at a tick boundary, call this with
+    * `lastBatchId` = the last COMPLETED tick's version - 1 (a
+    * stream's last batchId), then resume. The rebuild derives FRESH
+    * seeds from the CURRENT corpus — the embedded stage-3 survivors
+    * (latest `near/` joined to the `embeddings` lookup), k = max(8,
+    * ⌈n/τ⌉) lowest doc_ids, `semdedup`'s τ rule sized to today's
+    * corpus, not the seed tick's — and re-assigns every embedded
+    * survivor with the shared three-level kernel (it reads only
+    * `near/` and `embeddings`, never the tables it replaces), then
+    * RESETS `semseeds/` and `semidx/` and commits the rebuilt
+    * contents at version lastBatchId + 1 — the last completed tick's
+    * version — so the next tick (version lastBatchId + 2) reads the
+    * new seed epoch via its latestBefore and merges strictly ahead
+    * of it.
     *
     * The reset DELETES the two tables' history (they are derived
     * indexes — rebuildable from near/ + embeddings at any time; the
@@ -2322,7 +2251,7 @@ object Graft {
     val nT = s"$base/near"
     val vN = Snapshots.latest(s, nT)
     require(vN > 0L,
-      s"reclusterSem needs a curated corpus under $base — no " +
+      s"reclusterSemLedger needs a curated corpus under $base — no " +
         "committed near/ version found (run curate ticks first)")
     val ne = Snapshots.readAsOf(s, nT, vN).select(col("doc_id"))
       .join(embeddings.select(col("doc_id"), col("embedding")),
@@ -2330,7 +2259,7 @@ object Graft {
       .localCheckpoint() // consumers: count + seed slice + rollup
     val n = ne.count()
     require(n > 0L,
-      "reclusterSem: no embedded stage-3 survivors to cluster")
+      "reclusterSemLedger: no embedded stage-3 survivors to cluster")
     val k = math.max(8L, math.ceil(n.toDouble / tau).toLong)
     // the k lowest SURVIVOR ids (sparse — the semdedup ops' dense
     // `id < k` rule doesn't apply): the global top-k runs on the

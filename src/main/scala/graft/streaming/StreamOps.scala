@@ -525,9 +525,10 @@ object StreamOps {
       require(prevV == 0L ||
         Snapshots.readAsOf(s, base, prevV).columns.contains("cc_id"),
         "persisted semantic index predates the coarse-cell layout " +
-          "(no cc_id partition column) — rebuild it against the " +
-          "current seeds with Graft.reclusterSem (or re-run the base " +
-          "build) before merging new batches")
+          "(no cc_id partition column) — re-run the base build " +
+          "against the current seeds (semdedupIndexRollup over the " +
+          "indexed corpus, appended by cc_id to a fresh table) before " +
+          "merging new batches")
       // an empty batch appends nothing; v stays a gap
       Snapshots.appendPartitionsAs(
         VectorOps.semdedupIndexRollup(batch, seeds)
@@ -543,9 +544,9 @@ object StreamOps {
     * product-level capstone over the three single-index maintainers
     * ([[dedupIndexMerge]] / [[minhashIndexMerge]] /
     * [[semdedupIndexMerge]]). The tick kernel IS `curateIngest` run
-    * in its fixed-version ledger mode (version = batchId + 1), so
-    * stream and batch curation cannot drift — StreamingSpec asserts
-    * streamed ≡ tick-by-tick ≡ one-shot per stage table.
+    * at the caller-fixed version batchId + 1, so stream and batch
+    * curation cannot drift — StreamingSpec asserts streamed ≡
+    * tick-by-tick ≡ one-shot per stage table.
     *
     * Exactly-once differs from the single-table maintainers in one
     * way: a tick commits FOUR tables, so the guard is per-TABLE, not
@@ -588,10 +589,7 @@ object StreamOps {
     import graft.sources.Snapshots
     val s = batch.sparkSession
     val v = batchId + 1
-    val tables = (Seq("quality", "exact", "near", "bands") ++
-      (if (embeddings.isDefined) Seq("sem", "semidx", "semseeds")
-       else Nil))
-      .map(t => s"$base/$t")
+    val tables = graft.api.Graft.curateTables(base, embeddings.isDefined)
     val marked = tables.filter(t => Snapshots.versionExists(s, t, v))
     if (marked.size == tables.size) {
       replayGuard(s, tables.head, v, "curateStreamMerge")

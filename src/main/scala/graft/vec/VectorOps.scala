@@ -1118,8 +1118,8 @@ object VectorOps extends OpModule {
     * hash-mismatches. Re-clustering (new k as the corpus grows) is a
     * full rebuild committed as the next snapshot versions — the
     * scheduled-maintenance path, deliberately NOT on the ingest tick
-    * (Graft.reclusterSem is that rebuild for the curation family's
-    * sem index).
+    * (Graft.reclusterSemLedger is that rebuild for the curation
+    * family's sem index).
     *
     * Scale: k = ⌈N_base/τ⌉ pins expected cluster size at τ (the
     * `semdedup` linearity argument), so the at-ingest pair work is

@@ -822,9 +822,9 @@ class ApiSpec extends AnyFunSuite {
     val t1 = docs.filter(col("doc_id") > mx - 40 &&
       col("doc_id") <= mx - 20)
     val t2 = docs.filter(col("doc_id") > mx - 20)
-    Graft.curateIngest(seed, base)
-    Graft.curateIngest(t1, base)
-    val report = Graft.curateIngest(t2, base)
+    Graft.curateIngest(seed, base, version = Some(1L))
+    Graft.curateIngest(t1, base, version = Some(2L))
+    val report = Graft.curateIngest(t2, base, version = Some(3L))
       .collect().map(r => r.getString(1) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     // final tables equal the one-shot declared kernels over ALL docs
@@ -950,9 +950,9 @@ class ApiSpec extends AnyFunSuite {
     val t1 = docs.filter(col("doc_id") > mx - 10 &&
       col("doc_id") <= mx - 5)
     val t2 = docs.filter(col("doc_id") > mx - 5)
-    Graft.curateIngest(seed, base, 0.4, None, Some(embAll), 0.3, 8)
-    Graft.curateIngest(t1, base, 0.4, None, Some(embAll), 0.3, 8)
-    val report = Graft.curateIngest(t2, base, 0.4, None,
+    Graft.curateIngest(seed, base, 0.4, Some(1L), Some(embAll), 0.3, 8)
+    Graft.curateIngest(t1, base, 0.4, Some(2L), Some(embAll), 0.3, 8)
+    val report = Graft.curateIngest(t2, base, 0.4, Some(3L),
       Some(embAll), 0.3, 8)
       .collect().map(r => r.getString(1) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
@@ -998,81 +998,75 @@ class ApiSpec extends AnyFunSuite {
       == Seq(1L), "semseeds re-committed after the seed tick")
   }
 
-  test("Graft.reclusterSem: rebuild equals a from-scratch build at " +
-      "today's k; old versions stay readable and vacuum-safe") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_recluster").toString + "/t"
-    val docs = Tables(spark, sfDir01, "documents")
-    val embAll = embLookup(sfDir01)
-    val mx = docs.agg(max(col("doc_id"))).head.getLong(0)
-    Graft.curateIngest(docs.filter(col("doc_id") <= mx - 10), base,
-      0.4, None, Some(embAll), 0.3, 8)
-    Graft.curateIngest(docs.filter(col("doc_id") > mx - 10), base,
-      0.4, None, Some(embAll), 0.3, 8)
-    val iT = s"$base/semidx"; val dT = s"$base/semseeds"
-    val vIdxOld = sources.Snapshots.latest(spark, iT)
-    def idxRows(v: Long): Set[(Long, Long, Long)] =
-      sources.Snapshots.readAsOf(spark, iT, v)
-        .select(col("cc_id").cast("long"), col("c_id"), col("vec_id"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .toSet
-    val oldIdx = idxRows(vIdxOld)
-    val (vS, vI) = Graft.reclusterSem(spark, base, embAll)
-    assert(vS > 1L && vI > vIdxOld)
-    // from-scratch build: fresh seeds = the k = max(8, ceil(n/100))
-    // lowest embedded stage-3 survivors of TODAY's corpus, assigned
-    // by the shared kernel — the rebuild must equal it exactly
-    val nearIds = sources.Snapshots
-      .readAsOf(spark, s"$base/near",
-        sources.Snapshots.latest(spark, s"$base/near"))
-      .select("doc_id")
-    val ne = nearIds.join(embAll, Seq("doc_id"))
-    val n = ne.count()
-    val k = math.max(8L, math.ceil(n.toDouble / 100.0).toLong)
-    val freshSeeds = ne.orderBy(col("doc_id")).limit(k.toInt)
-      .select(col("doc_id").as("c_id"), col("embedding").as("c_emb"))
-    val want = vec.VectorOps.semdedupIndexRollup(
-      ne.select(col("doc_id").as("vec_id"), col("embedding")),
-      freshSeeds)
-      .select(col("cc_id").cast("long"), col("c_id"), col("vec_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .toSet
-    assert(idxRows(vI) == want,
-      "rebuilt semidx diverges from a from-scratch build")
-    // the committed seed table: k rows + the guard metadata column
-    val st = sources.Snapshots.readAsOf(spark, dT, vS)
-    assert(st.count() == math.min(k, n))
-    assert(st.agg(max(col("seed_max_id"))).head.getLong(0) ==
-      st.agg(max(col("c_id"))).head.getLong(0))
-    // time travel: the pre-rebuild index version is untouched
-    assert(idxRows(vIdxOld) == oldIdx,
-      "rebuild mutated an old index version")
-    // vacuum-safe: retaining only the latest keeps the rebuild
-    // readable (nothing the new version references was deleted)
-    sources.Snapshots.vacuum(spark, iT, 1, graceMs = 0L)
-    assert(idxRows(sources.Snapshots.latest(spark, iT)) == want,
-      "vacuum broke the rebuilt index")
-    // crash-rerun convergence: seeds are a deterministic function of
-    // the corpus, so re-running the rebuild re-derives the SAME seed
-    // set and index contents at the next versions — the documented
-    // recovery for a crash between the two commits
-    val (vS2, vI2) = Graft.reclusterSem(spark, base, embAll)
-    assert(vS2 == vS + 1 && vI2 > vI)
-    def seedRows(v: Long): Set[(Long, Long)] =
-      sources.Snapshots.readAsOf(spark, dT, v)
-        .select(col("c_id"), col("seed_max_id"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(seedRows(vS2) == seedRows(vS),
-      "re-run derived a different seed set from the same corpus")
-    assert(idxRows(vI2) == want,
-      "re-run rebuilt a different index from the same corpus")
-  }
-
-  test("Graft.reclusterSem fails loudly without a curated corpus") {
+  test("Graft.reclusterSemLedger fails loudly without a curated corpus") {
     val base = java.nio.file.Files
       .createTempDirectory("graft_recluster_empty").toString + "/t"
     val e = intercept[IllegalArgumentException](
-      Graft.reclusterSem(spark, base, embLookup(sfDir01)))
+      Graft.reclusterSemLedger(spark, base, embLookup(sfDir01), 0L))
     assert(e.getMessage.contains("no committed near/ version"))
+  }
+
+  test("Graft.curateIngest without a version: an all-failing first " +
+      "batch commits nothing and returns an empty report") {
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_curate_empty").toString + "/t"
+    val docs = Tables(spark, sfDir, "documents")
+    val failing = text.CurationOps.qualitySignals(docs)
+      .filter(!col("keep_q")).select(docs.columns.map(col): _*)
+    assert(!failing.isEmpty, "fixture has no quality-failing docs")
+    val report = Graft.curateIngest(failing, base,
+      embeddings = Some(embLookup(sfDir)), semK = 8)
+    assert(report.isEmpty)
+    assert(report.columns.toSeq ==
+      Seq("stage_no", "stage", "n_docs", "n_tokens", "version"))
+    for (t <- Graft.curateTables(base, semantic = true))
+      assert(sources.Snapshots.latest(spark, t) == 0L,
+        s"$t committed a version for an all-failing first batch")
+    // the next version-less tick seeds every table at version 1
+    val seeded = Graft.curateIngest(docs, base)
+      .collect().map(r => r.getString(1) -> r.getLong(4)).toMap
+    assert(seeded == Map("quality" -> 1L, "dedup_exact" -> 1L,
+      "dedup_near" -> 1L))
+  }
+
+  test("Graft.curateIngest without a version: the tick after an " +
+      "all-duplicate tick lands every table on 1 + max latest") {
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_curate_gap").toString + "/t"
+    val docs = Tables(spark, sfDir01, "documents")
+      .select("doc_id", "text", "n_chars")
+    val embAll = embLookup(sfDir01)
+    val mx = docs.agg(max(col("doc_id"))).head.getLong(0)
+    val seed = docs.filter(col("doc_id") <= mx - 40)
+    // ids (mx-40, mx-35] all carrying one committed quality survivor's
+    // text: stage 1 keeps them, stage 2 drops them all, so exact,
+    // near, bands, sem and semidx skip the tick
+    val kept = text.CurationOps.qualitySignals(seed).filter(col("keep_q"))
+      .orderBy(col("doc_id")).limit(1).select(col("text"), col("n_chars"))
+    val dups = docs.filter(col("doc_id") > mx - 40 &&
+        col("doc_id") <= mx - 35)
+      .select(col("doc_id")).crossJoin(kept)
+    val tail = docs.filter(col("doc_id") > mx - 35)
+    def ingest(b: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      Graft.curateIngest(b, base, embeddings = Some(embAll), semK = 8)
+        .collect().map(r => r.getString(1) -> r.getLong(4)).toMap
+    ingest(seed)
+    val dupReport = ingest(dups)
+    assert(dupReport("quality") == 2L && dupReport("dedup_exact") == 1L,
+      s"the duplicate tick did not gap exact: $dupReport")
+    val Seq(qT, eT, nT, bT, sT, iT, dT) =
+      Graft.curateTables(base, semantic = true)
+    def versions(t: String): Seq[Long] =
+      sources.Snapshots.versions(spark, t)
+    assert(versions(qT) == Seq(1L, 2L))
+    for (t <- Seq(eT, nT, bT, sT, iT, dT))
+      assert(versions(t) == Seq(1L), s"$t committed the duplicate tick")
+    // 1 + max latest = 3 on every table the tick commits
+    val report = ingest(tail)
+    assert(report.values.toSet == Set(3L), s"report versions: $report")
+    assert(versions(qT) == Seq(1L, 2L, 3L))
+    for (t <- Seq(eT, nT, bT, sT, iT))
+      assert(versions(t) == Seq(1L, 3L), s"$t versions ${versions(t)}")
+    assert(versions(dT) == Seq(1L), "seeds froze more than once")
   }
 }

@@ -1121,7 +1121,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.getMessage.contains(
       "persisted semantic index predates the coarse-cell layout"),
       e.getMessage)
-    assert(e.getMessage.contains("Graft.reclusterSem"), e.getMessage)
+    assert(e.getMessage.contains("re-run the base build"), e.getMessage)
+    assert(!e.getMessage.contains("reclusterSem"), e.getMessage)
     assert(sources.Snapshots.versions(spark, base) == Seq(1L))
   }
 
@@ -1426,6 +1427,9 @@ class StreamingSpec extends AnyFunSuite {
     val seedT = sources.Snapshots
       .readAsOf(spark, s"$base/semseeds", 2L).localCheckpoint()
     assert(seedT.count() == math.min(k, n1))
+    // the guard metadata: every seed row carries the rebuilt set's max
+    assert(seedT.agg(max(col("seed_max_id"))).head.getLong(0) ==
+      seedT.agg(max(col("c_id"))).head.getLong(0))
     assert(seedT.select("c_id").collect().map(_.getLong(0)).toSet ==
       ne1.select("doc_id").orderBy(col("doc_id")).limit(k.toInt)
         .collect().map(_.getLong(0)).toSet)
@@ -1524,8 +1528,8 @@ class StreamingSpec extends AnyFunSuite {
       "re-run rebuilt a different index from the same corpus")
   }
 
-  test("curateStreamMerge fails loudly when a batch-mode " +
-      "reclusterSem ran against the ledger's semantic tables") {
+  test("curateStreamMerge fails loudly when a second writer " +
+      "committed to semseeds") {
     ext.GraftFunctions.register(spark)
     val base = freshDir() + "/recluster_collision"
     val docs = Tables(spark, sfDir, "documents")
@@ -1535,14 +1539,18 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("vec_id").as("doc_id"), col("embedding"))
     StreamOps.curateStreamMerge(docs.filter(col("doc_id") <= mx - 20),
       0L, base, 0.4, Some(embAll), 0.3, 8)
-    // WRONG maintenance call for a ledger pipeline: the batch-mode
-    // rebuild commits at latest+1, leaving a second semseeds version
-    graft.api.Graft.reclusterSem(spark, base, embAll)
+    // a foreign writer's optimistic commit lands a second semseeds
+    // version in the next tick's slot
+    val dT = s"$base/semseeds"
+    assert(sources.Snapshots.commit(
+      sources.Snapshots.readAsOf(spark, dT, 1L).localCheckpoint(),
+      dT) == 2L)
     val e = intercept[IllegalArgumentException](
       StreamOps.curateStreamMerge(docs.filter(col("doc_id") > mx - 20),
         1L, base, 0.4, Some(embAll), 0.3, 8))
+    assert(e.getMessage.contains("second writer"), e.getMessage)
     assert(e.getMessage.contains("reclusterSemLedger"),
-      s"guard message lacks the migration path: ${e.getMessage}")
+      s"guard message lacks the rebuild path: ${e.getMessage}")
   }
 
   test("Graft.curateStream facade: the attached query seeds and " +
