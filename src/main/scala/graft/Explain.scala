@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Plan-inspection utility: print the plan of named declared queries
   * (all of them with no args) at a given SF dir — the `.explain`
   * feedback loop SURVEY §4 prescribes, as a runnable main:
@@ -13,6 +15,10 @@ package graft
   * tree. Core count / shuffle partitions come from SPARK_GRAFT_CPUS
   * so captured plans match the bench's AQE decisions (default 4 for
   * quick interactive inspection).
+  *
+  * Every requested plan is printed even when one fails (an unknown
+  * key or a plan that throws); the main then exits 1 and names the
+  * failed keys on stderr.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -24,7 +30,7 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     val formatted =
       sys.env.get("GRAFT_EXPLAIN_MODE").contains("formatted")
-    for (n <- names) {
+    val failed = names.filterNot { n =>
       println(s"===== $n")
       try {
         val df = SparkEntry.queries(n)(spark, sfDir)
@@ -32,8 +38,16 @@ object Explain {
           println(df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode))
         else println(df.queryExecution.executedPlan.toString)
-      } catch { case e: Throwable => println(s"[explain] failed: $e") }
+        true
+      } catch {
+        case NonFatal(e) => println(s"[explain] $n failed: $e"); false
+      }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[explain] ${failed.size} plan(s) failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.ga
 
 import graft.{Op, OpModule, Tables}
+import graft.api.Graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -39,6 +40,10 @@ object FlowOps extends OpModule {
     Tables.events(s, d)
       .withColumn("us", unix_micros(col("ts")))
       .withColumn("page", get_json_object(col("props"), "$.k").cast("int"))
+
+  /** The attribution ops' channel: the `props.k` dimension mod 5. */
+  private[ga] val campaign =
+    get_json_object(col("props"), "$.k").cast("int") % 5
 
   private val perUser = Window
     .partitionBy(col("user_id"))
@@ -171,27 +176,11 @@ object FlowOps extends OpModule {
   val scd2Track = Op(
     "scd2_track",
     (s, d) =>
-      hits(s, d)
-        .withColumn("prev_state", lag(col("event_type"), 1).over(perUser))
-        .withColumn("chg",
-          when(col("prev_state").isNull ||
-            col("prev_state") =!= col("event_type"), 1L).otherwise(0L))
-        .withColumn("run_id",
-          sum(col("chg")).over(
-            perUser.rowsBetween(Window.unboundedPreceding,
-              Window.currentRow)))
-        .groupBy(col("user_id"), col("run_id"))
-        .agg(
-          min(col("event_type")).as("state"),
-          min(col("us")).as("valid_from_us"),
-          count(lit(1)).as("n_events"))
-        .withColumn("valid_to_us",
-          lead(col("valid_from_us"), 1).over(
-            Window.partitionBy(col("user_id")).orderBy(col("run_id"))))
-        .withColumn("is_current", col("valid_to_us").isNull)
+      Graft.scd2(hits(s, d), "user_id", "event_type", "us", "event_id")
         .select(col("user_id"), col("run_id"), col("state"),
-          col("valid_from_us"), col("valid_to_us"), col("n_events"),
-          col("is_current")),
+          col("valid_from").as("valid_from_us"),
+          col("valid_to").as("valid_to_us"), col("n_rows").as("n_events"),
+          col("valid_to").isNull.as("is_current")),
     Some("""
       WITH seq AS (
         SELECT user_id, event_id, event_type,
@@ -231,41 +220,8 @@ object FlowOps extends OpModule {
     * overlap; this is the O(n log n) plan that survives 100 TB. */
   val sessionConcurrency = Op(
     "session_concurrency",
-    (s, d) => {
-      val sess = hits(s, d)
-        .withColumn("prev_us", lag(col("us"), 1).over(perUser))
-        .withColumn("new_s",
-          when(col("prev_us").isNull ||
-            col("us") - col("prev_us") > 1800L * 1000000L, 1L)
-            .otherwise(0L))
-        .withColumn("sid",
-          sum(col("new_s")).over(
-            perUser.rowsBetween(Window.unboundedPreceding,
-              Window.currentRow)))
-        .groupBy(col("user_id"), col("sid"))
-        .agg(min(col("us")).as("start_us"), max(col("us")).as("end_us"))
-      val deltas = sess.select(col("start_us").as("bus"), lit(1L).as("dl"))
-        .unionAll(sess.select((col("end_us") + 1L).as("bus"),
-          lit(-1L).as("dl")))
-        .groupBy(col("bus")).agg(sum(col("dl")).as("d"))
-        .withColumn("day", to_date(timestamp_micros(col("bus"))))
-      val perDay = Window.partitionBy(col("day")).orderBy(col("bus"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // carry-in: cumulative sum of prior days' totals — calendar-
-      // sized, so the unpartitioned window is a few hundred rows
-      val dayTot = deltas.groupBy(col("day")).agg(sum(col("d")).as("dt"))
-        .withColumn("carry",
-          coalesce(sum(col("dt")).over(
-            Window.orderBy(col("day"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("day"), col("carry"))
-      deltas
-        .withColumn("run", sum(col("d")).over(perDay))
-        .join(broadcast(dayTot), "day")
-        .withColumn("conc", col("run") + col("carry"))
-        .groupBy(col("day"))
-        .agg(max(col("conc")).as("peak_concurrency"))
-    },
+    (s, d) => Graft.peakConcurrency(GaOps.sessionize.run(s, d),
+      "start_us", "end_us"),
     Some("""
       WITH ev AS (
         SELECT user_id, event_id,
@@ -462,22 +418,7 @@ object FlowOps extends OpModule {
     * user_id; per-user state is bounded by the calendar. */
   val userStreaks = Op(
     "user_streaks",
-    (s, d) => {
-      val days = Tables.events(s, d)
-        .select(col("user_id"),
-          datediff(to_date(col("ts")), lit("2024-01-01")).as("dno"))
-        .distinct()
-      val w = Window.partitionBy(col("user_id")).orderBy(col("dno"))
-      days
-        .withColumn("isl", col("dno") - row_number().over(w))
-        .groupBy(col("user_id"), col("isl"))
-        .agg(count(lit(1)).as("len"))
-        .groupBy(col("user_id"))
-        .agg(
-          max(col("len")).as("max_streak"),
-          count(lit(1)).as("n_streaks"),
-          sum(col("len")).cast("long").as("n_active_days"))
-    },
+    (s, d) => Graft.userStreaks(Tables.events(s, d), "user_id", "ts"),
     Some("""
       WITH days AS (
         SELECT DISTINCT user_id,
@@ -505,22 +446,12 @@ object FlowOps extends OpModule {
     * rollup (catalog-sized at any data scale). */
   val markovTransitions = Op(
     "markov_transitions",
-    (s, d) => {
-      val w = Window
-        .partitionBy(col("user_id"))
-        .orderBy(col("us"), col("event_id"))
-      val pairs = Tables.events(s, d)
-        .withColumn("us", unix_micros(col("ts")))
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
-        .groupBy(col("prev_type"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      val wp = Window.partitionBy(col("prev_type"))
-      pairs
-        .withColumn("p",
-          round(col("n") * lit(1.0) / sum(col("n")).over(wp), 6))
-        .select(col("prev_type"), col("event_type"), col("n"), col("p"))
-    },
+    (s, d) =>
+      Graft.markovTransitions(
+        Tables.events(s, d).withColumn("us", unix_micros(col("ts"))),
+        "user_id", "event_type", Seq(col("us"), col("event_id")))
+        .select(col("prev_state").as("prev_type"),
+          col("state").as("event_type"), col("n"), col("p")),
     Some("""
       WITH seq AS (
         SELECT user_id, event_type,
@@ -734,31 +665,11 @@ object FlowOps extends OpModule {
     * exactly for the rates. The GA goal-funnel report shape. */
   val funnelSteps = Op(
     "funnel_steps",
-    (s, d) => {
-      val ev = Tables.events(s, d)
-        .withColumn("us", unix_micros(col("ts")))
-        .select(col("user_id"), col("event_type"), col("us"))
-      val t1 = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("us")).as("t1"))
-      val t2 = ev.join(t1, "user_id")
-        .filter(col("event_type") === "signup" && col("us") > col("t1"))
-        .groupBy(col("user_id")).agg(min(col("us")).as("t2"))
-      val t3 = ev.join(t2, "user_id")
-        .filter(col("event_type") === "purchase" && col("us") > col("t2"))
-        .groupBy(col("user_id")).agg(min(col("us")).as("t3"))
-      val n1 = t1.agg(count(lit(1)).as("step1_users"))
-      val n2 = t2.agg(count(lit(1)).as("step2_users"))
-      val n3 = t3.agg(count(lit(1)).as("step3_users"))
-      // rates null out on an empty step (DuckDB's x/0 is NULL while
-      // Spark's double division yields NaN — guard to match)
-      def rate(num: org.apache.spark.sql.Column,
-          den: org.apache.spark.sql.Column) =
-        when(den > 0, round(num * lit(1.0) / den, 6))
-      n1.crossJoin(n2).crossJoin(n3)
-        .withColumn("rate_12", rate(col("step2_users"), col("step1_users")))
-        .withColumn("rate_23", rate(col("step3_users"), col("step2_users")))
-        .withColumn("rate_13", rate(col("step3_users"), col("step1_users")))
-    },
+    (s, d) =>
+      Graft.funnel(Tables.events(s, d), "user_id", "ts", Seq(
+        col("event_type") === "view",
+        col("event_type") === "signup",
+        col("event_type") === "purchase")),
     Some("""
       WITH ev AS (
         SELECT user_id, event_type,
@@ -852,39 +763,11 @@ object FlowOps extends OpModule {
     * Nothing global, nothing all-pairs. */
   val attributionLinear = Op(
     "attribution_linear",
-    (s, d) => {
-      val ev = Tables.events(s, d)
-        .withColumn("us", unix_micros(col("ts")))
-      val touches = ev
-        .filter(col("event_type").isin("click", "view"))
-        .select(col("user_id").as("t_user"),
-          (get_json_object(col("props"), "$.k").cast("int") % 5)
-            .as("campaign"),
-          col("us").as("t_us"), col("event_id").as("t_id"))
-      val purchases = ev
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"),
-          col("event_id").as("p_id"), col("us").as("p_us"),
-          floor(col("value") * 100).cast("long").as("cents"))
-      val paired = purchases.join(touches,
-        col("p_user") === col("t_user") && col("t_us") < col("p_us"),
-        "left")
-      val wP = Window.partitionBy(col("p_id"))
-      paired
-        .withColumn("n", count(lit(1)).over(wP))
-        .withColumn("rn", row_number().over(
-          wP.orderBy(col("t_us").asc_nulls_first,
-            col("t_id").asc_nulls_first)))
-        // no-touch purchases ride the same formula: the left join
-        // leaves one row with n=1, rn=1 → credit = cents
-        .withColumn("credit",
-          expr("cents div n") +
-            when(col("rn") <= col("cents") % col("n"), 1L).otherwise(0L))
-        .withColumn("campaign", coalesce(col("campaign"), lit(-1)))
-        .groupBy(col("campaign"))
-        .agg(count(lit(1)).as("n_credits"),
-          round(sum(col("credit")) / 100.0, 2).as("revenue"))
-    },
+    (s, d) =>
+      Graft.attribution(Tables.events(s, d), "user_id", "event_id", "ts",
+        campaign, col("event_type").isin("click", "view"),
+        col("event_type") === "purchase", col("value"), "linear")
+        .withColumnRenamed("channel", "campaign"),
     Some("""
       WITH ev AS (
         SELECT event_id, user_id, event_type, value,
@@ -929,32 +812,7 @@ object FlowOps extends OpModule {
     */
   val dauMau = Op(
     "dau_mau",
-    (s, d) => {
-      val days = Tables.events(s, d)
-        .select(col("user_id"),
-          datediff(to_date(col("ts")), lit("2024-01-01")).as("dno"))
-        .distinct()
-      val span = days.agg(min(col("dno")).as("d0"), max(col("dno")).as("d1"))
-      val mau = days
-        .crossJoin(broadcast(span))
-        .select(col("user_id"),
-          explode(sequence(col("dno"),
-            least(col("dno") + 29, col("d1")))).as("report_day"))
-        .groupBy(col("report_day"))
-        .agg(countDistinct(col("user_id")).as("mau"))
-      val dau = days
-        .groupBy(col("dno").as("report_day"))
-        .agg(countDistinct(col("user_id")).as("dau"))
-      span.select(explode(sequence(col("d0"), col("d1"))).as("report_day"))
-        .join(dau, Seq("report_day"), "left")
-        .join(mau, Seq("report_day"), "left")
-        .select(col("report_day"),
-          coalesce(col("dau"), lit(0L)).as("dau"),
-          coalesce(col("mau"), lit(0L)).as("mau"))
-        .withColumn("stickiness_bp",
-          expr("CASE WHEN mau = 0 THEN NULL" +
-            " ELSE dau * 10000 div mau END"))
-    },
+    (s, d) => Graft.dauMau(Tables.events(s, d), "user_id", "ts"),
     Some("""
       WITH days AS (
         SELECT DISTINCT user_id,
@@ -1000,26 +858,7 @@ object FlowOps extends OpModule {
     * combined day rollup, the same exchange `anomaly_zscore` does. */
   val ewmaSmooth = Op(
     "ewma_smooth",
-    (s, d) => {
-      val daily = Tables.events(s, d)
-        .withColumn("day", to_date(col("ts")))
-        .groupBy(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("n"))
-      val hist = daily.select(
-        col("event_type"), col("day").as("day2"), col("n").as("n2"))
-      daily.join(hist, "event_type")
-        .withColumn("dd", datediff(col("day"), col("day2")))
-        .filter(col("dd").between(0, 13))
-        .withColumn("w",
-          expr("CAST(POWER(2.0, 13 - dd) AS BIGINT)"))
-        .groupBy(col("event_type"), col("day"), col("n"))
-        .agg(
-          round(sum(col("w") * col("n2")).cast("double") /
-            sum(col("w")), 4).as("ewma"),
-          count(lit(1)).as("n_days_in_window"))
-        .select(col("event_type"), col("day"), col("n"),
-          col("ewma"), col("n_days_in_window"))
-    },
+    (s, d) => Graft.ewmaSmooth(Tables.events(s, d), "event_type", "ts"),
     Some("""
       WITH daily AS (
         SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,

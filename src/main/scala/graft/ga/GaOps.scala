@@ -1,6 +1,7 @@
 package graft.ga
 
 import graft.{Op, OpModule, Tables}
+import graft.api.Graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -143,17 +144,10 @@ object GaOps extends OpModule {
     * share the exact same bucketing with no week-start convention. */
   val cohortRetention = Op(
     "cohort_retention",
-    (s, d) => {
-      val e = ev(s, d)
-      val first = e.groupBy(col("user_id")).agg(min(col("us")).as("first_us"))
-      e.join(first, "user_id")
-        .select(
-          col("user_id"),
-          expr("first_us div 604800000000").as("cohort_w"),
-          expr("us div 604800000000 - first_us div 604800000000").as("w_off"))
-        .groupBy(col("cohort_w"), col("w_off"))
-        .agg(countDistinct(col("user_id")).as("n_users"))
-    },
+    (s, d) =>
+      Graft.cohortRetention(Tables.events(s, d), "user_id", "ts")
+        .select(col("cohort_week").as("cohort_w"),
+          col("week_offset").as("w_off"), col("n_users")),
     Some("""
       WITH ev AS (
         SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
@@ -503,21 +497,7 @@ object GaOps extends OpModule {
     * raw events. */
   val resampleDaily = Op(
     "resample_daily",
-    (s, d) => {
-      val ev = Tables.events(s, d).withColumn("day", to_date(col("ts")))
-      val daily = ev.groupBy(col("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      val span = ev.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      val calendar = span
-        .select(explode(expr("sequence(d0, d1, interval 1 day)")).as("day"))
-      // type list from the daily pre-aggregate (days × types rows),
-      // not a third scan of the raw events table
-      val grid = calendar.crossJoin(
-        daily.select(col("event_type")).distinct())
-      grid.join(daily, Seq("day", "event_type"), "left")
-        .select(col("day"), col("event_type"),
-          coalesce(col("n"), lit(0L)).as("n_events"))
-    },
+    (s, d) => Graft.resampleDaily(Tables.events(s, d), "ts", "event_type"),
     Some("""
       WITH ev AS (
         SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type

@@ -1,6 +1,7 @@
 package graft.ga
 
 import graft.{Op, OpModule, Tables}
+import graft.api.Graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -61,45 +62,11 @@ object JourneyOps extends OpModule {
     * to decimal(38,0) — same plan, wider lanes. */
   val attributionTimeDecay = Op(
     "attribution_time_decay",
-    (s, d) => {
-      val e = ev(s, d)
-      val touches = e
-        .filter(col("event_type").isin("click", "view"))
-        .select(col("user_id").as("t_user"),
-          (get_json_object(col("props"), "$.k").cast("int") % 5)
-            .as("campaign"),
-          col("us").as("t_us"), col("event_id").as("t_id"))
-      val purchases = e
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"),
-          col("event_id").as("p_id"), col("us").as("p_us"),
-          floor(col("value") * 100).cast("long").as("cents"))
-      val paired = purchases
-        .join(touches,
-          col("p_user") === col("t_user") && col("t_us") < col("p_us"),
-          "left")
-        .withColumn("age_days",
-          expr("(p_us - t_us) div 86400000000"))
-        .withColumn("w",
-          coalesce(
-            expr("shiftleft(CAST(1 AS BIGINT), " +
-              "CAST(30 - LEAST(age_days, 30) AS INT))"),
-            lit(1L)))
-      val wP = Window.partitionBy(col("p_id"))
-      val ordered = wP.orderBy(col("t_us").asc_nulls_first,
-        col("t_id").asc_nulls_first)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      paired
-        .withColumn("cumw", sum(col("w")).over(ordered))
-        .withColumn("totw", sum(col("w")).over(wP))
-        .withColumn("credit",
-          expr("(cents * cumw) div totw") -
-            expr("(cents * (cumw - w)) div totw"))
-        .withColumn("campaign", coalesce(col("campaign"), lit(-1)))
-        .groupBy(col("campaign"))
-        .agg(count(lit(1)).as("n_credits"),
-          round(sum(col("credit")) / 100.0, 2).as("revenue"))
-    },
+    (s, d) =>
+      Graft.attribution(Tables.events(s, d), "user_id", "event_id", "ts",
+        FlowOps.campaign, col("event_type").isin("click", "view"),
+        col("event_type") === "purchase", col("value"), "time_decay", 30)
+        .withColumnRenamed("channel", "campaign"),
     Some("""
       WITH ev AS (
         SELECT event_id, user_id, event_type, value,
@@ -265,45 +232,11 @@ object JourneyOps extends OpModule {
     * shuffles. */
   val attributionPosition = Op(
     "attribution_position",
-    (s, d) => {
-      val e = ev(s, d)
-      val touches = e
-        .filter(col("event_type").isin("click", "view"))
-        .select(col("user_id").as("t_user"),
-          (get_json_object(col("props"), "$.k").cast("int") % 5)
-            .as("campaign"),
-          col("us").as("t_us"), col("event_id").as("t_id"))
-      val purchases = e
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"),
-          col("event_id").as("p_id"), col("us").as("p_us"),
-          floor(col("value") * 100).cast("long").as("cents"))
-      val wP = Window.partitionBy(col("p_id"))
-      purchases
-        .join(touches,
-          col("p_user") === col("t_user") && col("t_us") < col("p_us"),
-          "left")
-        .withColumn("n", count(lit(1)).over(wP))
-        .withColumn("rn", row_number().over(
-          wP.orderBy(col("t_us").asc_nulls_first,
-            col("t_id").asc_nulls_first)))
-        .withColumn("credit", expr("""
-          CASE
-            WHEN n = 1 THEN cents
-            WHEN n = 2 THEN
-              CASE WHEN rn = 1 THEN cents - cents div 2
-                   ELSE cents div 2 END
-            WHEN rn = 1 OR rn = n THEN (cents * 2) div 5
-            ELSE (cents - 2 * ((cents * 2) div 5)) div (n - 2)
-                 + CASE WHEN rn - 1 <=
-                     (cents - 2 * ((cents * 2) div 5)) % (n - 2)
-                   THEN 1 ELSE 0 END
-          END"""))
-        .withColumn("campaign", coalesce(col("campaign"), lit(-1)))
-        .groupBy(col("campaign"))
-        .agg(count(lit(1)).as("n_credits"),
-          round(sum(col("credit")) / 100.0, 2).as("revenue"))
-    },
+    (s, d) =>
+      Graft.attribution(Tables.events(s, d), "user_id", "event_id", "ts",
+        FlowOps.campaign, col("event_type").isin("click", "view"),
+        col("event_type") === "purchase", col("value"), "position")
+        .withColumnRenamed("channel", "campaign"),
     Some("""
       WITH ev AS (
         SELECT event_id, user_id, event_type, value,
@@ -439,79 +372,11 @@ object JourneyOps extends OpModule {
     * driver-coordinated but executor-executed, nothing ∝ events. */
   val markovRemoval = Op(
     "markov_removal",
-    (s, d) => {
-      val e = ev(s, d)
-      val hits = e
-        .filter(col("event_type").isin("click", "view"))
-        .select(col("user_id"),
-          (get_json_object(col("props"), "$.k").cast("int") % 5)
-            .as("campaign"),
-          col("us"), col("event_id"))
-      val wSeq = Window.partitionBy(col("user_id"))
-        .orderBy(col("us"), col("event_id"))
-      val seq = hits
-        .withColumn("rn", row_number().over(wSeq))
-        .withColumn("nx", lead(col("campaign"), 1).over(wSeq))
-      val convU = e.filter(col("event_type") === "purchase")
-        .select(col("user_id")).distinct()
-        .withColumn("has_c", lit(1))
-      val trans = seq.filter(col("rn") === 1)
-        .select(lit(100).as("from_s"), col("campaign").as("to_s"))
-        .union(seq.filter(col("nx").isNotNull)
-          .select(col("campaign").as("from_s"), col("nx").as("to_s")))
-        .union(seq.filter(col("nx").isNull)
-          .join(convU, Seq("user_id"), "left")
-          .select(col("campaign").as("from_s"),
-            when(col("has_c").isNotNull, lit(101)).otherwise(lit(102))
-              .as("to_s")))
-      val wFrom = Window.partitionBy(col("from_s"))
-      // materialize the channel²-sized graph once: each of the 8
-      // fixed-point rounds would otherwise re-run the data-sized
-      // windowed transition extraction behind it (pagerank's
-      // localCheckpoint lineage-truncation pattern)
-      val probs = trans.groupBy(col("from_s"), col("to_s"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("p",
-          round(col("n") * lit(1.0) / sum(col("n")).over(wFrom), 6))
-        .select(col("from_s"), col("to_s"), col("p"))
-        .localCheckpoint()
-      val rmDf = probs.sparkSession.range(-1, 5)
-        .select(col("id").cast("int").as("rm"))
-      var p = rmDf.crossJoin(
-        probs.select(col("from_s").as("st")).distinct())
-        .withColumn("p", lit(0.0))
-        .select(col("rm"), col("st"), col("p"))
-      for (_ <- 1 to 8) {
-        val prev = p.select(col("rm").as("q_rm"), col("st").as("q_s"),
-          col("p").as("q_p"))
-        p = probs.crossJoin(rmDf)
-          .join(prev,
-            col("q_rm") === col("rm") && col("q_s") === col("to_s"),
-            "left")
-          .groupBy(col("rm"), col("from_s"))
-          .agg(round(sum(
-            when(col("to_s") === 101, col("p"))
-              .when(col("to_s").between(0, 4),
-                col("p") * coalesce(col("q_p"), lit(0.0)))
-              .otherwise(lit(0.0))), 6).as("psum"))
-          .select(col("rm"),
-            col("from_s").as("st"),
-            when(col("from_s") === col("rm"), lit(0.0))
-              .otherwise(col("psum")).as("p"))
-      }
-      val base = p.filter(col("rm") === -1 && col("st") === 100)
-        .select(col("p").as("base_cvr"))
-      p.filter(col("rm") >= 0 && col("st") === 100)
-        .select(col("rm").as("campaign"), col("p").as("removed_cvr"))
-        .crossJoin(broadcast(base))
-        // NULLIF: a zero-conversion corpus has base_cvr = 0.0 — DuckDB
-        // yields NULL on /0 where ANSI Spark throws; align on NULL
-        .withColumn("removal_effect",
-          round((col("base_cvr") - col("removed_cvr")) /
-            nullif(col("base_cvr"), lit(0.0)), 4))
-        .select(col("campaign"), col("base_cvr"), col("removed_cvr"),
-          col("removal_effect"))
-    },
+    (s, d) =>
+      Graft.markovRemoval(Tables.events(s, d), "user_id", "event_id", "ts",
+        FlowOps.campaign, col("event_type").isin("click", "view"),
+        col("event_type") === "purchase", 5)
+        .withColumnRenamed("channel", "campaign"),
     Some {
       val iters = (1 to 8).map { k =>
         s"""

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Op, OpModule, Tables}
+import graft.api.Graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -466,41 +467,11 @@ object Aggs extends OpModule {
     * statistic by definition); DuckDB sorts locally just fine. */
   val winsorize = Op(
     "winsorize",
-    (s, d) => {
-      val rows = Tables(s, d, "lineitem")
-        .withColumn("cents", floor(col("l_extendedprice") * 100).cast("long"))
-      // distinct-value CDF per group (the ordered pass runs on this
-      // value rollup, not on the fact rows)
-      val wc = Window.partitionBy(col("l_returnflag")).orderBy(col("cents"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cdf = rows.groupBy(col("l_returnflag"), col("cents"))
-        .agg(count(lit(1)).as("m"))
-        .withColumn("cum", sum(col("m")).over(wc))
-      val wn = Window.partitionBy(col("l_returnflag"))
-      val keyed = cdf
-        .withColumn("n", max(col("cum")).over(wn))
-        .withColumn("k05", floor(lit(0.05) * (col("n") - 1)) + 1)
-        .withColumn("k95", floor(lit(0.95) * (col("n") - 1)) + 1)
-      // order statistic k = min cents with cumulative count >= k
-      val bounds = keyed.groupBy(col("l_returnflag")).agg(
-        min(when(col("cum") >= col("k05"), col("cents"))).as("lo"),
-        min(when(col("cum") >= col("k95"), col("cents"))).as("hi"))
-      rows
-        .join(broadcast(bounds), "l_returnflag")
-        .withColumn("clamped", least(greatest(col("cents"), col("lo")),
-          col("hi")))
-        .groupBy(col("l_returnflag"))
-        .agg(
-          count(lit(1)).as("n_rows"),
-          // NO round: order stats are integers and the means divide
-          // exact operands (integer-valued double sums stay exact
-          // below 2^53) — identical IEEE results on both engines,
-          // while round could split on a .xx5 half-way value
-          (max(col("lo")) / 100.0).as("p05"),
-          (max(col("hi")) / 100.0).as("p95"),
-          (avg(col("cents")) / 100.0).as("mean_raw"),
-          (avg(col("clamped")) / 100.0).as("mean_winsor"))
-    },
+    (s, d) =>
+      Graft.winsorize(Tables(s, d, "lineitem"),
+        floor(col("l_extendedprice") * 100), "l_returnflag")
+        .withColumnRenamed("p_lo", "p05")
+        .withColumnRenamed("p_hi", "p95"),
     Some("""
       WITH ranked AS (
         SELECT l_returnflag,

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Op, OpModule, Tables}
+import graft.api.Graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -386,22 +387,14 @@ object Joins extends OpModule {
     * (25-row dim); the pair rollup is |brands|²-bounded. */
   val basketPairs = Op(
     "basket_pairs",
-    (s, d) => {
-      val brands = Tables(s, d, "lineitem")
-        .join(broadcast(Tables(s, d, "part")
-          .select(col("p_partkey"), col("p_brand"))),
-          col("l_partkey") === col("p_partkey"))
-        .select(col("l_orderkey").as("ok"), col("p_brand"))
-        .distinct()
-      val a = brands.select(col("ok"), col("p_brand").as("b1"))
-      val b = brands.select(col("ok"), col("p_brand").as("b2"))
-      a.join(b, Seq("ok"))
-        .filter(col("b1") < col("b2"))
-        .groupBy(col("b1"), col("b2"))
-        .agg(count(lit(1)).as("support"))
-        .orderBy(col("support").desc, col("b1"), col("b2"))
-        .limit(20)
-    },
+    (s, d) =>
+      Graft.basketPairs(Tables(s, d, "lineitem")
+          .join(broadcast(Tables(s, d, "part")
+            .select(col("p_partkey"), col("p_brand"))),
+            col("l_partkey") === col("p_partkey")),
+        "l_orderkey", "p_brand")
+        .select(col("item1").as("b1"), col("item2").as("b2"),
+          col("support")),
     Some("""
       WITH ob AS (
         SELECT DISTINCT l_orderkey AS ok, p_brand

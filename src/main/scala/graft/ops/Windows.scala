@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Op, OpModule, Tables}
+import graft.api.Graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -346,34 +347,14 @@ object Windows extends OpModule {
     * and the 10-row decile rollup. */
   val decileLift = Op(
     "decile_lift",
-    (s, d) => {
-      val perCust = Tables(s, d, "orders")
-        .withColumn("cents", floor(col("o_totalprice") * 100).cast("long"))
-        .groupBy(col("o_custkey"))
-        .agg(sum(col("cents")).as("cust_cents"))
-      val n = perCust.agg(count(lit(1)).cast("long").as("__n"))
-      val byDecile = Ranks
-        .withGlobalRank(perCust, "__rnk",
-          col("cust_cents").desc, col("o_custkey"))
-        .crossJoin(broadcast(n))
-        .withColumn("decile",
-          Ranks.ntileFromRank(col("__rnk"), col("__n"), 10))
-        .groupBy(col("decile"))
-        .agg(count(lit(1)).as("n_customers"),
-          sum(col("cust_cents")).as("dec_cents"))
-      val wc = Window.orderBy(col("decile"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val total = byDecile.agg(sum(col("dec_cents")).as("tot_cents"))
-      byDecile
-        .crossJoin(broadcast(total))
-        .withColumn("cum_cents", sum(col("dec_cents")).over(wc))
-        .select(col("decile"), col("n_customers"),
-          round(col("dec_cents") / 100.0, 2).as("revenue"),
-          round(col("dec_cents") * lit(1.0) / col("tot_cents"), 6)
-            .as("share"),
-          round(col("cum_cents") * lit(1.0) / col("tot_cents"), 6)
-            .as("cum_share"))
-    },
+    (s, d) =>
+      Graft.decileLift(Tables(s, d, "orders")
+          .withColumn("cents", floor(col("o_totalprice") * 100).cast("long")),
+        "o_custkey", "cents")
+        .select(col("tile").as("decile"), col("n_keys").as("n_customers"),
+          round(col("total") / 100.0, 2).as("revenue"),
+          round(col("share"), 6).as("share"),
+          round(col("cum_share"), 6).as("cum_share")),
     Some("""
       WITH per_cust AS (
         SELECT o_custkey,

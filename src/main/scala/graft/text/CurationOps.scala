@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.{Op, OpModule, Tables}
+import graft.api.Graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -623,44 +624,9 @@ object CurationOps extends OpModule {
     * smaller runtime side and AQE selects it without the hint. */
   val dsirWeights = Op(
     "dsir_weights",
-    (s, d) => {
-      val t = Tables(s, d, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .withColumn("is_tgt",
-          expr("CASE WHEN pmod((doc_id % 100000) * 2654435761, 100) < 10" +
-            " THEN 1 ELSE 0 END"))
-      // the single-token guard lives INSIDE the generator (empty array
-      // → row dropped), not as a filter: a `size(split(text)) >= 2`
-      // Filter is pushdown-eligible and lands BELOW the corpus-spread
-      // exchange, tokenizing the whole corpus single-threaded on the
-      // one-row-group scan side — twice here, since this op scans the
-      // corpus twice by design (the bm25 r13 lesson, SCALE.md)
-      val bg = t
-        .select(col("doc_id"), col("is_tgt"), col("toks"),
-          explode(when(size(col("toks")) >= 2,
-            sequence(lit(1), size(col("toks")) - 1))
-            .otherwise(expr("CAST(array() AS array<int>)"))).as("i"))
-        .select(col("doc_id"), col("is_tgt"),
-          xxhash64(concat(element_at(col("toks"), col("i")), lit(" "),
-            element_at(col("toks"), col("i") + 1))).as("g"))
-      // the vocab-sized count table materializes once (localCheckpoint)
-      // so the totals rollup and the scoring join both read IT, not a
-      // fresh corpus scan each — the corpus is read exactly twice:
-      // once to build the dictionary, once to score against it
-      val cnt = bg.groupBy(col("g"))
-        .agg(count(lit(1)).as("all_c"), sum(col("is_tgt")).as("tgt_c"))
-        .localCheckpoint()
-      val tot = cnt.agg(sum(col("all_c")).as("tn"),
-        sum(col("tgt_c")).as("tt"), count(lit(1)).as("tv"))
-      bg.join(cnt, "g")
-        .crossJoin(broadcast(tot))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_bigrams"),
-          round(avg(
-            log((col("tgt_c") + lit(1.0)) / (col("tt") + col("tv"))) -
-              log((col("all_c") + lit(1.0)) / (col("tn") + col("tv")))),
-            4).as("dsir_w"))
-    },
+    (s, d) =>
+      Graft.importanceWeights(Tables(s, d, "documents"), "text", "doc_id",
+        expr("pmod((doc_id % 100000) * 2654435761, 100) < 10")),
     Some("""
       WITH t AS (
         SELECT doc_id, string_split(text, ' ') AS toks,

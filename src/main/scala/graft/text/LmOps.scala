@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.{Op, OpModule, Tables}
+import graft.api.Graft
 import org.apache.spark.sql.functions._
 
 /** Language-model data-prep operators over the `documents` corpus
@@ -30,18 +31,11 @@ object LmOps extends OpModule {
   val chunkDocs = Op(
     "chunk_docs",
     (s, d) =>
-      Tables(s, d, "documents")
-        // empty docs: sequence(0, -1, stride) throws in Spark while
-        // DuckDB's generate_series returns empty — filter to match
-        .filter(col("n_chars") > 0)
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0), col("n_chars").cast("int") - 1,
-            lit(ChunkStride))).as("off"))
-        .select(
-          col("doc_id"),
-          (col("off") / ChunkStride).cast("long").as("chunk_idx"),
-          length(expr(s"substring(text, off + 1, $ChunkLen)")).as("chunk_len"),
-          md5(expr(s"substring(text, off + 1, $ChunkLen)")).as("chunk_md5")),
+      Graft.chunkDocs(Tables(s, d, "documents"), "text", "doc_id",
+        ChunkLen, ChunkStride)
+        .select(col("doc_id"), col("chunk_idx"),
+          length(col("chunk")).as("chunk_len"),
+          md5(col("chunk")).as("chunk_md5")),
     Some(s"""
       SELECT doc_id, off // $ChunkStride AS chunk_idx,
              CAST(length(substr(text, off + 1, $ChunkLen)) AS INT)
@@ -60,41 +54,7 @@ object LmOps extends OpModule {
     * association order on both engines. */
   val pmiBigrams = Op(
     "pmi_bigrams",
-    (s, d) => {
-      val docs = Tables(s, d, "documents")
-      val toks = docs.select(split(col("text"), " ").as("toks"))
-      val bg = toks
-        // single-token docs: sequence(1, 0) DESCENDS to [1, 0] in
-        // Spark (element_at then throws); DuckDB's generate_series is
-        // empty — the guard lives INSIDE the generator (empty array →
-        // row dropped), not in a pushdown-eligible filter that would
-        // tokenize below the corpus-spread exchange (r13 lesson)
-        .select(col("toks"),
-          explode(when(size(col("toks")) >= 2,
-            sequence(lit(1), size(col("toks")) - 1))
-            .otherwise(expr("CAST(array() AS array<int>)"))).as("i"))
-        .select(element_at(col("toks"), col("i")).as("w1"),
-          element_at(col("toks"), col("i") + 1).as("w2"))
-      val cb = bg.groupBy(col("w1"), col("w2"))
-        .agg(count(lit(1)).as("pair_count"))
-      val cu = docs
-        .select(explode(split(col("text"), " ")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      val nu = cu.agg(sum(col("c")).as("nu"))
-      val nb = cb.agg(sum(col("pair_count")).as("nb"))
-      cb
-        .join(broadcast(cu.select(col("w").as("w1"), col("c").as("c1"))), "w1")
-        .join(broadcast(cu.select(col("w").as("w2"), col("c").as("c2"))), "w2")
-        .crossJoin(broadcast(nu))
-        .crossJoin(broadcast(nb))
-        .filter(col("pair_count") >= 5)
-        .withColumn("pmi",
-          round(log(col("pair_count") * lit(1.0) * col("nu") / col("nb") *
-            (col("nu") * lit(1.0) / col("c1")) / col("c2")), 4))
-        .select(col("w1"), col("w2"), col("pair_count"), col("pmi"))
-        .orderBy(col("pmi").desc, col("w1"), col("w2"))
-        .limit(25)
-    },
+    (s, d) => Graft.pmiBigrams(Tables(s, d, "documents"), "text", 5, 25),
     Some("""
       WITH t AS (
         SELECT string_split(text, ' ') AS toks FROM documents),
@@ -127,20 +87,10 @@ object LmOps extends OpModule {
     * shuffle. */
   val unigramLogprob = Op(
     "unigram_logprob",
-    (s, d) => {
-      val docs = Tables(s, d, "documents")
-      val toks = docs.select(col("doc_id"),
-        explode(split(col("text"), " ")).as("w"))
-      val cu = toks.groupBy(col("w")).agg(count(lit(1)).as("c"))
-      val nu = cu.agg(sum(col("c")).as("nu"))
-      toks
-        .join(broadcast(cu), "w")
-        .crossJoin(broadcast(nu))
-        .groupBy(col("doc_id"))
-        .agg(
-          count(lit(1)).as("n_toks"),
-          round(avg(log(col("c") * lit(1.0) / col("nu"))), 4).as("avg_logprob"))
-    },
+    (s, d) =>
+      Graft.unigramLogprob(Tables(s, d, "documents"), "text", "doc_id")
+        .select(col("doc_id"), col("n_tokens").as("n_toks"),
+          round(col("avg_logprob"), 4).as("avg_logprob")),
     Some("""
       WITH toks AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS w
@@ -354,15 +304,7 @@ object LmOps extends OpModule {
     * K-round loop operates on the vocabulary-sized table. */
   val bpeMerges = Op(
     "bpe_merges",
-    (s, d) => {
-      val words = Tables(s, d, "documents")
-        .select(explode(split(col("text"), " ")).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      learnMerges(words.select(
-        concat(lit("||"), regexp_replace(col("w"), "(.)", "$1||")).as("seg"),
-        col("c")))._1
-    },
+    (s, d) => Graft.bpeMerges(Tables(s, d, "documents"), "text", BpeRounds),
     Some {
       val rounds = (1 to BpeRounds).map { r =>
         s"""
@@ -407,29 +349,7 @@ object LmOps extends OpModule {
     * TakeOrderedAndProject (no global sort materialization). */
   val cooccurTopk = Op(
     "cooccur_topk",
-    (s, d) => {
-      val toks = Tables(s, d, "documents")
-        .select(split(col("text"), " ").as("toks"))
-      toks
-        // ≥2-token guard inside the generator (empty array → row
-        // dropped): a size filter would tokenize below the
-        // corpus-spread exchange (r13 lesson); the second explode's
-        // sequence(1, least(3, size-i)) is nonempty for every i ≤
-        // size-1, so only the first needs the guard
-        .select(col("toks"),
-          explode(when(size(col("toks")) >= 2,
-            sequence(lit(1), size(col("toks")) - 1))
-            .otherwise(expr("CAST(array() AS array<int>)"))).as("i"))
-        .select(col("toks"), col("i"),
-          explode(sequence(lit(1),
-            least(lit(3), size(col("toks")) - col("i")))).as("k"))
-        .select(element_at(col("toks"), col("i")).as("w1"),
-          element_at(col("toks"), col("i") + col("k")).as("w2"))
-        .groupBy(col("w1"), col("w2"))
-        .agg(count(lit(1)).as("n_cooccur"))
-        .orderBy(col("n_cooccur").desc, col("w1"), col("w2"))
-        .limit(20)
-    },
+    (s, d) => Graft.cooccurTopK(Tables(s, d, "documents"), "text", 3, 20),
     Some("""
       WITH t AS (
         SELECT string_split(text, ' ') AS toks FROM documents),
@@ -546,34 +466,7 @@ object LmOps extends OpModule {
     * window) and the final agg is top-K-sized. */
   val zipfFit = Op(
     "zipf_fit",
-    (s, d) => {
-      val counts = Tables(s, d, "documents")
-        .select(explode(split(col("text"), " ")).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy(col("w"))
-        .agg(count(lit(1)).as("c"))
-      val ranked = graft.ops.Ranks
-        .withGlobalRank(counts, "r", col("c").desc, col("w"))
-        .filter(col("r") <= 1000)
-        .withColumn("x", round(log(col("r").cast("double")), 6))
-        .withColumn("y", round(log(col("c").cast("double")), 6))
-      ranked.agg(
-        count(lit(1)).as("n_tokens"),
-        round(
-          (count(lit(1)) * sum(col("x") * col("y")) -
-            sum(col("x")) * sum(col("y"))) /
-            nullif(count(lit(1)) * sum(col("x") * col("x")) -
-              sum(col("x")) * sum(col("x")), lit(0.0)), 4)
-          .as("slope"),
-        round(
-          (sum(col("y")) -
-            (count(lit(1)) * sum(col("x") * col("y")) -
-              sum(col("x")) * sum(col("y"))) /
-              nullif(count(lit(1)) * sum(col("x") * col("x")) -
-                sum(col("x")) * sum(col("x")), lit(0.0)) *
-              sum(col("x"))) / count(lit(1)), 4)
-          .as("intercept"))
-    },
+    (s, d) => Graft.zipfFit(Tables(s, d, "documents"), "text", 1000),
     Some("""
       WITH counts AS (
         SELECT w, COUNT(*) AS c

@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.{Op, OpModule, Tables}
+import graft.api.Graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -215,10 +216,11 @@ object SimilarityOps extends OpModule {
   val MaxDf = 50
 
   /** Shared rare-shingle pair statistics: (doc_a, doc_b, n_inter,
-    * n_a, n_b) for every ordered pair (doc_a < doc_b) sharing at
-    * least one rare trigram — the candidate kernel under both
-    * `ngram_jaccard` (symmetric overlap) and `shingle_containment`
-    * (asymmetric overlap). One gram-keyed shuffle, one pair-keyed
+    * n_a, n_b) for every ordered pair (doc_a < doc_b) of `idCol`
+    * values sharing at least one rare `gramN`-gram (doc frequency
+    * ≤ `maxDf`) — the candidate kernel under both `ngram_jaccard`
+    * (symmetric overlap) and `Graft.containmentPairs`, which the
+    * declared `shingle_containment` runs (asymmetric overlap). One gram-keyed shuffle, one pair-keyed
     * map-side-combined count, two size joins; never all pairs.
     *
     * Shuffle key: the gram shuffles as `xxhash64(gram)` — an 8-byte
@@ -231,8 +233,9 @@ object SimilarityOps extends OpModule {
     * sf10 this cut the `shingle_containment` tail 45.2 s → see
     * SCALE.md; outputs verified pairwise-identical vs the string-key
     * plan at sf0.01 and sf1. */
-  private[text] def rareGramStats(s: SparkSession, d: String): DataFrame = {
-    graft.ext.GraftFunctions.register(s)
+  private[graft] def rareGramStats(df: DataFrame, textCol: String,
+      idCol: String, gramN: Int, maxDf: Int): DataFrame = {
+    graft.ext.GraftFunctions.register(df.sparkSession)
     // trigram hashes via the native ngram_hashes Generator: the token
     // array is evaluated once per row (the explode(transform(
     // sequence...)) formulation re-split the text per gram element
@@ -246,12 +249,12 @@ object SimilarityOps extends OpModule {
     // row-local set doesn't. No distinct exchange exists at all now;
     // the df rollup below is the first shuffle and it map-side
     // combines on the 8-byte key.
-    val allGrams = Tables(s, d, "documents")
-      .withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), expr("ngram_hashes(toks, 3)"))
+    val allGrams = df
+      .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("toks"))
+      .select(col("doc_id"), expr(s"ngram_hashes(toks, $gramN)"))
     val rare = allGrams.groupBy(col("g"))
       .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= MaxDf)
+      .filter(col("df") <= maxDf)
       .select(col("g"))
     val grams = allGrams.join(rare, "g")
     val sizes = grams.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -271,7 +274,7 @@ object SimilarityOps extends OpModule {
     * declared `ngram_jaccard` query and as the edge set of
     * `neardup_cluster`. */
   private[text] def jaccardPairs(s: SparkSession, d: String): DataFrame =
-    rareGramStats(s, d)
+    rareGramStats(Tables(s, d, "documents"), "text", "doc_id", 3, MaxDf)
       .withColumn("jaccard",
         round(col("n_inter").cast("double") /
           (col("n_a") + col("n_b") - col("n_inter")), 4))
@@ -329,14 +332,8 @@ object SimilarityOps extends OpModule {
   val shingleContainment = Op(
     "shingle_containment",
     (s, d) =>
-      rareGramStats(s, d)
-        .withColumn("contain_a",
-          round(col("n_inter").cast("double") / col("n_a"), 4))
-        .withColumn("contain_b",
-          round(col("n_inter").cast("double") / col("n_b"), 4))
-        .filter(col("contain_a") >= 0.6 || col("contain_b") >= 0.6)
-        .select(col("doc_a"), col("doc_b"),
-          col("contain_a"), col("contain_b")),
+      Graft.containmentPairs(Tables(s, d, "documents"), "text", "doc_id",
+        3, MaxDf, 0.6),
     Some(s"""
       WITH allgrams AS (
         SELECT DISTINCT doc_id, g
@@ -501,18 +498,18 @@ object SimilarityOps extends OpModule {
         .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  val minhashDet = Op(
-    "minhash_det",
-    (s, d) => minhashDetPairs(Tables(s, d, "documents"), 0.4),
-    Some {
-      val sigSql = (0 until 8).map(i =>
-        s"list_aggregate(list_transform(grams, g -> substring(md5(g), ${i * 4 + 1}, 4)), 'min') AS h$i")
-        .mkString(",\n               ")
-      val bandSql = (0 until 4).map(j =>
-        s"SELECT doc_id, $j AS band, h${2 * j} || h${2 * j + 1} AS bkey FROM sig")
-        .mkString("\n        UNION ALL ")
-      s"""
-      WITH docs AS (
+  /** The MinHash-LSH oracle CTEs `docs` (distinct token trigrams per
+    * doc), `sig` (8 md5 min-signatures) and `bands` (4 two-signature
+    * band keys), kept textually in ONE place so the `minhash_det` and
+    * `minhash_append` oracles cannot drift from each other. */
+  private def minhashBandsSql: String = {
+    val sigSql = (0 until 8).map(i =>
+      s"list_aggregate(list_transform(grams, g -> substring(md5(g), ${i * 4 + 1}, 4)), 'min') AS h$i")
+      .mkString(",\n               ")
+    val bandSql = (0 until 4).map(j =>
+      s"SELECT doc_id, $j AS band, h${2 * j} || h${2 * j + 1} AS bkey FROM sig")
+      .mkString("\n        UNION ALL ")
+    s"""docs AS (
         SELECT doc_id,
                list_distinct([toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]
                               FOR i IN range(0, len(toks) - 2)]) AS grams
@@ -523,7 +520,14 @@ object SimilarityOps extends OpModule {
                $sigSql
         FROM docs),
       bands AS (
-        $bandSql),
+        $bandSql)"""
+  }
+
+  val minhashDet = Op(
+    "minhash_det",
+    (s, d) => minhashDetPairs(Tables(s, d, "documents"), 0.4),
+    Some(s"""
+      WITH $minhashBandsSql,
       cand AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands a JOIN bands b
@@ -543,8 +547,7 @@ object SimilarityOps extends OpModule {
       JOIN sizes sa ON sa.doc_id = doc_a
       JOIN sizes sb ON sb.doc_id = doc_b
       WHERE ROUND(CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter), 4)
-              >= 0.4"""
-    })
+              >= 0.4"""))
 
   /** Exact-Jaccard verification of an LSH candidate pair set:
     * (doc_a, doc_b, n_inter→jaccard) over ONLY the candidate docs'
@@ -735,27 +738,9 @@ object SimilarityOps extends OpModule {
         .filter(col("jaccard") >= 0.4)
         .select(col("doc_a"), col("doc_b"), col("jaccard"))
     },
-    Some {
-      val sigSql = (0 until 8).map(i =>
-        s"list_aggregate(list_transform(grams, g -> substring(md5(g), ${i * 4 + 1}, 4)), 'min') AS h$i")
-        .mkString(",\n               ")
-      val bandSql = (0 until 4).map(j =>
-        s"SELECT doc_id, $j AS band, h${2 * j} || h${2 * j + 1} AS bkey FROM sig")
-        .mkString("\n        UNION ALL ")
-      s"""
+    Some(s"""
       WITH mxc AS (SELECT max(doc_id) AS mxd FROM documents),
-      docs AS (
-        SELECT doc_id,
-               list_distinct([toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]
-                              FOR i IN range(0, len(toks) - 2)]) AS grams
-        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        WHERE len(toks) >= 3),
-      sig AS (
-        SELECT doc_id,
-               $sigSql
-        FROM docs),
-      bands AS (
-        $bandSql),
+      $minhashBandsSql,
       cand AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands a JOIN bands b
@@ -777,8 +762,7 @@ object SimilarityOps extends OpModule {
       JOIN sizes sa ON sa.doc_id = doc_a
       JOIN sizes sb ON sb.doc_id = doc_b
       WHERE ROUND(CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter), 4)
-              >= 0.4"""
-    })
+              >= 0.4"""))
 
   /** Heuristic language ID from stopword-marker counts (n-gram
     * heuristic family): argmax over per-language marker hit counts

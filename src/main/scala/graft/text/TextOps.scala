@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.{Op, OpModule, Tables}
+import graft.api.Graft
 import org.apache.spark.sql.functions._
 
 /** Text-analysis & deduplication operators over the `documents`
@@ -519,16 +520,7 @@ object TextOps extends OpModule {
     * both engines meet at the 4 dp output rounding, as before. */
   val entropyFilter = Op(
     "entropy_filter",
-    (s, d) => {
-      graft.ext.GraftFunctions.register(s)
-      Tables(s, d, "documents")
-        .filter(col("n_chars") > 0)
-        .select(col("doc_id"),
-          round(expr("char_entropy(text)"), 4).as("entropy"))
-        .select(col("doc_id"), col("entropy"),
-          when(col("entropy") >= 2.0, lit(1)).otherwise(lit(0))
-            .as("keep"))
-    },
+    (s, d) => Graft.entropyFilter(Tables(s, d, "documents"), "text", "doc_id"),
     Some("""
       WITH ch AS (
         SELECT doc_id, n_chars, substr(text, i, 1) AS ch

@@ -793,6 +793,35 @@ object VectorOps extends OpModule {
         col("m.c_id").as("c_id"), col("cc_id"))
   }
 
+  /** The `vec_id`s of `assigned` (vec_id, embedding, c_id) rows with
+    * a LOWER-id same-cluster neighbor at 4dp-rounded cosine ≥
+    * `threshold` — the EXISTS-lower-id drop rule of `semdedup`,
+    * `Graft.semdedup` and `Graft.curate`'s semantic stage; evidence is
+    * every assigned row, dropped or not (not a transitive closure).
+    *
+    * The pair join's natural key is c_id alone — k partitions of work
+    * no matter how many cores. The self-join is salted `saltB` ways:
+    * the probe side carries its natural id bucket, the build side
+    * replicates across all buckets, the joined pair set is IDENTICAL,
+    * and the shuffle key (c_id, bkt) gives k·saltB-way parallelism.
+    * With k = ⌈N/τ⌉ pinning expected cluster size at τ, salting
+    * decouples core count from k at small N. Lazy: callers that read
+    * `assigned` more than once materialize it themselves. */
+  private[graft] def lowerIdDuplicates(assigned: DataFrame,
+      threshold: Double, saltB: Int = 16): DataFrame = {
+    val lower = assigned.select(col("c_id").as("a_c"),
+      col("vec_id").as("a_id"), col("embedding").as("a_emb"))
+      .withColumn("a_bkt", pmod(col("a_id"), lit(saltB)).cast("int"))
+    val upper = assigned.select(col("vec_id"), col("embedding"),
+      col("c_id"), explode(sequence(lit(0), lit(saltB - 1))).as("bkt"))
+    upper
+      .join(lower, col("c_id") === col("a_c") &&
+        col("bkt") === col("a_bkt") && col("a_id") < col("vec_id"))
+      .withColumn("score", round(dot("embedding", "a_emb"), 4))
+      .filter(col("score") >= threshold)
+      .select(col("vec_id")).distinct()
+  }
+
   /** [[assignThreeLevel]] with the coarse and mid levels derived
     * from the seed set itself: kc = max(4, ⌈∛n_seeds⌉) and
     * km = min(n_seeds, kc²) lowest-c_id seeds. One rule for every
@@ -1316,27 +1345,7 @@ object VectorOps extends OpModule {
       // the lineage
       val assigned = assignFrozen(emb, seeds)
         .localCheckpoint()
-      // the pair join's natural key is c_id alone — k partitions of
-      // work no matter how many cores. Salt the self-join with a
-      // 16-way id-bucket: the probe side carries its natural bucket,
-      // the build side replicates across all 16, the joined pair set
-      // is IDENTICAL, and the shuffle key (c_id, bkt) gives k·16-way
-      // parallelism. With k = ⌈N/τ⌉ pinning expected cluster size
-      // at τ, salting decouples core count from k at small N.
-      val SaltB = 16
-      val lower = assigned.select(col("c_id").as("a_c"),
-        col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-        .withColumn("a_bkt", pmod(col("a_id"), lit(SaltB)).cast("int"))
-      val upper = assigned.select(col("vec_id"), col("embedding"),
-        col("c_id"),
-        explode(sequence(lit(0), lit(SaltB - 1))).as("bkt"))
-      val dropped = upper
-        .join(lower, col("c_id") === col("a_c") &&
-          col("bkt") === col("a_bkt") &&
-          col("a_id") < col("vec_id"))
-        .withColumn("score", round(dot("embedding", "a_emb"), 4))
-        .filter(col("score") >= 0.3)
-        .select(col("vec_id")).distinct()
+      val dropped = lowerIdDuplicates(assigned, 0.3)
         .withColumn("is_dropped", lit(1))
       assigned
         .join(dropped, Seq("vec_id"), "left")

@@ -50,7 +50,6 @@ class FacadeCoverageSpec extends AnyFunSuite {
     "dauMau" -> (Graft.dauMau _),
     "zipfFit" -> (Graft.zipfFit _),
     "winnowFingerprints" -> (Graft.winnowFingerprints _),
-    // round 9
     "funnel" -> (Graft.funnel _),
     "attribution" -> (Graft.attribution _),
     "markovTransitions" -> (Graft.markovTransitions _),
@@ -59,13 +58,14 @@ class FacadeCoverageSpec extends AnyFunSuite {
     "minhashPairs" -> (Graft.minhashPairs _),
     "winsorize" -> (Graft.winsorize _),
     "bpeMerges" -> (Graft.bpeMerges _),
-    // round 11
     "domainCap" -> (Graft.domainCap _),
     "mixTemperature" -> (Graft.mixTemperature _),
     "shuffleShards" -> (Graft.shuffleShards _))
 
   /** facade name -> the declared ops it generalizes (the op pins the
-    * facade to fixed parameters; ApiSpec asserts the equivalences). */
+    * facade to fixed parameters: mostly the op is the facade call plus
+    * a rename/round projection; ApiSpec asserts the equivalence of the
+    * ops that keep a plan of their own). */
   private val facadeCoverage: Map[String, Seq[String]] = Map(
     "sessionize" -> Seq("sessionize", "session_window", "ga_sessions",
       "session_metrics", "session_paths"),

@@ -233,11 +233,27 @@ class Round8OpsSpec extends AnyFunSuite {
   test("semdedup's pair join shuffles on the salted (c_id, bkt) key") {
     // the unsalted join's parallelism equals k (8) no matter the core
     // count — measured ~25 min for 2.5B pairs at sf10. This guard
-    // pins the 16-way id-bucket salt in the exchange key.
-    val plan = q("semdedup").queryExecution.executedPlan.toString
-    val salted = plan.linesIterator.exists(l =>
-      l.contains("hashpartitioning(c_id") && l.contains("bkt"))
-    assert(salted, plan.take(2000))
+    // pins the 16-way id-bucket salt in the exchange key of every
+    // user of the shared pair join (VectorOps.lowerIdDuplicates): the
+    // declared op, the Graft.semdedup facade and curate's semantic
+    // drop set.
+    def assertSalted(df: org.apache.spark.sql.DataFrame): Unit = {
+      val plan = df.queryExecution.executedPlan.toString
+      val salted = plan.linesIterator.exists(l =>
+        l.contains("hashpartitioning(c_id") && l.contains("bkt"))
+      assert(salted, plan.take(2000))
+    }
+    assertSalted(q("semdedup"))
+    api.Graft.register(spark)
+    val emb = Tables(spark, sfDir, "embeddings")
+    val seeds = emb.filter(col("vec_id") < 8)
+    assertSalted(api.Graft.semdedup(emb, "embedding", "vec_id",
+      seeds.select(col("vec_id").as("cid"), col("embedding").as("cvec")),
+      "cid", "cvec"))
+    assertSalted(api.Graft.semanticDroppedIds(
+      emb.select(col("vec_id").as("doc_id"), col("embedding")),
+      seeds.select(col("vec_id").as("c_id"), col("embedding").as("c_emb")),
+      0.3))
   }
 
   test("pq_topk recall@10 against exact top-k stays above its floor") {
