@@ -513,82 +513,25 @@ object JourneyOps extends OpModule {
     * reassign), per-variant user/conversion/revenue rollups in exact
     * integers, conversion lift in basis points, and the two-proportion
     * z-score computed from the integer counts in one fixed formula
-    * order (rounded 4dp) so both engines agree.
+    * order (rounded 4dp) so both engines agree. This is the
+    * `Graft.abLift` facade at fixed predicates, so it shares the
+    * facade's empty-input rule: no users in an arm gives zero counts,
+    * NULL rates and lift, and z = 0.
     *
     * Scale: one user_id-keyed rollup (map-side combined), then a
     * 2-row conditional aggregation — nothing after the first shuffle
     * is data-sized. */
   val abLift = Op(
     "ab_lift",
-    (s, d) => {
-      // pmod, not %: a negative user id must still land in exactly
-      // one arm (JVM % yields -1 for odd negative hashes). Same fix
-      // as the Graft.abLift facade, so the equivalence holds on the
-      // full id domain, not just non-negative fixture ids. NOTE the
-      // multiplier is odd, so mod 2 this reduces to user-id parity —
-      // fine for a deterministic split, NOT a general hash (see
-      // split_hash's disclosure).
-      val users = ev(s, d)
-        .withColumn("variant",
-          expr("pmod((user_id % 100000) * 2654435761, 2)"))
-        .groupBy(col("user_id"), col("variant"))
-        .agg(
-          // conversion = a HIGH-VALUE purchase (> $150): in a fixture
-          // where nearly every user purchases something, raw
-          // any-purchase saturates both arms at 100% and the z-score
-          // degenerates; the thresholded event keeps the readout a
-          // real two-proportion comparison
-          max(when(col("event_type") === "purchase" &&
-            col("value") > 150, 1L).otherwise(0L))
-            .as("converted"),
-          sum(when(col("event_type") === "purchase",
-            floor(col("value") * 100).cast("long")).otherwise(0L))
-            .as("cents"))
-      users
-        .groupBy()
-        .agg(
-          sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n_a"),
-          sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n_b"),
-          sum(when(col("variant") === 0, col("converted"))
-            .otherwise(0L)).as("conv_a"),
-          sum(when(col("variant") === 1, col("converted"))
-            .otherwise(0L)).as("conv_b"),
-          sum(when(col("variant") === 0, col("cents")).otherwise(0L))
-            .as("cents_a"),
-          sum(when(col("variant") === 1, col("cents")).otherwise(0L))
-            .as("cents_b"))
-        // guards: an empty arm (n=0) or a sub-basis-point conversion
-        // rate (0 < rate < 1 bp rounds to 0) would divide by zero —
-        // ANSI Spark throws where DuckDB yields NULL; make both NULL.
-        // Sequential WHEN branches keep the n=0 case from ever
-        // evaluating the div.
-        .withColumn("conv_a_bp", expr(
-          "CASE WHEN n_a = 0 THEN NULL" +
-            " ELSE conv_a * 10000 div n_a END"))
-        .withColumn("conv_b_bp", expr(
-          "CASE WHEN n_b = 0 THEN NULL" +
-            " ELSE conv_b * 10000 div n_b END"))
-        .withColumn("lift_bp", expr(
-          "CASE WHEN n_a = 0 OR n_b = 0 THEN NULL" +
-            " WHEN conv_a * 10000 div n_a = 0 THEN NULL" +
-            " ELSE (conv_b * 10000 div n_b - conv_a * 10000 div n_a)" +
-            " * 10000 div (conv_a * 10000 div n_a) END"))
-        .withColumn("z_score", round(expr(
-          // degenerate pools (0% or 100% both arms) have zero
-          // variance: report z = 0 instead of dividing by it.
-          // CAST AS DOUBLE everywhere: a bare `x * 1.0` literal is
-          // DECIMAL in Spark SQL and the whole chain then runs in
-          // truncating decimal arithmetic — last-digit-wrong z at
-          // sf10 vs DuckDB's double path (caught by the sf10 gate)
-          "CASE WHEN conv_a + conv_b = 0" +
-            " OR conv_a + conv_b = n_a + n_b THEN 0.0 ELSE " +
-            "(CAST(conv_b AS DOUBLE) / n_b" +
-            " - CAST(conv_a AS DOUBLE) / n_a) / " +
-            "sqrt(CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b) * " +
-            "(1.0 - CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b)) * " +
-            "(CAST(1 AS DOUBLE) / n_a + CAST(1 AS DOUBLE) / n_b))" +
-            " END"), 4))
-    },
+    (s, d) =>
+      // conversion = a HIGH-VALUE purchase (> $150): in a fixture
+      // where nearly every user purchases something, raw any-purchase
+      // saturates both arms at 100% and the z-score degenerates; the
+      // thresholded event keeps the readout a real two-proportion
+      // comparison
+      Graft.abLift(Tables.events(s, d), "user_id", "value",
+        col("event_type") === "purchase" && col("value") > 150,
+        col("event_type") === "purchase"),
     Some("""
       WITH u AS (
         SELECT user_id,
@@ -601,18 +544,18 @@ object JourneyOps extends OpModule {
         FROM events GROUP BY 1, 2),
       agg AS (
         SELECT
-          CAST(SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_a,
-          CAST(SUM(CASE WHEN variant = 1 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_b,
-          CAST(SUM(CASE WHEN variant = 0 THEN converted ELSE 0 END)
-            AS BIGINT) AS conv_a,
-          CAST(SUM(CASE WHEN variant = 1 THEN converted ELSE 0 END)
-            AS BIGINT) AS conv_b,
-          CAST(SUM(CASE WHEN variant = 0 THEN cents ELSE 0 END)
-            AS BIGINT) AS cents_a,
-          CAST(SUM(CASE WHEN variant = 1 THEN cents ELSE 0 END)
-            AS BIGINT) AS cents_b
+          CAST(COALESCE(SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END), 0)
+            AS BIGINT) AS n_a,
+          CAST(COALESCE(SUM(CASE WHEN variant = 1 THEN 1 ELSE 0 END), 0)
+            AS BIGINT) AS n_b,
+          CAST(COALESCE(SUM(CASE WHEN variant = 0 THEN converted
+            ELSE 0 END), 0) AS BIGINT) AS conv_a,
+          CAST(COALESCE(SUM(CASE WHEN variant = 1 THEN converted
+            ELSE 0 END), 0) AS BIGINT) AS conv_b,
+          CAST(COALESCE(SUM(CASE WHEN variant = 0 THEN cents
+            ELSE 0 END), 0) AS BIGINT) AS cents_a,
+          CAST(COALESCE(SUM(CASE WHEN variant = 1 THEN cents
+            ELSE 0 END), 0) AS BIGINT) AS cents_b
         FROM u)
       SELECT n_a, n_b, conv_a, conv_b, cents_a, cents_b,
              CASE WHEN n_a = 0 THEN NULL
@@ -623,7 +566,7 @@ object JourneyOps extends OpModule {
                   WHEN conv_a * 10000 // n_a = 0 THEN NULL
                   ELSE (conv_b * 10000 // n_b - conv_a * 10000 // n_a)
                     * 10000 // (conv_a * 10000 // n_a) END AS lift_bp,
-             ROUND(CASE WHEN conv_a + conv_b = 0
+             ROUND(CASE WHEN n_a = 0 OR n_b = 0 OR conv_a + conv_b = 0
                      OR conv_a + conv_b = n_a + n_b THEN 0.0 ELSE
                (CAST(conv_b AS DOUBLE) / n_b
                 - CAST(conv_a AS DOUBLE) / n_a) /

@@ -76,6 +76,217 @@ object VectorOps extends OpModule {
       col("s2") + col("c2") - lit(2.0) * dotCol) * 10000 +
       lit(0.5)).cast("long") * 65536L + col("code"))
 
+  /** The first-16 vectors as frozen IVF seeds (c_id, c_emb) — the
+    * deterministic coarse quantizer of every float-seed IVF op. */
+  private def seeds(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") < 16)
+      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
+
+  /** MIPS argmax assignment — the cross-engine determinism contract
+    * (4dp-rounded `c_score`, lowest-c_id tie-break) in ONE place for
+    * every IVF and k-means consumer. `score` is the unrounded dot of
+    * each vector against a broadcast centroid row: `dot_f` against
+    * float seeds (the default) or `dotD("embedding", "cent")` against
+    * Lloyd-refined double centroids. `carry` is what the argmax keeps
+    * beside c_id: the embedding (the default — inverted lists that
+    * probes re-score), the winning "c_score", or nothing (None: the
+    * struct-free `max_by(c_id)`). Map-side `max_by` partials: the
+    * exchange carries N one-row-per-vector partials, never N·k scored
+    * rows. `cents` must be catalog-sized (broadcast). Returns
+    * (vec_id, carry, c_id), or (vec_id, c_id) with no carry. */
+  private def assignArgmax(emb: DataFrame, cents: DataFrame,
+      score: Column = dot("embedding", "c_emb"),
+      carry: Option[String] = Some("embedding")): DataFrame = {
+    val scored = emb.crossJoin(broadcast(cents))
+      .withColumn("c_score", round(score, 4))
+      .groupBy(col("vec_id"))
+    val order = struct(col("c_score"), -col("c_id"))
+    carry match {
+      case None => scored.agg(max_by(col("c_id"), order).as("c_id"))
+      case Some(c) => scored
+        .agg(max_by(struct(col("c_id"), col(c)), order).as("m"))
+        .select(col("vec_id"), col(s"m.$c").as(c),
+          col("m.c_id").as("c_id"))
+    }
+  }
+
+  /** The IVF probe: the 2 centroids nearest the query row(s) `q`
+    * (nprobe = 2), ranked by the same 4dp-rounded `score` as
+    * [[assignArgmax]] with the lowest c_id first; returns (c_id). */
+  private def probeLists(q: DataFrame, cents: DataFrame,
+      score: Column = dot("embedding", "c_emb")): DataFrame =
+    q.crossJoin(broadcast(cents))
+      .withColumn("c_score", round(score, 4))
+      .orderBy(col("c_score").desc, col("c_id"))
+      .limit(2)
+      .select(col("c_id"))
+
+  /** [[probeLists]] per query: each `qs` row's (q_id, q_emb) `n`
+    * nearest centroids as (q_id, c_id, rn) — the recall ops' query
+    * panel. */
+  private def probePerQuery(qs: DataFrame, cents: DataFrame,
+      score: Column, n: Int): DataFrame =
+    qs.crossJoin(broadcast(cents))
+      .withColumn("c_score", round(score, 4))
+      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("c_score").desc, col("c_id"))))
+      .filter(col("rn") <= n)
+      .select(col("q_id"), col("c_id"), col("rn"))
+
+  /** The PQ split: each vector's m = 8 sub-vectors of 8 dims as
+    * (vec_id, s, sv, s2). s2 = sv·sv is the ‖a−b‖² identity's
+    * self-dot, hoisted out of the 16-code scoring fan-out: computed
+    * once per (vec, s) row, so a scored pair costs ONE 8-dim dot,
+    * not three — same operands, same fold order, same 4dp round, so
+    * d2 is bit-identical to three dots per pair. */
+  private def pqSplit(emb: DataFrame): DataFrame =
+    emb
+      .select(col("vec_id"),
+        explode(sequence(lit(0), lit(7))).as("s"),
+        col("embedding"))
+      .withColumn("sv", expr("slice(embedding, s * 8 + 1, 8)"))
+      .withColumn("s2", dot("sv", "sv"))
+      .select(col("vec_id"), col("s"), col("sv"), col("s2"))
+
+  /** The seed sub-codebooks: the first-`k` vectors' float sub-vectors
+    * as (code, s, c_sv, c2 = c_sv·c_sv), the cell self-dot computed
+    * once per codebook cell in the broadcast. */
+  private def seedCodebook(emb: DataFrame, k: Int = 16): DataFrame =
+    emb.filter(col("vec_id") < k)
+      .select(col("vec_id").as("code"),
+        explode(sequence(lit(0), lit(7))).as("s"),
+        col("embedding"))
+      .withColumn("c_sv", expr("slice(embedding, s * 8 + 1, 8)"))
+      .withColumn("c2", dot("c_sv", "c_sv"))
+      .select(col("code"), col("s"), col("c_sv"), col("c2"))
+
+  /** PQ encode: each (vec_id, s) sub-vector of `sub` to its nearest
+    * `cb` cell, the per-(vec, subspace) argmin over the packed
+    * integer key (see [[pqKey]]: min(key) IS the oracle window's
+    * (ROUND(d2, 4) asc, code asc), with zero BigDecimal work in the
+    * scored loop). A plain long min stays in whole-stage-codegen
+    * HashAggregate with map-side partials; min_by(struct) is a
+    * TypedImperativeAgg → ObjectHashAggregate, whose tiny sort-based
+    * fallback threshold turned every encode pass into a 25M-row sort
+    * at sf10 (SCALE.md round 12). `dotK` is `dot` for a float
+    * codebook and `dotD` for a double (trained) one. Returns
+    * (vec_id, s, code). */
+  private def pqEncode(sub: DataFrame, cb: DataFrame,
+      dotK: (String, String) => Column): DataFrame =
+    sub.join(broadcast(cb), "s")
+      .withColumn("k", pqKey(dotK("sv", "c_sv")))
+      .groupBy(col("vec_id"), col("s"))
+      .agg(min(col("k")).as("k"))
+      .select(col("vec_id"), col("s"), (col("k") % 65536L).as("code"))
+
+  /** The integer ADC table: for each query sub-vector row of `q`
+    * (key columns…, s, q_sv) and each `cb` cell of its subspace, the
+    * dot in integer ten-thousandths, so the 8-term ADC sum is EXACT
+    * integer arithmetic in both engines and no accumulation order
+    * can flip a top-k. Returns (key columns…, code, qdot_i). */
+  private def adcTable(q: DataFrame, cb: DataFrame,
+      dotK: (String, String) => Column): DataFrame = {
+    val keys = q.columns.filter(_ != "q_sv").map(col).toSeq
+    q.join(broadcast(cb), "s")
+      .withColumn("qdot_i",
+        round(dotK("q_sv", "c_sv") * 10000, 0).cast("long"))
+      .select(keys :+ col("code") :+ col("qdot_i"): _*)
+  }
+
+  // ---- oracle CTE fragments: the DuckDB mirror of each kernel above,
+  // kept textually in ONE place so no op's oracle can drift from
+  // another's (the lloydSql / pqLloydSql / threeLevelSql precedent)
+
+  /** Centroid-vector expressions for [[assignedSql]]/[[probesSql]]:
+    * float seeds `c(c_id, c_emb)` widen to DOUBLE[]; Lloyd centroids
+    * `c(c_id, cent)` already are DOUBLE[]. */
+  private val SeedVec = "CAST(c.c_emb AS DOUBLE[])"
+  private val CentVec = "c.cent"
+
+  /** [[seeds]]: the first-16 vectors as `name(c_id, c_emb)`; `cond`
+    * appends a predicate (the append ops' base-corpus restriction). */
+  private def seedsSql(name: String, cond: String = ""): String = s"""
+      $name AS (
+        SELECT vec_id AS c_id, embedding AS c_emb
+        FROM embeddings WHERE vec_id < 16$cond)"""
+
+  /** [[assignArgmax]]: every `src` vector's 4dp-rounded argmax
+    * centroid of `cents` (lowest c_id on ties) as
+    * `name(vec_id, embedding, c_id, c_score)`; `cvec` is the centroid
+    * vector ([[SeedVec]] or [[CentVec]]). */
+  private def assignedSql(name: String, cents: String,
+      cvec: String = SeedVec, src: String = "embeddings"): String = s"""
+      $name AS (
+        SELECT vec_id, embedding, c_id, c_score FROM (
+          SELECT e.vec_id, e.embedding, c.c_id,
+                 ROUND(list_dot_product(
+                   CAST(e.embedding AS DOUBLE[]), $cvec), 4) AS c_score,
+                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                   ORDER BY ROUND(list_dot_product(
+                     CAST(e.embedding AS DOUBLE[]), $cvec), 4) DESC,
+                   c.c_id) AS rn
+          FROM $src e, $cents c)
+        WHERE rn = 1)"""
+
+  /** [[probeLists]] / [[probePerQuery]]: each `q(q_id, q_emb)` row's
+    * `n` nearest centroids of `cents` by the same rounded score, as
+    * `name(q_id, c_id, rn)`. */
+  private def probesSql(name: String, q: String, cents: String, n: Int,
+      cvec: String = SeedVec): String = s"""
+      $name AS (
+        SELECT q_id, c_id, rn FROM (
+          SELECT q.q_id, c.c_id,
+                 ROW_NUMBER() OVER (PARTITION BY q.q_id
+                   ORDER BY ROUND(list_dot_product(
+                     CAST(q.q_emb AS DOUBLE[]), $cvec), 4) DESC,
+                   c.c_id) AS rn
+          FROM $q q, $cents c)
+        WHERE rn <= $n)"""
+
+  /** The single-target query of [[probesSql]]: vector `id`. */
+  private def targetSql(id: String): String =
+    "(SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings" +
+      s" WHERE vec_id = $id)"
+
+  /** [[pqSplit]]: `sub(vec_id, s, sv DOUBLE[8])`. */
+  private val subSql = """
+      sub AS (
+        SELECT vec_id, s,
+               CAST(embedding[s * 8 + 1 : s * 8 + 8] AS DOUBLE[]) AS sv
+        FROM embeddings, UNNEST(generate_series(0, 7)) AS u(s))"""
+
+  /** [[seedCodebook]]: the first-`k` vectors' sub-vectors as
+    * `name(code, s, c_sv)`; `cond` as in [[seedsSql]]. */
+  private def cbSql(name: String, k: Int, cond: String = ""): String = s"""
+      $name AS (
+        SELECT vec_id AS code, s, sv AS c_sv
+        FROM sub WHERE vec_id < $k$cond)"""
+
+  /** [[pqEncode]]: every sub-vector's 4dp-rounded L2 argmin cell of
+    * codebook `cb` (lowest code on ties) as `name(vec_id, s, code)`. */
+  private def codesSql(name: String, cb: String): String = s"""
+      $name AS (
+        SELECT vec_id, s, code FROM (
+          SELECT sub.vec_id, sub.s, cb.code,
+                 ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
+                   ORDER BY ROUND(list_dot_product(sv, sv)
+                     + list_dot_product(c_sv, c_sv)
+                     - 2 * list_dot_product(sv, c_sv), 4) ASC,
+                   cb.code) AS rn
+          FROM sub JOIN $cb cb USING (s))
+        WHERE rn = 1)"""
+
+  /** [[adcTable]]: for the query vectors matching `q` (a predicate on
+    * `sub`), `name(q_id, s, code, qdot_i)` in integer
+    * ten-thousandths. */
+  private def adcSql(name: String, cb: String, q: String): String = s"""
+      $name AS (
+        SELECT qq.vec_id AS q_id, cb.s, cb.code,
+               CAST(ROUND(list_dot_product(qq.sv, cb.c_sv) * 10000, 0)
+                 AS BIGINT) AS qdot_i
+        FROM (SELECT vec_id, s, sv FROM sub WHERE $q) qq
+        JOIN $cb cb USING (s))"""
+
   /** Lloyd refinement over the deterministic first-`k` seed
     * centroids, iterated `rounds` times under a FIXED deterministic
     * cap (no data-dependent convergence test — the cap is what keeps
@@ -107,13 +318,8 @@ object VectorOps extends OpModule {
       .select(col("vec_id").as("c_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("cent"))
     (1 to rounds).foreach { _ =>
-      val assign = emb.crossJoin(broadcast(cents))
-        .withColumn("score", round(dotD("embedding", "cent"), 4))
-        .groupBy(col("vec_id"))
-        .agg(max_by(struct(col("c_id"), col("embedding")),
-          struct(col("score"), -col("c_id"))).as("m"))
-        .select(col("m.embedding").as("embedding"),
-          col("m.c_id").as("c_id"))
+      val assign = assignArgmax(emb, cents, dotD("embedding", "cent"))
+        .select(col("embedding"), col("c_id"))
         // pin 32-way partitioning before the 64x posexplode below:
         // AQE coalesces the small agg exchange to ~1 partition and
         // the per-dim mean pass then runs single-task (the same
@@ -152,15 +358,7 @@ object VectorOps extends OpModule {
          |  SELECT vec_id AS c_id, CAST(embedding AS DOUBLE[]) AS cent
          |  FROM $src WHERE vec_id < $k)""".stripMargin
     val rs = (1 to rounds).map { r =>
-      s"""a$r AS (
-         |  SELECT vec_id, embedding, c_id FROM (
-         |    SELECT e.vec_id, e.embedding, c.c_id,
-         |           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-         |             ORDER BY ROUND(list_dot_product(
-         |               CAST(e.embedding AS DOUBLE[]), c.cent), 4) DESC,
-         |             c.c_id) AS rn
-         |    FROM $src e, c${r - 1} c)
-         |  WHERE rn = 1),
+      s"""${assignedSql(s"a$r", s"c${r - 1}", CentVec, src)},
          |m$r AS (
          |  SELECT c_id, list(v ORDER BY pos) AS cent
          |  FROM (SELECT c_id, pos, ROUND(AVG(x), 4) AS v
@@ -193,21 +391,9 @@ object VectorOps extends OpModule {
     * (vec_id, s, sv DOUBLE[]) is already in scope. */
   private def pqLloydSql(rounds: Int, k: Int = 16,
       x: String = "p"): String = {
-    val p0 =
-      s"""${x}0 AS (
-        |  SELECT vec_id AS code, s, sv AS c_sv
-        |  FROM sub WHERE vec_id < $k)""".stripMargin
+    val p0 = cbSql(s"${x}0", k)
     val rs = (1 to rounds).map { r =>
-      s"""$x${r}a AS (
-         |  SELECT vec_id, s, code FROM (
-         |    SELECT sub.vec_id, sub.s, cb.code,
-         |           ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
-         |             ORDER BY ROUND(list_dot_product(sv, sv)
-         |               + list_dot_product(c_sv, c_sv)
-         |               - 2 * list_dot_product(sv, c_sv), 4) ASC,
-         |             cb.code) AS rn
-         |    FROM sub JOIN $x${r - 1} cb USING (s))
-         |  WHERE rn = 1),
+      s"""${codesSql(s"$x${r}a", s"$x${r - 1}")},
          |$x${r}m AS (
          |  SELECT s, code, list(v ORDER BY pos) AS c_sv
          |  FROM (SELECT s, code, pos, ROUND(AVG(x), 4) AS v
@@ -228,11 +414,11 @@ object VectorOps extends OpModule {
   /** PQ sub-codebook Lloyd refinement — the training loop factored
     * out of `pq_topk_trained` so the recall suite can train grown
     * codebooks with the exact same kernel: round-0 sub-codebooks are
-    * the first-`k` seed sub-vectors widened float→double (identical
-    * bits, so round 1 scores exactly as the float seeds did); each
-    * round assigns every sub-vector to its nearest current cell (the
-    * packed-key min argmin — pqKey's codegen'd HashAggregate form of
-    * min_by(code, (d2, code)) with zero BigDecimal work), recomputes
+    * the float [[seedCodebook]] (the dot_fd encode widens them
+    * exactly, and the first keep-previous coalesce widens an
+    * unchanged cell to the same double bits); each round assigns
+    * every sub-vector to its nearest current cell ([[pqEncode]]'s
+    * packed-key min argmin), recomputes
     * cells as 4dp-rounded per-(s, code, dim) means, and KEEPS the
     * previous cell when a cluster empties. Returns (s, code,
     * c_sv: array<double>, c2).
@@ -247,24 +433,9 @@ object VectorOps extends OpModule {
     * otherwise re-execute ~2^rounds times (measured: 72 s sf10). */
   private def pqLloydRefine(emb: DataFrame, sub: DataFrame, k: Int,
       rounds: Int): DataFrame = {
-    val selfDotD = (c: String) => expr(s"dot_fd($c, $c)")
-    var cb = emb.filter(col("vec_id") < k)
-      .select(col("vec_id").as("code"),
-        explode(sequence(lit(0), lit(7))).as("s"),
-        col("embedding"))
-      .withColumn("c_sv", expr(
-        "transform(slice(embedding, s * 8 + 1, 8)," +
-          " x -> CAST(x AS DOUBLE))"))
-      .select(col("s"), col("code"), col("c_sv"))
-      .withColumn("c2", selfDotD("c_sv"))
+    var cb = seedCodebook(emb, k)
     (1 to rounds).foreach { _ =>
-      val a = sub.join(broadcast(cb), "s")
-        .withColumn("k", pqKey(dotD("sv", "c_sv")))
-        .groupBy(col("vec_id"), col("s"))
-        .agg(min(col("k")).as("k"))
-        .select(col("vec_id"), col("s"),
-          (col("k") % 65536L).as("code"))
-        .localCheckpoint()
+      val a = pqEncode(sub, cb, dotD).localCheckpoint()
       val means = a.join(sub, Seq("vec_id", "s"))
         .select(col("s"), col("code"), posexplode(col("sv")))
         .groupBy(col("s"), col("code"), col("pos"))
@@ -275,7 +446,7 @@ object VectorOps extends OpModule {
       cb = cb.join(means, Seq("s", "code"), "left")
         .select(col("s"), col("code"),
           coalesce(col("newsv"), col("c_sv")).as("c_sv"))
-        .withColumn("c2", selfDotD("c_sv"))
+        .withColumn("c2", dotD("c_sv", "c_sv"))
         .localCheckpoint()
     }
     cb
@@ -451,6 +622,39 @@ object VectorOps extends OpModule {
       ORDER BY score DESC, vec_id
       LIMIT 10"""))
 
+  /** The IVF query against centroids `cents`: every vector assigned
+    * to its argmax centroid (the inverted lists), the vec_id-0
+    * target's 2 nearest lists probed, and only those lists' vectors
+    * scored exactly; `score` is the centroid dot ([[assignArgmax]]).
+    * Returns the top-10 (vec_id, c_id, score). */
+  private def ivfTop10(emb: DataFrame, cents: DataFrame,
+      score: Column): DataFrame = {
+    val assigned = assignArgmax(emb, cents, score)
+    val probes = probeLists(emb.filter(col("vec_id") === 0), cents, score)
+    val target = emb.filter(col("vec_id") === 0)
+      .select(col("embedding").as("t_emb"))
+    assigned.join(broadcast(probes), "c_id")
+      .filter(col("vec_id") =!= 0)
+      .crossJoin(broadcast(target))
+      .withColumn("score", round(dot("embedding", "t_emb"), 4))
+      .select(col("vec_id"), col("c_id"), col("score"))
+      .orderBy(col("score").desc, col("vec_id"))
+      .limit(10)
+  }
+
+  /** The oracle of [[ivfTop10]] against centroid CTE `cents`. */
+  private def ivfTop10Sql(cents: String, cvec: String): String = s"""
+      ${assignedSql("assigned", cents, cvec)},
+      ${probesSql("probes", targetSql("0"), cents, 2, cvec)},
+      t AS (SELECT embedding AS t_emb FROM embeddings WHERE vec_id = 0)
+      SELECT a.vec_id, a.c_id,
+             ROUND(list_dot_product(CAST(a.embedding AS DOUBLE[]),
+                                    CAST(t.t_emb AS DOUBLE[])), 4) AS score
+      FROM assigned a JOIN probes USING (c_id), t
+      WHERE a.vec_id <> 0
+      ORDER BY score DESC, a.vec_id
+      LIMIT 10"""
+
   /** IVF-style ANN: the first 16 vectors act as deterministic
     * centroids; every vector is assigned to its nearest centroid
     * (inverted lists), and the query probes only the target's top-2
@@ -463,57 +667,11 @@ object VectorOps extends OpModule {
     (s, d) => {
       graft.ext.GraftFunctions.register(s)
       val emb = Tables(s, d, "embeddings")
-      val centroids = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-      // invert: every vector -> nearest centroid via the shared
-      // assignArgmax kernel (map-side max_by partials)
-      val assigned = assignArgmax(emb, centroids)
-      // target = vec 0; probe its 2 nearest centroids
-      val probes = emb.filter(col("vec_id") === 0)
-        .crossJoin(broadcast(centroids))
-        .withColumn("c_score", round(dot("embedding", "c_emb"), 4))
-        .orderBy(col("c_score").desc, col("c_id"))
-        .limit(2)
-        .select(col("c_id"))
-      val target = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").as("t_emb"))
-      assigned.join(broadcast(probes), "c_id")
-        .filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(target))
-        .withColumn("score", round(dot("embedding", "t_emb"), 4))
-        .select(col("vec_id"), col("c_id"), col("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+      ivfTop10(emb, seeds(emb), dot("embedding", "c_emb"))
     },
-    Some("""
-      WITH c AS (
-        SELECT vec_id AS c_id, embedding AS c_emb
-        FROM embeddings WHERE vec_id < 16),
-      assigned AS (
-        SELECT vec_id, embedding, c_id FROM (
-          SELECT e.vec_id, e.embedding, c.c_id,
-                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                   ORDER BY ROUND(list_dot_product(
-                     CAST(e.embedding AS DOUBLE[]),
-                     CAST(c.c_emb AS DOUBLE[])), 4) DESC, c.c_id) AS c_rn
-          FROM embeddings e, c)
-        WHERE c_rn = 1),
-      probes AS (
-        SELECT c.c_id
-        FROM embeddings t, c
-        WHERE t.vec_id = 0
-        ORDER BY ROUND(list_dot_product(CAST(t.embedding AS DOUBLE[]),
-                                        CAST(c.c_emb AS DOUBLE[])), 4) DESC,
-                 c.c_id
-        LIMIT 2),
-      t AS (SELECT embedding AS t_emb FROM embeddings WHERE vec_id = 0)
-      SELECT a.vec_id, a.c_id,
-             ROUND(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                    CAST(t.t_emb AS DOUBLE[])), 4) AS score
-      FROM assigned a JOIN probes USING (c_id), t
-      WHERE a.vec_id <> 0
-      ORDER BY score DESC, a.vec_id
-      LIMIT 10"""))
+    Some(s"""
+      WITH ${seedsSql("c")},
+      ${ivfTop10Sql("c", SeedVec)}"""))
 
   /** IVF with TRAINED centroids: `LloydRounds` refinement rounds over
     * the first-16 seeds (the shared `lloydRefine` kernel — 4dp-rounded
@@ -532,56 +690,12 @@ object VectorOps extends OpModule {
     (s, d) => {
       graft.ext.GraftFunctions.register(s)
       val emb = Tables(s, d, "embeddings")
-      val cents = lloydRefine(emb, 16, LloydRounds)
-      val assigned = emb.crossJoin(broadcast(cents))
-        .withColumn("c_score", round(dotD("embedding", "cent"), 4))
-        .groupBy(col("vec_id"))
-        .agg(max_by(struct(col("c_id"), col("embedding")),
-          struct(col("c_score"), -col("c_id"))).as("m"))
-        .select(col("vec_id"), col("m.embedding").as("embedding"),
-          col("m.c_id").as("c_id"))
-      val probes = emb.filter(col("vec_id") === 0)
-        .crossJoin(broadcast(cents))
-        .withColumn("c_score", round(dotD("embedding", "cent"), 4))
-        .orderBy(col("c_score").desc, col("c_id"))
-        .limit(2)
-        .select(col("c_id"))
-      val target = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").as("t_emb"))
-      assigned.join(broadcast(probes), "c_id")
-        .filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(target))
-        .withColumn("score", round(dot("embedding", "t_emb"), 4))
-        .select(col("vec_id"), col("c_id"), col("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+      ivfTop10(emb, lloydRefine(emb, 16, LloydRounds),
+        dotD("embedding", "cent"))
     },
     Some(s"""
       WITH ${lloydSql(16, LloydRounds)},
-      assigned AS (
-        SELECT vec_id, embedding, c_id FROM (
-          SELECT e.vec_id, e.embedding, c.c_id,
-                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                   ORDER BY ROUND(list_dot_product(
-                     CAST(e.embedding AS DOUBLE[]), c.cent), 4) DESC,
-                   c.c_id) AS rn
-          FROM embeddings e, c$LloydRounds c)
-        WHERE rn = 1),
-      probes AS (
-        SELECT c.c_id
-        FROM embeddings t, c$LloydRounds c
-        WHERE t.vec_id = 0
-        ORDER BY ROUND(list_dot_product(CAST(t.embedding AS DOUBLE[]),
-                                        c.cent), 4) DESC, c.c_id
-        LIMIT 2),
-      t AS (SELECT embedding AS t_emb FROM embeddings WHERE vec_id = 0)
-      SELECT a.vec_id, a.c_id,
-             ROUND(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                    CAST(t.t_emb AS DOUBLE[])), 4) AS score
-      FROM assigned a JOIN probes USING (c_id), t
-      WHERE a.vec_id <> 0
-      ORDER BY score DESC, a.vec_id
-      LIMIT 10"""))
+      ${ivfTop10Sql(s"c$LloydRounds", CentVec)}"""))
 
   /** Int8 embedding quantization + quantized top-k — the
     * memory-bandwidth play of a 100 TB vector store: per-vector
@@ -640,24 +754,6 @@ object VectorOps extends OpModule {
       FROM scored
       ORDER BY approx DESC, vec_id
       LIMIT 10"""))
-
-  /** Frozen-seed MIPS argmax assignment — the cross-engine
-    * determinism contract (4dp-rounded score, lowest-c_id tie-break)
-    * in ONE place for its float-seed consumers (`ivf_topk`,
-    * `semdedup`, `semdedup_append`, `ann_recall`; the Lloyd-trained
-    * variants score against double centroids via `dotD` and keep
-    * their own sites). Map-side `max_by` partials: the exchange
-    * carries N one-row-per-vector partials, never N·k scored rows.
-    * `seeds` must be (c_id, c_emb) and catalog-sized (broadcast). */
-  private[graft] def assignArgmax(emb: DataFrame,
-      seeds: DataFrame): DataFrame =
-    emb.crossJoin(broadcast(seeds))
-      .withColumn("c_score", round(dot("embedding", "c_emb"), 4))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("c_id"), col("embedding")),
-        struct(col("c_score"), -col("c_id"))).as("m"))
-      .select(col("vec_id"), col("m.embedding").as("embedding"),
-        col("m.c_id").as("c_id"))
 
   /** Smallest c with c·c·c ≥ n — exact integer cube root ceiling.
     * math.cbrt alone is NOT correctly rounded for perfect cubes
@@ -1023,14 +1119,7 @@ object VectorOps extends OpModule {
         "ivf_append needs a base corpus larger than the 4-vector " +
           "ingest batch — the frozen centroids train on the base")
       val cents = lloydRefine(baseEmb, 16, LloydRounds)
-      def assignTo(e: DataFrame): DataFrame = e
-        .crossJoin(broadcast(cents))
-        .withColumn("c_score", round(dotD("embedding", "cent"), 4))
-        .groupBy(col("vec_id"))
-        .agg(max_by(struct(col("c_id"), col("embedding")),
-          struct(col("c_score"), -col("c_id"))).as("m"))
-        .select(col("vec_id"), col("m.embedding").as("embedding"),
-          col("m.c_id").as("list"))
+      val score = dotD("embedding", "cent")
       // size-gated (guide §5, VERDICT r19 #4): this frame carries the
       // embeddings (the probe target rides in it — the r19 no-reread
       // shape), so the cap is what bounds it at wide dims; past the
@@ -1039,7 +1128,9 @@ object VectorOps extends OpModule {
       // emb row, columns ⊆ emb's + two ids — so its true bytes are
       // O(emb file bytes)); the join-product frame's own estimate is
       // multiplied garbage (see Ckpt.boundedLocal)
-      val allIdx = graft.Ckpt.boundedLocal(assignTo(emb),
+      val allIdx = graft.Ckpt.boundedLocal(
+        assignArgmax(emb, cents, score).select(col("vec_id"),
+          col("embedding"), col("c_id").as("list")),
         "ivf_append assignments",
         Some(emb)) // consumers: base commit + batch + probe target
       // v1: the base index; v2: the ingest tick — the 4 NEWEST
@@ -1059,11 +1150,7 @@ object VectorOps extends OpModule {
       // checkpointed assignment — no corpus re-read)
       val newest = allIdx.filter(col("vec_id") === mxv)
         .select(col("vec_id"), col("embedding"))
-      val probes = newest
-        .crossJoin(broadcast(cents))
-        .withColumn("c_score", round(dotD("embedding", "cent"), 4))
-        .orderBy(col("c_score").desc, col("c_id"))
-        .limit(2)
+      val probes = probeLists(newest, cents, score)
         .select(col("c_id").as("list"))
       val target = newest
         .select(col("embedding").as("t_emb"), col("vec_id").as("t_id"))
@@ -1082,22 +1169,9 @@ object VectorOps extends OpModule {
       bemb AS (
         SELECT e.* FROM embeddings e, mx WHERE e.vec_id <= mx.mxv - 4),
       ${lloydSql(16, LloydRounds, "bemb")},
-      assigned AS (
-        SELECT vec_id, embedding, c_id FROM (
-          SELECT e.vec_id, e.embedding, c.c_id,
-                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                   ORDER BY ROUND(list_dot_product(
-                     CAST(e.embedding AS DOUBLE[]), c.cent), 4) DESC,
-                   c.c_id) AS rn
-          FROM embeddings e, c$LloydRounds c)
-        WHERE rn = 1),
-      probes AS (
-        SELECT c.c_id
-        FROM embeddings t, mx, c$LloydRounds c
-        WHERE t.vec_id = mx.mxv
-        ORDER BY ROUND(list_dot_product(CAST(t.embedding AS DOUBLE[]),
-                                        c.cent), 4) DESC, c.c_id
-        LIMIT 2),
+      ${assignedSql("assigned", s"c$LloydRounds", CentVec)},
+      ${probesSql("probes", targetSql("(SELECT mxv FROM mx)"),
+        s"c$LloydRounds", 2, CentVec)},
       t AS (SELECT embedding AS t_emb, vec_id AS t_id
             FROM embeddings, mx WHERE vec_id = mx.mxv)
       SELECT a.vec_id, CAST(a.c_id AS BIGINT) AS list,
@@ -1269,32 +1343,18 @@ object VectorOps extends OpModule {
       graft.ext.GraftFunctions.register(s)
       val emb = Tables(s, d, "embeddings")
       // assign → refine: the shared one-round Lloyd kernel (map-side
-      // max_by argmax + rounded per-cluster means; see lloydRefine)
+      // max_by argmax + rounded per-cluster means; see lloydRefine),
+      // then re-assign carrying each vector's winning score
       val newc = lloydRefine(emb, 8)
-      val assign2 = emb.crossJoin(broadcast(newc))
-        .withColumn("score", round(dotD("embedding", "cent"), 4))
-        .groupBy(col("vec_id"))
-        .agg(max_by(struct(col("c_id"), col("score")),
-          struct(col("score"), -col("c_id"))).as("m"))
-        .select(col("m.c_id").as("c_id"), col("m.score").as("score"))
-      assign2.groupBy(col("c_id"))
+      assignArgmax(emb, newc, dotD("embedding", "cent"), Some("c_score"))
+        .groupBy(col("c_id"))
         .agg(count(lit(1)).as("n_vecs"),
-          round(avg(col("score")), 4).as("avg_sim"))
+          round(avg(col("c_score")), 4).as("avg_sim"))
     },
     Some(s"""
       WITH ${lloydSql(8, 1)},
-      a2 AS (
-        SELECT vec_id, c_id, score FROM (
-          SELECT e.vec_id, c.c_id,
-                 ROUND(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                        c.cent), 4) AS score,
-                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                   ORDER BY ROUND(list_dot_product(
-                     CAST(e.embedding AS DOUBLE[]), c.cent), 4) DESC,
-                   c.c_id) AS rn
-          FROM embeddings e, c1 c)
-        WHERE rn = 1)
-      SELECT c_id, COUNT(*) AS n_vecs, ROUND(AVG(score), 4) AS avg_sim
+      ${assignedSql("a2", "c1", CentVec)}
+      SELECT c_id, COUNT(*) AS n_vecs, ROUND(AVG(c_score), 4) AS avg_sim
       FROM a2 GROUP BY c_id"""))
 
   /** SemDeDup-style semantic dedup: cluster the embedding space
@@ -1373,6 +1433,37 @@ object VectorOps extends OpModule {
                AS kept
       FROM assigned"""))
 
+  /** Flat PQ query: every `sub` vector encoded against codebook `cb`
+    * ([[pqEncode]]), scored by the vec_id-0 target's integer ADC
+    * table ([[adcTable]]) summed over its 8 codes; returns the
+    * top-10 (vec_id, adc_score). `dotK` as in [[pqEncode]]. */
+  private def pqTop10(sub: DataFrame, cb: DataFrame,
+      dotK: (String, String) => Column): DataFrame = {
+    val adc = adcTable(sub.filter(col("vec_id") === 0)
+      .select(col("s"), col("sv").as("q_sv")), cb, dotK)
+    pqEncode(sub, cb, dotK)
+      .join(broadcast(adc), Seq("s", "code"))
+      .groupBy(col("vec_id"))
+      .agg((sum(col("qdot_i")) / 10000.0).as("adc_score"))
+      .filter(col("vec_id") =!= 0)
+      .orderBy(col("adc_score").desc, col("vec_id"))
+      .limit(10)
+  }
+
+  /** The oracle of [[pqTop10]]; `cbCte` defines codebook `cb`. */
+  private def pqTop10Sql(cbCte: String, cb: String): String = s"""
+      WITH $subSql,
+      $cbCte,
+      ${codesSql("codes", cb)},
+      ${adcSql("adc", cb, "vec_id = 0")}
+      SELECT codes.vec_id,
+             SUM(qdot_i) / 10000.0 AS adc_score
+      FROM codes JOIN adc USING (s, code)
+      GROUP BY codes.vec_id
+      HAVING codes.vec_id <> 0
+      ORDER BY adc_score DESC, codes.vec_id
+      LIMIT 10"""
+
   /** Product-quantization ANN (the memory-scaling step past
     * `embed_quantize`'s int8): split each 64-dim vector into m=8
     * 8-dim subvectors, quantize each against a 16-entry per-subspace
@@ -1398,84 +1489,9 @@ object VectorOps extends OpModule {
     (s, d) => {
       graft.ext.GraftFunctions.register(s)
       val emb = Tables(s, d, "embeddings")
-      // s2/c2 (the self-dots of the ‖a−b‖² identity) are invariant
-      // across the 16-code scoring fan-out, so they're computed once
-      // per (vec, s) row / once per codebook cell instead of inside
-      // every scored pair — the scored row then costs ONE 8-dim dot,
-      // not three. Same operands, same fold order, same 4dp round:
-      // bit-identical d2 to the inline form.
-      val sub = emb
-        .select(col("vec_id"),
-          explode(sequence(lit(0), lit(7))).as("s"),
-          col("embedding"))
-        .withColumn("sv", expr("slice(embedding, s * 8 + 1, 8)"))
-        .withColumn("s2", dot("sv", "sv"))
-        .select(col("vec_id"), col("s"), col("sv"), col("s2"))
-      val cb = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("code"),
-          explode(sequence(lit(0), lit(7))).as("s"),
-          col("embedding"))
-        .withColumn("c_sv", expr("slice(embedding, s * 8 + 1, 8)"))
-        .withColumn("c2", dot("c_sv", "c_sv"))
-        .select(col("code"), col("s"), col("c_sv"), col("c2"))
-      // encode = per-(vec,subspace) argmin over the 16 codes, via the
-      // packed integer key (see pqKey's scaladoc: min(key) IS the
-      // oracle window's (ROUND(d2,4) asc, code asc), with zero
-      // BigDecimal work in the scored loop). A plain long min stays
-      // in whole-stage-codegen HashAggregate with map-side partials;
-      // min_by(struct) is a TypedImperativeAgg → ObjectHashAggregate,
-      // whose tiny sort-based fallback threshold turned every encode
-      // pass into a 25M-row sort at sf10 (SCALE.md round 12).
-      val codes = sub.join(broadcast(cb), "s")
-        .withColumn("k", pqKey(dot("sv", "c_sv")))
-        .groupBy(col("vec_id"), col("s"))
-        .agg(min(col("k")).as("k"))
-        .select(col("vec_id"), col("s"), (col("k") % 65536L).as("code"))
-      val adcTable = sub.filter(col("vec_id") === 0)
-        .select(col("s"), col("sv").as("q_sv"))
-        .join(broadcast(cb), "s")
-        .withColumn("qdot_i",
-          round(dot("q_sv", "c_sv") * 10000, 0).cast("long"))
-        .select(col("s"), col("code"), col("qdot_i"))
-      codes
-        .join(broadcast(adcTable), Seq("s", "code"))
-        .groupBy(col("vec_id"))
-        .agg((sum(col("qdot_i")) / 10000.0).as("adc_score"))
-        .filter(col("vec_id") =!= 0)
-        .orderBy(col("adc_score").desc, col("vec_id"))
-        .limit(10)
+      pqTop10(pqSplit(emb), seedCodebook(emb), dot)
     },
-    Some("""
-      WITH sub AS (
-        SELECT vec_id, s,
-               CAST(embedding[s * 8 + 1 : s * 8 + 8] AS DOUBLE[]) AS sv
-        FROM embeddings, UNNEST(generate_series(0, 7)) AS u(s)),
-      cb AS (
-        SELECT vec_id AS code, s, sv AS c_sv
-        FROM sub WHERE vec_id < 16),
-      codes AS (
-        SELECT vec_id, s, code FROM (
-          SELECT sub.vec_id, sub.s, cb.code,
-                 ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
-                   ORDER BY ROUND(list_dot_product(sv, sv)
-                     + list_dot_product(c_sv, c_sv)
-                     - 2 * list_dot_product(sv, c_sv), 4) ASC,
-                   cb.code) AS rn
-          FROM sub JOIN cb USING (s))
-        WHERE rn = 1),
-      adc AS (
-        SELECT cb.s, cb.code,
-               CAST(ROUND(list_dot_product(q.sv, cb.c_sv) * 10000, 0)
-                 AS BIGINT) AS qdot_i
-        FROM (SELECT s, sv FROM sub WHERE vec_id = 0) q
-        JOIN cb USING (s))
-      SELECT codes.vec_id,
-             SUM(qdot_i) / 10000.0 AS adc_score
-      FROM codes JOIN adc USING (s, code)
-      GROUP BY codes.vec_id
-      HAVING codes.vec_id <> 0
-      ORDER BY adc_score DESC, codes.vec_id
-      LIMIT 10"""))
+    Some(pqTop10Sql(cbSql("cb", 16), "cb")))
 
   /** PQ with TRAINED sub-codebooks: per subspace, `LloydRounds` Lloyd
     * rounds refine the 16 seed code vectors (assign every sub-vector
@@ -1495,10 +1511,8 @@ object VectorOps extends OpModule {
     (s, d) => {
       graft.ext.GraftFunctions.register(s)
       val emb = Tables(s, d, "embeddings")
-      // self-dot precompute, same reasoning (and bit-identity
-      // argument) as pq_topk: one dot per scored pair, not three.
       // Materialized (localCheckpoint, the semdedup precedent): FOUR
-      // consumers read this frame — the seed assignment, the codebook
+      // consumers read the split — the seed assignment, the codebook
       // rebuild's re-join, the re-encode, and the ADC table — and
       // with no exchange between the scan and the explode there is no
       // planner reuse point, so without the checkpoint the
@@ -1506,67 +1520,12 @@ object VectorOps extends OpModule {
       // exchange-is-a-materialization-point lesson, SCALE.md r11;
       // measured 53 s -> see SCALE.md r12 at sf10). Identical rows,
       // one scan.
-      val sub = emb
-        .select(col("vec_id"),
-          explode(sequence(lit(0), lit(7))).as("s"),
-          col("embedding"))
-        .withColumn("sv", expr("slice(embedding, s * 8 + 1, 8)"))
-        .withColumn("s2", dot("sv", "sv"))
-        .select(col("vec_id"), col("s"), col("sv"), col("s2"))
-        .localCheckpoint()
-      // cell self-dot: once per k·m codebook cell in the broadcast,
-      // not once per scored corpus pair
-      val cb = pqLloydRefine(emb, sub, 16, LloydRounds)
-      // encode + ADC against the refined double codebook (same
+      val sub = pqSplit(emb).localCheckpoint()
+      // encode + ADC against the refined double codebook (the same
       // packed-key argmin as the training rounds)
-      val codes = sub.join(broadcast(cb), "s")
-        .withColumn("k", pqKey(dotD("sv", "c_sv")))
-        .groupBy(col("vec_id"), col("s"))
-        .agg(min(col("k")).as("k"))
-        .select(col("vec_id"), col("s"), (col("k") % 65536L).as("code"))
-      val adcTable = sub.filter(col("vec_id") === 0)
-        .select(col("s"), col("sv").as("q_sv"))
-        .join(broadcast(cb), "s")
-        .withColumn("qdot_i",
-          round(dotD("q_sv", "c_sv") * 10000, 0).cast("long"))
-        .select(col("s"), col("code"), col("qdot_i"))
-      codes
-        .join(broadcast(adcTable), Seq("s", "code"))
-        .groupBy(col("vec_id"))
-        .agg((sum(col("qdot_i")) / 10000.0).as("adc_score"))
-        .filter(col("vec_id") =!= 0)
-        .orderBy(col("adc_score").desc, col("vec_id"))
-        .limit(10)
+      pqTop10(sub, pqLloydRefine(emb, sub, 16, LloydRounds), dotD)
     },
-    Some(s"""
-      WITH sub AS (
-        SELECT vec_id, s,
-               CAST(embedding[s * 8 + 1 : s * 8 + 8] AS DOUBLE[]) AS sv
-        FROM embeddings, UNNEST(generate_series(0, 7)) AS u(s)),
-      ${pqLloydSql(LloydRounds)},
-      codes AS (
-        SELECT vec_id, s, code FROM (
-          SELECT sub.vec_id, sub.s, cb.code,
-                 ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
-                   ORDER BY ROUND(list_dot_product(sv, sv)
-                     + list_dot_product(c_sv, c_sv)
-                     - 2 * list_dot_product(sv, c_sv), 4) ASC,
-                   cb.code) AS rn
-          FROM sub JOIN p$LloydRounds cb USING (s))
-        WHERE rn = 1),
-      adc AS (
-        SELECT cb.s, cb.code,
-               CAST(ROUND(list_dot_product(q.sv, cb.c_sv) * 10000, 0)
-                 AS BIGINT) AS qdot_i
-        FROM (SELECT s, sv FROM sub WHERE vec_id = 0) q
-        JOIN p$LloydRounds cb USING (s))
-      SELECT codes.vec_id,
-             SUM(qdot_i) / 10000.0 AS adc_score
-      FROM codes JOIN adc USING (s, code)
-      GROUP BY codes.vec_id
-      HAVING codes.vec_id <> 0
-      ORDER BY adc_score DESC, codes.vec_id
-      LIMIT 10"""))
+    Some(pqTop10Sql(pqLloydSql(LloydRounds), s"p$LloydRounds")))
 
   /** Power-iteration rounds for `pca_topcomp` — fixed, deterministic
     * (the Lloyd-cap rationale: a static plan and a short unrolled
@@ -1662,6 +1621,55 @@ object VectorOps extends OpModule {
             FROM embeddings e, v$PcaRounds p)
       GROUP BY label"""))
 
+  /** The IVF×PQ query: the coarse half ([[seeds]] lists,
+    * [[assignArgmax]] with no carry, the vec_id-0 target's
+    * [[probeLists]]) prunes WHICH vectors are scored, and the PQ half
+    * ([[seedCodebook]], [[pqEncode]], [[adcTable]]) scores each
+    * survivor by integer ADC. Returns the top-`n`
+    * (vec_id, c_id, adc_score), adc desc with a vec_id tie-break. */
+  private def ivfpqTopN(emb: DataFrame, n: Int): DataFrame = {
+    // ---- coarse half: vector -> nearest of 16 seeds
+    val cents = seeds(emb)
+    val assigned = assignArgmax(emb, cents, carry = None)
+    val probes = probeLists(emb.filter(col("vec_id") === 0), cents)
+    // ---- PQ half
+    val sub = pqSplit(emb)
+    val cb = seedCodebook(emb)
+    val adc = adcTable(sub.filter(col("vec_id") === 0)
+      .select(col("s"), col("sv").as("q_sv")), cb, dot)
+    // ---- query: probed lists only, scored by ADC over code bytes
+    val cands = assigned.join(broadcast(probes), "c_id")
+      .filter(col("vec_id") =!= 0)
+      .select(col("vec_id"), col("c_id"))
+    pqEncode(sub, cb, dot).join(cands, "vec_id")
+      .join(broadcast(adc), Seq("s", "code"))
+      .groupBy(col("vec_id"), col("c_id"))
+      .agg((sum(col("qdot_i")) / 10000.0).as("adc_score"))
+      .orderBy(col("adc_score").desc, col("vec_id"))
+      .limit(n)
+  }
+
+  /** The oracle CTEs of [[ivfpqTopN]]. */
+  private val ivfpqCtes = s"""${seedsSql("c")},
+      ${assignedSql("assigned", "c")},
+      ${probesSql("probes", targetSql("0"), "c", 2)},
+      $subSql,
+      ${cbSql("cb", 16)},
+      ${codesSql("codes", "cb")},
+      ${adcSql("adc", "cb", "vec_id = 0")}"""
+
+  /** The oracle query of [[ivfpqTopN]] over [[ivfpqCtes]]. */
+  private def ivfpqTopNSql(n: Int): String = s"""
+      SELECT a.vec_id, a.c_id, SUM(qdot_i) / 10000.0 AS adc_score
+      FROM assigned a
+      JOIN probes USING (c_id)
+      JOIN codes ON codes.vec_id = a.vec_id
+      JOIN adc USING (s, code)
+      WHERE a.vec_id <> 0
+      GROUP BY a.vec_id, a.c_id
+      ORDER BY adc_score DESC, a.vec_id
+      LIMIT $n"""
+
   /** IVF × PQ — the two index halves composed the way a
     * billion-vector store actually runs them (FAISS's IVFPQ layout,
     * PAPERS.md): the coarse quantizer (16 inverted lists, `ivf_topk`'s
@@ -1683,111 +1691,11 @@ object VectorOps extends OpModule {
     "ivfpq_topk",
     (s, d) => {
       graft.ext.GraftFunctions.register(s)
-      val emb = Tables(s, d, "embeddings")
-      // ---- coarse half (ivf_topk's rule): vector -> nearest of 16
-      val centroids = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-      val assigned = emb.crossJoin(broadcast(centroids))
-        .withColumn("c_score", round(dot("embedding", "c_emb"), 4))
-        .groupBy(col("vec_id"))
-        .agg(max_by(col("c_id"),
-          struct(col("c_score"), -col("c_id"))).as("c_id"))
-      val probes = emb.filter(col("vec_id") === 0)
-        .crossJoin(broadcast(centroids))
-        .withColumn("c_score", round(dot("embedding", "c_emb"), 4))
-        .orderBy(col("c_score").desc, col("c_id"))
-        .limit(2)
-        .select(col("c_id"))
-      // ---- PQ half (pq_topk's encode + ADC, shared hoisted self-dots)
-      val sub = emb
-        .select(col("vec_id"),
-          explode(sequence(lit(0), lit(7))).as("s"),
-          col("embedding"))
-        .withColumn("sv", expr("slice(embedding, s * 8 + 1, 8)"))
-        .withColumn("s2", dot("sv", "sv"))
-        .select(col("vec_id"), col("s"), col("sv"), col("s2"))
-      val cb = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("code"),
-          explode(sequence(lit(0), lit(7))).as("s"),
-          col("embedding"))
-        .withColumn("c_sv", expr("slice(embedding, s * 8 + 1, 8)"))
-        .withColumn("c2", dot("c_sv", "c_sv"))
-        .select(col("code"), col("s"), col("c_sv"), col("c2"))
-      val codes = sub.join(broadcast(cb), "s")
-        .withColumn("k", pqKey(dot("sv", "c_sv")))
-        .groupBy(col("vec_id"), col("s"))
-        .agg(min(col("k")).as("k"))
-        .select(col("vec_id"), col("s"), (col("k") % 65536L).as("code"))
-      val adcTable = sub.filter(col("vec_id") === 0)
-        .select(col("s"), col("sv").as("q_sv"))
-        .join(broadcast(cb), "s")
-        .withColumn("qdot_i",
-          round(dot("q_sv", "c_sv") * 10000, 0).cast("long"))
-        .select(col("s"), col("code"), col("qdot_i"))
-      // ---- query: probed lists only, scored by ADC over code bytes
-      val cands = assigned.join(broadcast(probes), "c_id")
-        .filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), col("c_id"))
-      codes.join(cands, "vec_id")
-        .join(broadcast(adcTable), Seq("s", "code"))
-        .groupBy(col("vec_id"), col("c_id"))
-        .agg((sum(col("qdot_i")) / 10000.0).as("adc_score"))
-        .orderBy(col("adc_score").desc, col("vec_id"))
-        .limit(10)
+      ivfpqTopN(Tables(s, d, "embeddings"), 10)
     },
-    Some("""
-      WITH c AS (
-        SELECT vec_id AS c_id, embedding AS c_emb
-        FROM embeddings WHERE vec_id < 16),
-      assigned AS (
-        SELECT vec_id, c_id FROM (
-          SELECT e.vec_id, c.c_id,
-                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                   ORDER BY ROUND(list_dot_product(
-                     CAST(e.embedding AS DOUBLE[]),
-                     CAST(c.c_emb AS DOUBLE[])), 4) DESC, c.c_id) AS c_rn
-          FROM embeddings e, c)
-        WHERE c_rn = 1),
-      probes AS (
-        SELECT c.c_id
-        FROM embeddings t, c
-        WHERE t.vec_id = 0
-        ORDER BY ROUND(list_dot_product(CAST(t.embedding AS DOUBLE[]),
-                                        CAST(c.c_emb AS DOUBLE[])), 4) DESC,
-                 c.c_id
-        LIMIT 2),
-      sub AS (
-        SELECT vec_id, s,
-               CAST(embedding[s * 8 + 1 : s * 8 + 8] AS DOUBLE[]) AS sv
-        FROM embeddings, UNNEST(generate_series(0, 7)) AS u(s)),
-      cb AS (
-        SELECT vec_id AS code, s, sv AS c_sv
-        FROM sub WHERE vec_id < 16),
-      codes AS (
-        SELECT vec_id, s, code FROM (
-          SELECT sub.vec_id, sub.s, cb.code,
-                 ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
-                   ORDER BY ROUND(list_dot_product(sv, sv)
-                     + list_dot_product(c_sv, c_sv)
-                     - 2 * list_dot_product(sv, c_sv), 4) ASC,
-                   cb.code) AS rn
-          FROM sub JOIN cb USING (s))
-        WHERE rn = 1),
-      adc AS (
-        SELECT cb.s, cb.code,
-               CAST(ROUND(list_dot_product(q.sv, cb.c_sv) * 10000, 0)
-                 AS BIGINT) AS qdot_i
-        FROM (SELECT s, sv FROM sub WHERE vec_id = 0) q
-        JOIN cb USING (s))
-      SELECT a.vec_id, a.c_id, SUM(qdot_i) / 10000.0 AS adc_score
-      FROM assigned a
-      JOIN probes USING (c_id)
-      JOIN codes ON codes.vec_id = a.vec_id
-      JOIN adc USING (s, code)
-      WHERE a.vec_id <> 0
-      GROUP BY a.vec_id, a.c_id
-      ORDER BY adc_score DESC, a.vec_id
-      LIMIT 10"""))
+    Some(s"""
+      WITH $ivfpqCtes
+      ${ivfpqTopNSql(10)}"""))
 
   /** IVF×PQ with an EXACT RE-RANK stage — the executable form of the
     * engine's own measured deployment advice (ANN_RECALL_sf10.json,
@@ -1816,54 +1724,8 @@ object VectorOps extends OpModule {
     (s, d) => {
       graft.ext.GraftFunctions.register(s)
       val emb = Tables(s, d, "embeddings")
-      // ---- stage 1: ivfpq_topk's exact chain, R = 100 shortlist
-      val centroids = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-      val assigned = emb.crossJoin(broadcast(centroids))
-        .withColumn("c_score", round(dot("embedding", "c_emb"), 4))
-        .groupBy(col("vec_id"))
-        .agg(max_by(col("c_id"),
-          struct(col("c_score"), -col("c_id"))).as("c_id"))
-      val probes = emb.filter(col("vec_id") === 0)
-        .crossJoin(broadcast(centroids))
-        .withColumn("c_score", round(dot("embedding", "c_emb"), 4))
-        .orderBy(col("c_score").desc, col("c_id"))
-        .limit(2)
-        .select(col("c_id"))
-      val sub = emb
-        .select(col("vec_id"),
-          explode(sequence(lit(0), lit(7))).as("s"),
-          col("embedding"))
-        .withColumn("sv", expr("slice(embedding, s * 8 + 1, 8)"))
-        .withColumn("s2", dot("sv", "sv"))
-        .select(col("vec_id"), col("s"), col("sv"), col("s2"))
-      val cb = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("code"),
-          explode(sequence(lit(0), lit(7))).as("s"),
-          col("embedding"))
-        .withColumn("c_sv", expr("slice(embedding, s * 8 + 1, 8)"))
-        .withColumn("c2", dot("c_sv", "c_sv"))
-        .select(col("code"), col("s"), col("c_sv"), col("c2"))
-      val codes = sub.join(broadcast(cb), "s")
-        .withColumn("k", pqKey(dot("sv", "c_sv")))
-        .groupBy(col("vec_id"), col("s"))
-        .agg(min(col("k")).as("k"))
-        .select(col("vec_id"), col("s"), (col("k") % 65536L).as("code"))
-      val adcTable = sub.filter(col("vec_id") === 0)
-        .select(col("s"), col("sv").as("q_sv"))
-        .join(broadcast(cb), "s")
-        .withColumn("qdot_i",
-          round(dot("q_sv", "c_sv") * 10000, 0).cast("long"))
-        .select(col("s"), col("code"), col("qdot_i"))
-      val cands = assigned.join(broadcast(probes), "c_id")
-        .filter(col("vec_id") =!= 0)
-        .select(col("vec_id"))
-      val shortlist = codes.join(cands, "vec_id")
-        .join(broadcast(adcTable), Seq("s", "code"))
-        .groupBy(col("vec_id"))
-        .agg((sum(col("qdot_i")) / 10000.0).as("adc_score"))
-        .orderBy(col("adc_score").desc, col("vec_id"))
-        .limit(100)
+      // ---- stage 1: ivfpq_topk's ADC scoring, R = 100 shortlist
+      val shortlist = ivfpqTopN(emb, 100)
       // ---- stage 2: exact re-score of ONLY the shortlist's raw rows
       val target = emb.filter(col("vec_id") === 0)
         .select(col("embedding").as("t_emb"))
@@ -1874,60 +1736,9 @@ object VectorOps extends OpModule {
         .orderBy(col("score").desc, col("vec_id"))
         .limit(10)
     },
-    Some("""
-      WITH c AS (
-        SELECT vec_id AS c_id, embedding AS c_emb
-        FROM embeddings WHERE vec_id < 16),
-      assigned AS (
-        SELECT vec_id, c_id FROM (
-          SELECT e.vec_id, c.c_id,
-                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                   ORDER BY ROUND(list_dot_product(
-                     CAST(e.embedding AS DOUBLE[]),
-                     CAST(c.c_emb AS DOUBLE[])), 4) DESC, c.c_id) AS c_rn
-          FROM embeddings e, c)
-        WHERE c_rn = 1),
-      probes AS (
-        SELECT c.c_id
-        FROM embeddings t, c
-        WHERE t.vec_id = 0
-        ORDER BY ROUND(list_dot_product(CAST(t.embedding AS DOUBLE[]),
-                                        CAST(c.c_emb AS DOUBLE[])), 4) DESC,
-                 c.c_id
-        LIMIT 2),
-      sub AS (
-        SELECT vec_id, s,
-               CAST(embedding[s * 8 + 1 : s * 8 + 8] AS DOUBLE[]) AS sv
-        FROM embeddings, UNNEST(generate_series(0, 7)) AS u(s)),
-      cb AS (
-        SELECT vec_id AS code, s, sv AS c_sv
-        FROM sub WHERE vec_id < 16),
-      codes AS (
-        SELECT vec_id, s, code FROM (
-          SELECT sub.vec_id, sub.s, cb.code,
-                 ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
-                   ORDER BY ROUND(list_dot_product(sv, sv)
-                     + list_dot_product(c_sv, c_sv)
-                     - 2 * list_dot_product(sv, c_sv), 4) ASC,
-                   cb.code) AS rn
-          FROM sub JOIN cb USING (s))
-        WHERE rn = 1),
-      adc AS (
-        SELECT cb.s, cb.code,
-               CAST(ROUND(list_dot_product(q.sv, cb.c_sv) * 10000, 0)
-                 AS BIGINT) AS qdot_i
-        FROM (SELECT s, sv FROM sub WHERE vec_id = 0) q
-        JOIN cb USING (s)),
-      shortlist AS (
-        SELECT a.vec_id, SUM(qdot_i) / 10000.0 AS adc_score
-        FROM assigned a
-        JOIN probes USING (c_id)
-        JOIN codes ON codes.vec_id = a.vec_id
-        JOIN adc USING (s, code)
-        WHERE a.vec_id <> 0
-        GROUP BY a.vec_id
-        ORDER BY adc_score DESC, a.vec_id
-        LIMIT 100)
+    Some(s"""
+      WITH $ivfpqCtes,
+      shortlist AS (${ivfpqTopNSql(100)})
       SELECT sl.vec_id, sl.adc_score,
              ROUND(list_dot_product(CAST(e.embedding AS DOUBLE[]),
                                     CAST(t.embedding AS DOUBLE[])), 4)
@@ -1995,31 +1806,16 @@ object VectorOps extends OpModule {
           "ingest batch — the frozen coarse centroids and " +
           "sub-codebooks come from the base")
       // frozen halves — both pure functions of the base corpus
-      val cents = baseEmb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-      val cb = baseEmb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("code"),
-          explode(sequence(lit(0), lit(7))).as("s"), col("embedding"))
-        .withColumn("c_sv", expr("slice(embedding, s * 8 + 1, 8)"))
-        .withColumn("c2", dot("c_sv", "c_sv"))
-        .select(col("code"), col("s"), col("c_sv"), col("c2"))
+      val cents = seeds(baseEmb)
+      val cb = seedCodebook(baseEmb)
         .localCheckpoint() // 3 consumers: base encode, batch encode, ADC
       // index rows of a slice: (list, vec_id, ck) — coarse list via
-      // the shared argmax kernel; codes via pq_topk's packed-key
-      // argmin, then all 8 nibbles packed little-endian into one long
+      // the shared argmax kernel; codes via the shared packed-key
+      // encode, then all 8 nibbles packed little-endian into one long
       def indexRows(e: DataFrame): DataFrame = {
         val assign = assignArgmax(e, cents)
           .select(col("vec_id"), col("c_id").as("list"))
-        val packed = e
-          .select(col("vec_id"),
-            explode(sequence(lit(0), lit(7))).as("s"), col("embedding"))
-          .withColumn("sv", expr("slice(embedding, s * 8 + 1, 8)"))
-          .withColumn("s2", dot("sv", "sv"))
-          .join(broadcast(cb), "s")
-          .withColumn("k", pqKey(dot("sv", "c_sv")))
-          .groupBy(col("vec_id"), col("s"))
-          .agg(min(col("k")).as("k"))
-          .select(col("vec_id"), col("s"), (col("k") % 65536L).as("code"))
+        val packed = pqEncode(pqSplit(e), cb, dot)
           .groupBy(col("vec_id"))
           .agg(sum(expr("shiftleft(code, s * 4)")).as("ck"))
         assign.join(packed, "vec_id")
@@ -2047,19 +1843,10 @@ object VectorOps extends OpModule {
       // pushes to parquet row-group stats)
       val newest = emb.filter(col("vec_id") === mxv)
         .localCheckpoint() // 3 consumers: probes, ADC table, target id
-      val probes = newest.crossJoin(broadcast(cents))
-        .withColumn("c_score", round(dot("embedding", "c_emb"), 4))
-        .orderBy(col("c_score").desc, col("c_id"))
-        .limit(2)
+      val probes = probeLists(newest, cents)
         .select(col("c_id").as("list"))
-      val adcTable = newest
-        .select(explode(sequence(lit(0), lit(7))).as("s"),
-          col("embedding"))
-        .withColumn("q_sv", expr("slice(embedding, s * 8 + 1, 8)"))
-        .join(broadcast(cb), "s")
-        .withColumn("qdot_i",
-          round(dot("q_sv", "c_sv") * 10000, 0).cast("long"))
-        .select(col("s"), col("code"), col("qdot_i"))
+      val adc = adcTable(pqSplit(newest)
+        .select(col("s"), col("sv").as("q_sv")), cb, dot)
       val tid = newest.select(col("vec_id").as("t_id"))
       Snapshots.readAsOf(s, base, v2)
         .join(broadcast(probes), "list")
@@ -2068,57 +1855,23 @@ object VectorOps extends OpModule {
         .select(col("vec_id"), col("list").cast("long").as("list"),
           col("ck"), explode(sequence(lit(0), lit(7))).as("s"))
         .withColumn("code", expr("shiftright(ck, s * 4) & 15"))
-        .join(broadcast(adcTable), Seq("s", "code"))
+        .join(broadcast(adc), Seq("s", "code"))
         .groupBy(col("vec_id"), col("list"))
         .agg((sum(col("qdot_i")) / 10000.0).as("adc_score"))
         .orderBy(col("adc_score").desc, col("vec_id"))
         .limit(10)
     },
-    Some("""
+    Some {
+      val base = " AND vec_id <= (SELECT mxv - 4 FROM mx)"
+      s"""
       WITH mx AS (SELECT max(vec_id) AS mxv FROM embeddings),
-      c AS (
-        SELECT vec_id AS c_id, embedding AS c_emb
-        FROM embeddings, mx WHERE vec_id < 16 AND vec_id <= mx.mxv - 4),
-      assigned AS (
-        SELECT vec_id, c_id FROM (
-          SELECT e.vec_id, c.c_id,
-                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                   ORDER BY ROUND(list_dot_product(
-                     CAST(e.embedding AS DOUBLE[]),
-                     CAST(c.c_emb AS DOUBLE[])), 4) DESC, c.c_id) AS rn
-          FROM embeddings e, c)
-        WHERE rn = 1),
-      sub AS (
-        SELECT vec_id, s,
-               CAST(embedding[s * 8 + 1 : s * 8 + 8] AS DOUBLE[]) AS sv
-        FROM embeddings, UNNEST(generate_series(0, 7)) AS u(s)),
-      cb AS (
-        SELECT vec_id AS code, s, sv AS c_sv
-        FROM sub, mx WHERE vec_id < 16 AND vec_id <= mx.mxv - 4),
-      codes AS (
-        SELECT vec_id, s, code FROM (
-          SELECT sub.vec_id, sub.s, cb.code,
-                 ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
-                   ORDER BY ROUND(list_dot_product(sv, sv)
-                     + list_dot_product(c_sv, c_sv)
-                     - 2 * list_dot_product(sv, c_sv), 4) ASC,
-                   cb.code) AS rn
-          FROM sub JOIN cb USING (s))
-        WHERE rn = 1),
-      probes AS (
-        SELECT c.c_id
-        FROM embeddings t, mx, c
-        WHERE t.vec_id = mx.mxv
-        ORDER BY ROUND(list_dot_product(CAST(t.embedding AS DOUBLE[]),
-                                        CAST(c.c_emb AS DOUBLE[])), 4)
-                   DESC, c.c_id
-        LIMIT 2),
-      adc AS (
-        SELECT cb.s, cb.code,
-               CAST(ROUND(list_dot_product(q.sv, cb.c_sv) * 10000, 0)
-                 AS BIGINT) AS qdot_i
-        FROM (SELECT s, sv FROM sub, mx WHERE vec_id = mx.mxv) q
-        JOIN cb USING (s))
+      ${seedsSql("c", base)},
+      ${assignedSql("assigned", "c")},
+      $subSql,
+      ${cbSql("cb", 16, base)},
+      ${codesSql("codes", "cb")},
+      ${probesSql("probes", targetSql("(SELECT mxv FROM mx)"), "c", 2)},
+      ${adcSql("adc", "cb", "vec_id = (SELECT mxv FROM mx)")}
       SELECT a.vec_id, CAST(a.c_id AS BIGINT) AS list,
              SUM(qdot_i) / 10000.0 AS adc_score
       FROM assigned a
@@ -2128,7 +1881,8 @@ object VectorOps extends OpModule {
       WHERE a.vec_id <> mx.mxv
       GROUP BY a.vec_id, a.c_id
       ORDER BY adc_score DESC, a.vec_id
-      LIMIT 10"""))
+      LIMIT 10"""
+    })
 
   /** Hard-negative mining — the contrastive-training data op: for
     * each query vector (the first 8 ids), the 5 most-similar vectors
@@ -2207,17 +1961,11 @@ object VectorOps extends OpModule {
       val emb = Tables(s, d, "embeddings")
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val cents = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
+      val cents = seeds(emb)
       // the shared IVF kernel: map-side argmax assignment
       val assigned = assignArgmax(emb, cents)
       // nprobe=2 cells per query (8×16 scored rows — catalog-sized)
-      val wProbe = Window.partitionBy(col("q_id"))
-        .orderBy(col("c_score").desc, col("c_id"))
-      val probes = qs.crossJoin(broadcast(cents))
-        .withColumn("c_score", round(dot("q_emb", "c_emb"), 4))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") <= 2)
+      val probes = probePerQuery(qs, cents, dot("q_emb", "c_emb"), 2)
         .select(col("q_id"), col("c_id"))
       val wTop = Window.partitionBy(col("q_id"))
         .orderBy(col("score").desc, col("vec_id"))
@@ -2248,31 +1996,13 @@ object VectorOps extends OpModule {
           coalesce(col("n_hit"), lit(0L)).as("n_hit"),
           round(coalesce(col("n_hit"), lit(0L)) / 10.0, 4).as("recall"))
     },
-    Some("""
+    Some(s"""
       WITH q AS (
         SELECT vec_id AS q_id, embedding AS q_emb
         FROM embeddings WHERE vec_id < 8),
-      c AS (
-        SELECT vec_id AS c_id, embedding AS c_emb
-        FROM embeddings WHERE vec_id < 16),
-      assigned AS (
-        SELECT vec_id, embedding, c_id FROM (
-          SELECT e.vec_id, e.embedding, c.c_id,
-                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                   ORDER BY ROUND(list_dot_product(
-                     CAST(e.embedding AS DOUBLE[]),
-                     CAST(c.c_emb AS DOUBLE[])), 4) DESC, c.c_id) AS c_rn
-          FROM embeddings e, c)
-        WHERE c_rn = 1),
-      probes AS (
-        SELECT q_id, c_id FROM (
-          SELECT q.q_id, c.c_id,
-                 ROW_NUMBER() OVER (PARTITION BY q.q_id
-                   ORDER BY ROUND(list_dot_product(
-                     CAST(q.q_emb AS DOUBLE[]),
-                     CAST(c.c_emb AS DOUBLE[])), 4) DESC, c.c_id) AS rn
-          FROM q, c)
-        WHERE rn <= 2),
+      ${seedsSql("c")},
+      ${assignedSql("assigned", "c")},
+      ${probesSql("probes", "q", "c", 2)},
       retr AS (
         SELECT q_id, vec_id FROM (
           SELECT p.q_id, a.vec_id,
@@ -2365,17 +2095,10 @@ object VectorOps extends OpModule {
           .select(lit(path).as("path"), lit(nprobe).as("nprobe"),
             round(col("hits") / 80.0, 4).as("recall"))
       // ---- frozen-centroid IVF (ivf_topk's index)
-      val cents = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
+      val cents = seeds(emb)
       val assignedF = assignArgmax(emb, cents)
         .localCheckpoint() // 4 consumers: 2 ivf rows + 2 ivfpq cand sets
-      val wProbe = Window.partitionBy(col("q_id"))
-        .orderBy(col("c_score").desc, col("c_id"))
-      val probesF = qs.crossJoin(broadcast(cents))
-        .withColumn("c_score", round(dot("q_emb", "c_emb"), 4))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") <= 8)
-        .select(col("q_id"), col("c_id"), col("rn"))
+      val probesF = probePerQuery(qs, cents, dot("q_emb", "c_emb"), 8)
         .localCheckpoint() // 4 consumers
       def ivfRetr(assigned: DataFrame, probes: DataFrame,
           np: Int): DataFrame =
@@ -2388,48 +2111,36 @@ object VectorOps extends OpModule {
           .select(col("q_id"), col("vec_id"), col("score")))
       // ---- Lloyd-trained IVF (ivf_topk_trained's index)
       val centsT = lloydRefine(emb, 16, LloydRounds)
-      val assignedT = emb.crossJoin(broadcast(centsT))
-        .withColumn("c_score", round(dotD("embedding", "cent"), 4))
-        .groupBy(col("vec_id"))
-        .agg(max_by(struct(col("c_id"), col("embedding")),
-          struct(col("c_score"), -col("c_id"))).as("m"))
-        .select(col("vec_id"), col("m.embedding").as("embedding"),
-          col("m.c_id").as("c_id"))
+      val assignedT = assignArgmax(emb, centsT, dotD("embedding", "cent"))
         .localCheckpoint() // 2 consumers: the two trained rows
-      val probesT = qs.crossJoin(broadcast(centsT))
-        .withColumn("c_score", round(dotD("q_emb", "cent"), 4))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") <= 8)
-        .select(col("q_id"), col("c_id"), col("rn"))
+      val probesT = probePerQuery(qs, centsT, dotD("q_emb", "cent"), 8)
         .localCheckpoint()
       // ---- PQ codes + per-query integer ADC (pq_topk's index)
-      val sub = emb
-        .select(col("vec_id"),
-          explode(sequence(lit(0), lit(7))).as("s"), col("embedding"))
-        .withColumn("sv", expr("slice(embedding, s * 8 + 1, 8)"))
-        .withColumn("s2", dot("sv", "sv"))
-        .select(col("vec_id"), col("s"), col("sv"), col("s2"))
-        .localCheckpoint() // 3 consumers: cb, codes, ADC tables
-      val cb = sub.filter(col("vec_id") < 16)
+      val sub = pqSplit(emb)
+        .localCheckpoint() // 3 consumers: codebooks, codes, ADC tables
+      // a seed codebook sliced from the checkpointed split (the same
+      // rows as seedCodebook, without re-scanning the corpus)
+      def subCodebook(k: Int): DataFrame = sub.filter(col("vec_id") < k)
         .select(col("vec_id").as("code"), col("s"),
           col("sv").as("c_sv"), col("s2").as("c2"))
-      val codes = sub.join(broadcast(cb), "s")
-        .withColumn("k", pqKey(dot("sv", "c_sv")))
-        .groupBy(col("vec_id"), col("s"))
-        .agg(min(col("k")).as("k"))
-        .select(col("vec_id"), col("s"), (col("k") % 65536L).as("code"))
-      val adcq = sub.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("q_id"), col("s"), col("sv").as("q_sv"))
-        .join(broadcast(cb), "s")
-        .withColumn("qdot_i",
-          round(dot("q_sv", "c_sv") * 10000, 0).cast("long"))
-        .select(col("q_id"), col("s"), col("code"), col("qdot_i"))
-      val pqScores = codes.join(broadcast(adcq), Seq("s", "code"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .groupBy(col("q_id"), col("vec_id"))
-        .agg(sum(col("qdot_i")).as("adc_i"))
-        .select(col("q_id"), col("vec_id"),
-          col("adc_i").cast("double").as("score"))
+      // ONE encode + per-query ADC kernel serves every codebook of
+      // the PQ grid ({16, 64} cells × {seed, trained}); dot_fd widens
+      // float elements exactly, so a float seed codebook scores
+      // bit-identically to its double widening (the DotProductMixed
+      // contract)
+      def pqAdcScores(cbk: DataFrame,
+          dotK: (String, String) => Column): DataFrame = {
+        val adcq = adcTable(sub.filter(col("vec_id") < 8)
+          .select(col("vec_id").as("q_id"), col("s"), col("sv").as("q_sv")),
+          cbk, dotK)
+        pqEncode(sub, cbk, dotK).join(broadcast(adcq), Seq("s", "code"))
+          .filter(col("vec_id") =!= col("q_id"))
+          .groupBy(col("q_id"), col("vec_id"))
+          .agg(sum(col("qdot_i")).as("adc_i"))
+          .select(col("q_id"), col("vec_id"),
+            col("adc_i").cast("double").as("score"))
+      }
+      val pqScores = pqAdcScores(subCodebook(16), dot)
         .localCheckpoint() // 3 consumers: pq row + 2 ivfpq rows
       // the candidate-restricted ADC frame is shared per nprobe: the
       // raw-ivfpq row takes its top-10 and the rerank row its top-100
@@ -2460,35 +2171,8 @@ object VectorOps extends OpModule {
           .select(col("q_id"), col("vec_id"), col("score")))
       }
       // ---- the rest of the PQ grid: {16, 64} cells × {seed,
-      // trained} isolates the two codebook knobs. ONE encode+ADC
-      // kernel serves every codebook — dot_fd widens float elements
-      // exactly, so a float seed codebook scores bit-identically to
-      // its double widening (the DotProductMixed contract)
-      def pqAdcScores(cbk: DataFrame): DataFrame = {
-        val codesK = sub.join(broadcast(cbk), "s")
-          .withColumn("k", pqKey(dotD("sv", "c_sv")))
-          .groupBy(col("vec_id"), col("s"))
-          .agg(min(col("k")).as("k"))
-          .select(col("vec_id"), col("s"),
-            (col("k") % 65536L).as("code"))
-        val adcqK = sub.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("q_id"), col("s"),
-            col("sv").as("q_sv"))
-          .join(broadcast(cbk), "s")
-          .withColumn("qdot_i",
-            round(dotD("q_sv", "c_sv") * 10000, 0).cast("long"))
-          .select(col("q_id"), col("s"), col("code"), col("qdot_i"))
-        codesK.join(broadcast(adcqK), Seq("s", "code"))
-          .filter(col("vec_id") =!= col("q_id"))
-          .groupBy(col("q_id"), col("vec_id"))
-          .agg(sum(col("qdot_i")).as("adc_i"))
-          .select(col("q_id"), col("vec_id"),
-            col("adc_i").cast("double").as("score"))
-      }
-      val cb64 = sub.filter(col("vec_id") < 64)
-        .select(col("vec_id").as("code"), col("s"),
-          col("sv").as("c_sv"), col("s2").as("c2"))
-      val pqScores64 = pqAdcScores(cb64)
+      // trained} isolates the two codebook knobs
+      val pqScores64 = pqAdcScores(subCodebook(64), dotD)
       val tr16 = pqLloydRefine(emb, sub, 16, LloydRounds)
       val tr64 = pqLloydRefine(emb, sub, 64, LloydRounds)
       recallRow("ivf", 2, ivfRetr(assignedF, probesF, 2))
@@ -2506,9 +2190,9 @@ object VectorOps extends OpModule {
         .unionByName(recallRow("pq", 16, top10(pqScores)))
         .unionByName(recallRow("pq64", 64, top10(pqScores64)))
         .unionByName(
-          recallRow("pq_trained", 16, top10(pqAdcScores(tr16))))
+          recallRow("pq_trained", 16, top10(pqAdcScores(tr16, dotD))))
         .unionByName(
-          recallRow("pq64_trained", 64, top10(pqAdcScores(tr64))))
+          recallRow("pq64_trained", 64, top10(pqAdcScores(tr64, dotD))))
     },
     Some {
       def rif(n: Int, a: String, p: String, cexp: String) = s"""
@@ -2529,7 +2213,7 @@ object VectorOps extends OpModule {
           SELECT s.q_id, s.vec_id,
                  ROW_NUMBER() OVER (PARTITION BY s.q_id
                    ORDER BY s.adc_i DESC, s.vec_id) AS rn
-          FROM pqs s
+          FROM pqs_pq s
           JOIN af a ON a.vec_id = s.vec_id
           JOIN pf p ON p.c_id = a.c_id AND p.q_id = s.q_id
             AND p.rn <= $n)
@@ -2549,7 +2233,7 @@ object VectorOps extends OpModule {
               SELECT s.q_id, s.vec_id,
                      ROW_NUMBER() OVER (PARTITION BY s.q_id
                        ORDER BY s.adc_i DESC, s.vec_id) AS srn
-              FROM pqs s
+              FROM pqs_pq s
               JOIN af a ON a.vec_id = s.vec_id
               JOIN pf p ON p.c_id = a.c_id AND p.q_id = s.q_id
                 AND p.rn <= $n)
@@ -2557,25 +2241,11 @@ object VectorOps extends OpModule {
           JOIN embeddings e ON e.vec_id = sl.vec_id
           JOIN q ON q.q_id = sl.q_id)
         WHERE rn <= 10)"""
-      // encode + per-query ADC + top-10 against a TRAINED codebook
-      // chain cbn (the pqLloydSql output), emitting r_$x
+      // encode + per-query ADC + top-10 against codebook cbn,
+      // emitting pqs_$x (the ADC scores) and r_$x
       def rtr(x: String, cbn: String) = s"""
-      codes_$x AS (
-        SELECT vec_id, s, code FROM (
-          SELECT sub.vec_id, sub.s, cb.code,
-                 ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
-                   ORDER BY ROUND(list_dot_product(sv, sv)
-                     + list_dot_product(c_sv, c_sv)
-                     - 2 * list_dot_product(sv, c_sv), 4) ASC,
-                   cb.code) AS rn
-          FROM sub JOIN $cbn cb USING (s))
-        WHERE rn = 1),
-      adcq_$x AS (
-        SELECT qq.vec_id AS q_id, cb.s, cb.code,
-               CAST(ROUND(list_dot_product(qq.sv, cb.c_sv) * 10000, 0)
-                 AS BIGINT) AS qdot_i
-        FROM (SELECT vec_id, s, sv FROM sub WHERE vec_id < 8) qq
-        JOIN $cbn cb USING (s)),
+      ${codesSql(s"codes_$x", cbn)},
+      ${adcSql(s"adcq_$x", cbn, "vec_id < 8")},
       pqs_$x AS (
         SELECT adcq_$x.q_id, codes_$x.vec_id, SUM(qdot_i) AS adc_i
         FROM codes_$x JOIN adcq_$x USING (s, code)
@@ -2606,82 +2276,16 @@ object VectorOps extends OpModule {
                      CAST(q.q_emb AS DOUBLE[])), 4) DESC, e.vec_id) AS rn
           FROM embeddings e, q WHERE e.vec_id <> q.q_id)
         WHERE rn <= 10),
-      cf AS (
-        SELECT vec_id AS c_id, embedding AS c_emb
-        FROM embeddings WHERE vec_id < 16),
-      af AS (
-        SELECT vec_id, embedding, c_id FROM (
-          SELECT e.vec_id, e.embedding, c.c_id,
-                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                   ORDER BY ROUND(list_dot_product(
-                     CAST(e.embedding AS DOUBLE[]),
-                     CAST(c.c_emb AS DOUBLE[])), 4) DESC, c.c_id) AS rn
-          FROM embeddings e, cf c)
-        WHERE rn = 1),
-      pf AS (
-        SELECT q_id, c_id, rn FROM (
-          SELECT q.q_id, c.c_id,
-                 ROW_NUMBER() OVER (PARTITION BY q.q_id
-                   ORDER BY ROUND(list_dot_product(
-                     CAST(q.q_emb AS DOUBLE[]),
-                     CAST(c.c_emb AS DOUBLE[])), 4) DESC, c.c_id) AS rn
-          FROM q, cf c)
-        WHERE rn <= 8),
+      ${seedsSql("cf")},
+      ${assignedSql("af", "cf")},
+      ${probesSql("pf", "q", "cf", 8)},
       ${lloydSql(16, LloydRounds)},
-      atr AS (
-        SELECT vec_id, embedding, c_id FROM (
-          SELECT e.vec_id, e.embedding, c.c_id,
-                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                   ORDER BY ROUND(list_dot_product(
-                     CAST(e.embedding AS DOUBLE[]), c.cent), 4) DESC,
-                   c.c_id) AS rn
-          FROM embeddings e, c$LloydRounds c)
-        WHERE rn = 1),
-      ptr AS (
-        SELECT q_id, c_id, rn FROM (
-          SELECT q.q_id, c.c_id,
-                 ROW_NUMBER() OVER (PARTITION BY q.q_id
-                   ORDER BY ROUND(list_dot_product(
-                     CAST(q.q_emb AS DOUBLE[]), c.cent), 4) DESC,
-                   c.c_id) AS rn
-          FROM q, c$LloydRounds c)
-        WHERE rn <= 8),
-      sub AS (
-        SELECT vec_id, s,
-               CAST(embedding[s * 8 + 1 : s * 8 + 8] AS DOUBLE[]) AS sv
-        FROM embeddings, UNNEST(generate_series(0, 7)) AS u(s)),
-      cb AS (SELECT vec_id AS code, s, sv AS c_sv
-             FROM sub WHERE vec_id < 16),
-      codes AS (
-        SELECT vec_id, s, code FROM (
-          SELECT sub.vec_id, sub.s, cb.code,
-                 ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
-                   ORDER BY ROUND(list_dot_product(sv, sv)
-                     + list_dot_product(c_sv, c_sv)
-                     - 2 * list_dot_product(sv, c_sv), 4) ASC,
-                   cb.code) AS rn
-          FROM sub JOIN cb USING (s))
-        WHERE rn = 1),
-      adcq AS (
-        SELECT qq.vec_id AS q_id, cb.s, cb.code,
-               CAST(ROUND(list_dot_product(qq.sv, cb.c_sv) * 10000, 0)
-                 AS BIGINT) AS qdot_i
-        FROM (SELECT vec_id, s, sv FROM sub WHERE vec_id < 8) qq
-        JOIN cb USING (s)),
-      pqs AS (
-        SELECT adcq.q_id, codes.vec_id, SUM(qdot_i) AS adc_i
-        FROM codes JOIN adcq USING (s, code)
-        WHERE codes.vec_id <> adcq.q_id
-        GROUP BY 1, 2),
-      r_pq AS (
-        SELECT q_id, vec_id FROM (
-          SELECT q_id, vec_id,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                   ORDER BY adc_i DESC, vec_id) AS rn
-          FROM pqs)
-        WHERE rn <= 10),
-      cb64 AS (SELECT vec_id AS code, s, sv AS c_sv
-               FROM sub WHERE vec_id < 64),
+      ${assignedSql("atr", s"c$LloydRounds", CentVec)},
+      ${probesSql("ptr", "q", s"c$LloydRounds", 8, CentVec)},
+      $subSql,
+      ${cbSql("cb", 16)},
+      ${rtr("pq", "cb")},
+      ${cbSql("cb64", 64)},
       ${rtr("pq64", "cb64")},
       ${pqLloydSql(LloydRounds, 16, "tp")},
       ${pqLloydSql(LloydRounds, 64, "tq")},

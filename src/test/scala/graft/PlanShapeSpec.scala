@@ -426,7 +426,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // partial aggregate collapses the k scored rows per vector BEFORE
     // the exchange, so the shuffle carries N partial rows, never the
     // N·k crossJoin expansion the row_number() window shuffled
-    for (name <- Seq("kmeans_assign", "ivf_topk")) {
+    for (name <- Seq("kmeans_assign", "ivf_topk", "ivf_topk_trained",
+        "ivfpq_topk", "ivfpq_rerank_topk")) {
       val plan = executedPlan(q(name))
       assert(plan.contains("partial_max_by"),
         s"$name: assignment does not partially aggregate:\n${plan.take(1200)}")
@@ -446,11 +447,13 @@ class PlanShapeSpec extends AnyFunSuite {
     // long (SCALE.md r12: plain long min stays in whole-stage codegen;
     // min_by(struct) is a TypedImperativeAggregate that doesn't) — the
     // partial form is partial_min, same map-side collapse
-    val pq = executedPlan(q("pq_topk"))
-    assert(pq.contains("partial_min"),
-      s"pq_topk: encode argmin does not partially aggregate:\n${pq.take(1200)}")
-    assert(!pq.contains("Window"),
-      s"pq_topk: encode fell back to a window:\n${pq.take(1200)}")
+    for (name <- Seq("pq_topk", "pq_topk_trained", "ivfpq_topk")) {
+      val pq = executedPlan(q(name))
+      assert(pq.contains("partial_min"),
+        s"$name: encode argmin does not partially aggregate:\n${pq.take(1200)}")
+      assert(!pq.contains("Window"),
+        s"$name: encode fell back to a window:\n${pq.take(1200)}")
+    }
   }
 
   test("knn_label windows only skinny rows; vote argmax is map-side") {

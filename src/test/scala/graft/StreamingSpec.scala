@@ -52,8 +52,10 @@ class StreamingSpec extends AnyFunSuite {
   private object StreamArt {
     val shapes = scala.collection.mutable.LinkedHashMap[String, String]()
     var headline = ""
+    // under the build's untracked target/ dir: a test run never
+    // rewrites the tracked BENCH_STREAM_sf1.json artifact
     private val path =
-      java.nio.file.Paths.get("/root/repo/BENCH_STREAM_sf1.json")
+      java.nio.file.Paths.get("target", "BENCH_STREAM_sf1.json")
 
     def write(): Unit = synchronized {
       val prior =
@@ -67,6 +69,7 @@ class StreamingSpec extends AnyFunSuite {
       val json = s"""{"metric":"stream_rows_per_sec",$head""" +
         s""""unit":"rows/s","sf":"/tmp/sf1",""" +
         s""""shapes":${merged.values.mkString("[", ",", "]")}}"""
+      java.nio.file.Files.createDirectories(path.getParent)
       java.nio.file.Files.write(path, (json + "\n").getBytes("UTF-8"))
     }
 
