@@ -510,26 +510,30 @@ object Graft {
   /** Gains/lift table: entities bucketed into `nTiles` by descending
     * total `valueCol`, each tile's share + cumulative share. Tiles
     * are assigned on the per-entity rollup via distributed exact rank
-    * (`Ranks.withGlobalRank`) + the closed-form NTILE — no global
-    * window, so the transform holds at web-scale entity counts. */
+    * (`Ranks.withGlobalRank`, whose total is the entity count) + the
+    * closed-form NTILE — no global window, so the transform holds at
+    * web-scale entity counts. */
   def decileLift(df: DataFrame, keyCol: String, valueCol: String,
       nTiles: Int = 10): DataFrame = {
     require(!Set("_v", "_tv", "_tot", "_n", "_rnk", "tile")(keyCol),
       s"decileLift: key column '$keyCol' is reserved")
     val per = df.groupBy(col(keyCol))
       .agg(sum(col(valueCol)).as("_v"))
-    val n = per.agg(count(lit(1)).cast("long").as("_n"))
     val byTile = graft.ops.Ranks
-      .withGlobalRank(per, "_rnk", col("_v").desc, col(keyCol))
-      .crossJoin(broadcast(n))
+      .withGlobalRank(per, "_rnk", "_n", col("_v").desc, col(keyCol))
       .withColumn("tile",
         graft.ops.Ranks.ntileFromRank(col("_rnk"), col("_n"), nTiles))
       .groupBy(col("tile"))
       .agg(count(lit(1)).as("n_keys"), sum(col("_v")).as("_tv"))
-    val tot = byTile.agg(sum(col("_tv")).as("_tot"))
-    val wc = Window.orderBy(col("tile"))
+    // one window over the nTiles-row rollup gives both the running
+    // and the grand total, so the ranked rollup is computed once
+    val byOrder = Window.orderBy(col("tile"))
+    val wc = byOrder
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    byTile.crossJoin(broadcast(tot))
+    val all = byOrder
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    byTile
+      .withColumn("_tot", sum(col("_tv")).over(all))
       .withColumn("share", col("_tv") / col("_tot"))
       .withColumn("cum_share", sum(col("_tv")).over(wc) / col("_tot"))
       .select(col("tile"), col("n_keys"), col("_tv").as("total"),
@@ -871,7 +875,7 @@ object Graft {
       .groupBy(col("_w"))
       .agg(count(lit(1)).as("_c"))
     graft.ops.Ranks
-      .withGlobalRank(counts, "_r", col("_c").desc, col("_w"))
+      .withGlobalRank(counts, "_r", "_n", col("_c").desc, col("_w"))
       .filter(col("_r") <= topK)
       .withColumn("_x", round(log(col("_r").cast("double")), 6))
       .withColumn("_y", round(log(col("_c").cast("double")), 6))

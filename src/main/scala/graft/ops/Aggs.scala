@@ -715,18 +715,18 @@ object Aggs extends OpModule {
     * contribution to b is the interval overlap, exploded over
     * [bucket(c0+1), bucket(c1)] and filtered to contrib > 0 so empty
     * buckets (possible only when n < 16) never appear — exactly the
-    * buckets the per-row rank form emits. The previous form ranked
-    * all rows (`Ranks.withGlobalRank`: range shuffle + double
-    * per-partition sort + an RDD row-conversion of the whole table —
-    * 4 of the 5 data-sized stages, ~510 core-s at sf10); this form
+    * buckets the per-row rank form emits. Ranking all rows instead
+    * (`Ranks.withGlobalRank` over the whole table) puts a table-sized
+    * range shuffle and sort on the critical path; this form
     * collapses the table map-side to the price domain (60 M rows →
     * 581 k distinct cents at sf10, and at 100 TB the domain stays
     * bounded while rows grow), so the only ordered pass is the
     * domain-sized cumulative count — `Ranks.withPrefixSum` over the
-    * rollup, so not even that runs in one task. Per-bucket money sums
-    * still accumulate in decimal(38,0) (12-digit cell sums diverge in
-    * double — the sf10 lesson): cents·contrib products are exact
-    * integers in both forms. */
+    * rollup, so not even that runs in one task; its total is the row
+    * count n. Per-bucket money sums still accumulate in
+    * decimal(38,0) (12-digit cell sums diverge in double — the sf10
+    * lesson): cents·contrib products are exact integers in both
+    * forms. */
   val equiDepthHist = Op(
     "equi_depth_hist",
     (s, d) => equiDepthBuckets(Tables(s, d, "lineitem")
@@ -752,13 +752,12 @@ object Aggs extends OpModule {
   /** `equi_depth_hist`'s bucket assignment: the 16-bucket equi-depth
     * histogram of a long `cents` column, from the distinct-value CDF
     * (see the op). The CDF's cumulative count `c1` is the distributed
-    * prefix sum of each value's multiplicity, never a global window. */
+    * prefix sum of each value's multiplicity, never a global window,
+    * and the row count `__n` is that prefix sum's total. */
   def equiDepthBuckets(cents: DataFrame): DataFrame = {
-    val n = cents.agg(count(lit(1)).as("__n"))
     val m = cents.groupBy(col("cents")).agg(count(lit(1)).as("m"))
-    Ranks.withPrefixSum(m, "c1", "m", col("cents"))
+    Ranks.withPrefixSum(m, "c1", "__n", "m", col("cents"))
       .withColumn("c0", col("c1") - col("m"))
-      .crossJoin(broadcast(n))
       .withColumn("bucket",
         explode(sequence(expr("(c0 * 16) div __n"),
           expr("((c1 - 1) * 16) div __n"))))

@@ -1,20 +1,26 @@
 package graft.ops
 
+import graft.plans.{PrefixSum, PrefixSumStrategy}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, AttributeReference, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Distributed exact order statistics (SURVEY.md §2.10 scale note).
   *
-  * `withPrefixSum` materializes each row's exact running sum of a
-  * weight under a total order WITHOUT a single-partition sort or
-  * window: range-partition on the sort key (each reducer owns a
-  * contiguous key range), sort within partitions, sum each
-  * partition's weights, then give every row its partition's offset +
-  * its local running sum. `withGlobalRank` is the unit-weight case:
-  * the exact 1-based global rank. All stages are parallel; nothing
-  * single-partition, nothing data-sized collected (the totals array
-  * is ≤#partitions longs).
+  * `withPrefixSum` adds each row's exact running sum of a weight under
+  * a total order, and the grand total, WITHOUT a single-partition sort
+  * or window: it builds the [[graft.plans.PrefixSum]] plan node, which
+  * runs as one range exchange (each reducer owns a contiguous key
+  * range), one job that sums each partition's weights (≤#partitions
+  * longs reach the driver), and one pass that sorts each partition
+  * once and adds its offset to the running sum. `withGlobalRank` is
+  * the unit-weight case: the exact 1-based global rank, with the row
+  * count as the total. The node is an ordinary part of the caller's
+  * plan: Catalyst prunes and plans through it, and nothing runs before
+  * the caller's action.
   *
   * `ntileFromRank` then reproduces SQL NTILE(k) bit-exactly as a pure
   * closed-form function of (rank, n): the first n%k buckets take
@@ -25,68 +31,40 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   */
 object Ranks {
 
-  /** Adds `out` = the inclusive prefix sum of the long column
-    * `weight` under `sortCols` (which must form a total order —
-    * include a unique tie-break column). One range shuffle +
-    * per-partition sort, then a job that sums each partition's weights
-    * and a final pass that adds each partition's offset to its running
-    * sum; no data-sized single-partition stage anywhere, and only the
-    * ≤#partitions totals are collected.
-    *
-    * Why not a __pid offsets self-join: the offsets approach evaluates
-    * the range-shuffled branch TWICE (once for the per-partition
-    * totals, once as the join's data side), and the two evaluations
-    * may disagree on partition layout (AQE coalescing + range-bound
-    * resampling are per-evaluation), silently dropping rows on the
-    * inner __pid join — observed nondeterministic row loss at sf1
-    * (r6). Here the totals job and the final pass both read the SAME
-    * materialized shuffle stage (DAGScheduler reuses shuffle map
-    * output across jobs) with a deterministic within-partition
-    * total-order sort, so offsets and data can never diverge.
-    *
-    * Known, accepted cost: shuffle MAP output is reused across the
-    * two jobs but the reduce-side SORT is not, so each partition sorts
-    * twice (~2.4 s wall of the row-ranking equi_depth_hist's 8 s at
-    * sf10 — r13). Materializing the sorted frame (`localCheckpoint`)
-    * to dodge the re-sort was MEASURED WORSE: it leaks ~2 GB of
-    * materialized rows per call (nothing can unpersist them — the
-    * final pass is lazy, inside the caller's job) and bench runs went
-    * 8.3 s → min 10.7 s with 30–36 s spreads under the resulting
-    * memory pressure. The double sort is the deterministic-layout
-    * price; it scales as one extra in-memory sort pass, never as data
-    * motion (SCALE.md r13). */
-  def withPrefixSum(df: DataFrame, out: String, weight: String,
-      sortCols: Column*): DataFrame = {
-    val at = df.schema.fieldIndex(weight)
-    prefixSum(df, out, _.getLong(at), sortCols)
+  /** Adds `out` = the inclusive prefix sum of the long column `weight`
+    * (a null weight counts as 0) under `sortCols`, and `total` = its
+    * sum over all rows; both non-null longs. `sortCols` must form a
+    * total order: include a unique tie-break column. */
+  def withPrefixSum(df: DataFrame, out: String, total: String,
+      weight: String, sortCols: Column*): DataFrame = {
+    require(df.schema(weight).dataType == LongType,
+      s"withPrefixSum: weight '$weight' must be a long column")
+    prefixSum(df, out, total, col(weight), sortCols)
   }
 
   /** Adds `rankCol` = exact global 1-based rank of each row under
-    * `sortCols`: the prefix sum of a unit weight. */
-  def withGlobalRank(df: DataFrame, rankCol: String,
+    * `sortCols` (the prefix sum of a unit weight), and `total` = the
+    * row count. */
+  def withGlobalRank(df: DataFrame, rankCol: String, total: String,
       sortCols: Column*): DataFrame =
-    prefixSum(df, rankCol, _ => 1L, sortCols)
+    prefixSum(df, rankCol, total, lit(1L), sortCols)
 
-  /** The totals job skips the last partition (its total offsets
-    * nothing), as zipWithIndex's count job does. */
-  private def prefixSum(df: DataFrame, out: String, weightOf: Row => Long,
-      sortCols: Seq[Column]): DataFrame = {
-    val sorted = df
-      .repartitionByRange(sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val schema = sorted.schema.add(out, LongType, nullable = false)
-    val rows = sorted.rdd
-    val n = rows.getNumPartitions
-    val totals =
-      if (n <= 1) Array.empty[Long]
-      else rows.sparkContext.runJob(rows, (it: Iterator[Row]) =>
-        it.foldLeft(0L)((acc, r) => acc + weightOf(r)), 0 until n - 1)
-    val offsets = totals.scanLeft(0L)(_ + _)
-    val summed = rows.mapPartitionsWithIndex { (p, it) =>
-      var acc = offsets(p)
-      it.map { r => acc += weightOf(r); Row.fromSeq(r.toSeq :+ acc) }
-    }
-    df.sparkSession.createDataFrame(summed, schema)
+  private def prefixSum(df: DataFrame, out: String, total: String,
+      weight: Column, sortCols: Seq[Column]): DataFrame = {
+    val spark = df.sparkSession
+    PrefixSumStrategy.setup(spark)
+    val order = sortCols.map(c => PlanBridge.expression(spark, c) match {
+      case o: SortOrder => o
+      case e => SortOrder(e, Ascending)
+    })
+    val child = df.queryExecution.analyzed
+    val sums = PrefixSum(order, PlanBridge.expression(spark, weight),
+      AttributeReference(out, LongType, nullable = false)(),
+      AttributeReference(total, LongType, nullable = false)(), child)
+    // the two sums re-aliased: a self-join of the result renews these
+    // aliases' ids (it cannot renew attributes a custom node produces)
+    PlanBridge.ofRows(spark, Project(child.output ++ Seq(
+      Alias(sums.out, out)(), Alias(sums.total, total)()), sums))
   }
 
   /** Exact integer division for non-negative long columns (numerator

@@ -337,11 +337,11 @@ object Windows extends OpModule {
     * exact operands.
     *
     * Scale posture: NTILE is computed WITHOUT a global window — the
-    * rollup is range-partitioned on the sort key, sorted per
-    * partition, and the exact global rank assigned by zipWithIndex
-    * over the one materialized shuffle (`Ranks.withGlobalRank`); the
-    * decile is then a closed-form function of (rank, n) that matches
-    * the oracle's NTILE bit-exactly (`Ranks.ntileFromRank`). At
+    * rollup is range-partitioned on the sort key, sorted once per
+    * partition, and given its exact global rank and the customer
+    * count n in the same pass (`Ranks.withGlobalRank`); the decile is
+    * then a closed-form function of (rank, n) that matches the
+    * oracle's NTILE bit-exactly (`Ranks.ntileFromRank`). At
     * 100 TB / 100M customers every stage stays parallel: the only
     * single-partition structures are the ≤#partitions offsets table
     * and the 10-row decile rollup. */
@@ -386,9 +386,12 @@ object Windows extends OpModule {
     * .xx5 round-half boundary where the engines round apart). The
     * three quintile scores are computed as in `decile_lift`: three
     * range-partitioned exact-rank passes over the per-customer ROLLUP
-    * (`Ranks.withGlobalRank`) + the closed-form NTILE assignment —
-    * no global window anywhere, so the op scales to web-scale
-    * customer counts; the global max date is one broadcast scalar. */
+    * (`Ranks.withGlobalRank`, each also giving the customer count) +
+    * the closed-form NTILE assignment — no global window anywhere, so
+    * the op scales to web-scale customer counts. Recency is
+    * max_day − last_day with ONE max_day for all customers, so
+    * ascending recency (nulls first) is descending last_day (nulls
+    * first): the rank needs no max_day scalar at all. */
   val rfmSegments = Op(
     "rfm_segments",
     (s, d) => {
@@ -400,23 +403,19 @@ object Windows extends OpModule {
         .agg(max(col("day_no")).as("last_day"),
           count(lit(1)).as("freq"),
           sum(col("cents")).as("monetary"))
-      val mx = per.agg(max(col("last_day")).as("max_day"),
-        count(lit(1)).cast("long").as("__n"))
-      val base = per.crossJoin(broadcast(mx))
-        .withColumn("recency", col("max_day") - col("last_day"))
-      val r1 = Ranks.withGlobalRank(base, "__rr",
-        col("recency"), col("o_custkey"))
-      val r2 = Ranks.withGlobalRank(r1, "__fr",
+      val r1 = Ranks.withGlobalRank(per, "__rr", "__rn",
+        col("last_day").desc_nulls_first, col("o_custkey"))
+      val r2 = Ranks.withGlobalRank(r1, "__fr", "__fn",
         col("freq").desc, col("o_custkey"))
-      val ranked = Ranks.withGlobalRank(r2, "__mr",
+      val ranked = Ranks.withGlobalRank(r2, "__mr", "__mn",
         col("monetary").desc, col("o_custkey"))
       val scored = ranked
         .withColumn("r_score",
-          Ranks.ntileFromRank(col("__rr"), col("__n"), 5))
+          Ranks.ntileFromRank(col("__rr"), col("__rn"), 5))
         .withColumn("f_score",
-          Ranks.ntileFromRank(col("__fr"), col("__n"), 5))
+          Ranks.ntileFromRank(col("__fr"), col("__fn"), 5))
         .withColumn("m_score",
-          Ranks.ntileFromRank(col("__mr"), col("__n"), 5))
+          Ranks.ntileFromRank(col("__mr"), col("__mn"), 5))
       scored.groupBy(col("r_score"), col("f_score"), col("m_score"))
         .agg(count(lit(1)).as("n_customers"),
           // total (not mean) spend: cents/100 always has exactly two

@@ -501,13 +501,13 @@ object LmOps extends OpModule {
     *
     * Scale: the ranking is the ONLY data-sized ordered step and it
     * runs on the distributed exact-rank kernel
-    * (`Ranks.withGlobalRank`: repartitionByRange + per-partition
-    * zipWithIndex — no single-task global window, the zipf_fit/
-    * vocab_build precedent); scoring is the unigram kernel's one
-    * broadcast join; the rest is per-row hash arithmetic and a
-    * 4-row rollup. Rank-based buckets beat value cutoffs here
-    * because they are exactly reproducible in both engines with no
-    * quantile-interpolation convention to match. */
+    * (`Ranks.withGlobalRank`: one range exchange + one per-partition
+    * sort, which also gives the quartile total N — no single-task
+    * global window, the zipf_fit/vocab_build precedent); scoring is
+    * the unigram kernel's one broadcast join; the rest is per-row
+    * hash arithmetic and a 4-row rollup. Rank-based buckets beat
+    * value cutoffs here because they are exactly reproducible in both
+    * engines with no quantile-interpolation convention to match. */
   val perplexityMix = Op(
     "perplexity_mix",
     (s, d) => {
@@ -528,21 +528,9 @@ object LmOps extends OpModule {
         .crossJoin(broadcast(nu))
         .groupBy(col("doc_id"))
         .agg(round(avg(log(col("c") * lit(1.0) / col("nu"))), 4).as("lp"))
-      val ranked = graft.ops.Ranks.withGlobalRank(
-        scored, "rk", col("lp"), col("doc_id"))
-      // scored has exactly one row per NON-NULL-text document (both
-      // engines' explode/unnest drop null-text rows; split("") still
-      // yields one token), so the quartile total is count(text) — a
-      // single-column null-mask scan, not a re-execution of scored's
-      // whole tokenize/join lineage (which an agg on `scored` would
-      // trigger: withGlobalRank is an opaque RDD, so nothing below it
-      // is a reusable exchange). count(text), not count(*): a
-      // null-text row must not inflate nn past scored's row count or
-      // the bucket boundaries diverge from the oracle's COUNT(*) FROM
-      // scored. doc_id uniqueness is the engine-wide PK contract
-      // (fk_orphans/data_profile audit it).
-      val total = docs.agg(count(col("text")).as("nn"))
-      ranked.crossJoin(broadcast(total))
+      // nn = scored's row count, the oracle's COUNT(*) FROM scored
+      graft.ops.Ranks.withGlobalRank(
+          scored, "rk", "nn", col("lp"), col("doc_id"))
         // ((rk-1)*4) DIV nn directly: Spark's DIV truncates and the
         // operands are non-negative, so the explicit x - x%n floor is
         // redundant — and this is byte-for-byte the oracle's `//` form
@@ -604,11 +592,12 @@ object LmOps extends OpModule {
     * precedent — a 64-bit collision merges two count cells, never
     * corrupts structure), scoring is one dictionary join, and the
     * only data-sized ordered step is the exact-rank kernel
-    * (`Ranks.withGlobalRank` over (lang, lp desc, doc_id): range
-    * shuffle + zipWithIndex, no single-task window). Per-lang ranks
-    * come from the GLOBAL rank minus a per-lang offset — the offset
-    * table is |langs| rows (≤ a few hundred at web scale), so its
-    * cumulative window is a broadcast-sized frame, never data-sized.
+    * (`Ranks.withGlobalRank` over (lang, lp desc, doc_id): one range
+    * exchange + one sort per partition, no single-task window).
+    * Per-lang ranks come from the GLOBAL rank minus a per-lang
+    * offset — the offset table is |langs| rows (≤ a few hundred at
+    * web scale), so its cumulative window is a broadcast-sized
+    * frame, never data-sized.
     * A `ROW_NUMBER() OVER (PARTITION BY lang ...)` window would
     * instead sort each language's full corpus in one task per lang —
     * the single-reducer killer for an 80%-English crawl. */
@@ -639,18 +628,17 @@ object LmOps extends OpModule {
         .agg(count(lit(1)).as("nt"),
           round(avg(log(col("c") * lit(1.0) / col("nu"))), 4).as("lp"))
       val ranked = graft.ops.Ranks.withGlobalRank(
-        scored, "rk", col("lang"), col("lp").desc, col("doc_id"))
+        scored, "rk", "n", col("lang"), col("lp").desc, col("doc_id"))
       // per-lang sizes and rank offsets: |langs| rows, so the
       // cumulative-sum window is a constant-sized frame
       val lw = org.apache.spark.sql.expressions.Window
         .orderBy(col("lang"))
         .rowsBetween(org.apache.spark.sql.expressions.Window
           .unboundedPreceding, -1)
-      // per-lang sizes from the DOCS table, not from `scored`:
-      // withGlobalRank is an opaque RDD, so an agg over `scored`
-      // would re-execute the whole tokenize/join/score lineage just
-      // to count ≤|langs| rows (the perplexity_mix count(text)
-      // lesson). scored has exactly one row per non-null-(lang,text)
+      // per-lang sizes from the DOCS table, not from `scored`: an
+      // agg over `scored` would be a second branch over the whole
+      // tokenize/join/score lineage just to count ≤|langs| rows.
+      // scored has exactly one row per non-null-(lang,text)
       // doc — explode of split('') still yields one token, and the
       // dictionary equi-join drops null langs (null keys never
       // match) — so the offset population must exclude null langs

@@ -374,8 +374,8 @@ object TextOps extends OpModule {
     *
     * Scale shape: the count is the usual explode + map-side-combined
     * groupBy (vocabulary-sized shuffle); the dense-id assignment is a
-    * distributed exact rank (`Ranks.withGlobalRank`: range-partition
-    * + in-partition sort + zipWithIndex) — a web-corpus
+    * distributed exact rank (`Ranks.withGlobalRank`: one range
+    * exchange + one in-partition sort) — a web-corpus
     * vocabulary can be tens of millions of tokens, too big to bet on
     * a single-partition window. */
   val vocabBuild = Op(
@@ -387,7 +387,7 @@ object TextOps extends OpModule {
         .agg(count(lit(1)).as("n_occ"))
         .filter(col("n_occ") >= 5)
       graft.ops.Ranks
-        .withGlobalRank(counts, "__rnk",
+        .withGlobalRank(counts, "__rnk", "__n",
           col("n_occ").desc, col("token"))
         .withColumn("token_id", (col("__rnk") - 1).cast("int"))
         .select(col("token_id"), col("token"), col("n_occ"))

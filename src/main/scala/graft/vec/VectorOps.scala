@@ -1813,7 +1813,7 @@ object VectorOps extends OpModule {
       // the shared argmax kernel; codes via the shared packed-key
       // encode, then all 8 nibbles packed little-endian into one long
       def indexRows(e: DataFrame): DataFrame = {
-        val assign = assignArgmax(e, cents)
+        val assign = assignArgmax(e, cents, carry = None)
           .select(col("vec_id"), col("c_id").as("list"))
         val packed = pqEncode(pqSplit(e), cb, dot)
           .groupBy(col("vec_id"))

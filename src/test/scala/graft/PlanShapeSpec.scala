@@ -225,20 +225,18 @@ class PlanShapeSpec extends AnyFunSuite {
     // min/max/count/avg), a ≤k-row centroid/target set, or the
     // calendar grid — bounded at any data scale by construction.
     val boundedBnlj = Set(
-      "above_avg", "bm25_top", "decile_lift", "embed_quantize",
+      "above_avg", "bm25_top", "embed_quantize",
       "ivf_topk", "kmeans_assign", "knn_label", "mix_uniform",
       "period_compare", "pmi_bigrams", "resample_daily", "tfidf_top",
       "unigram_logprob", "value_histogram", "vector_topk",
       "zorder_bucket",
       "funnel_steps",  // crossJoin of three 1-row step-count aggregates
-      "rfm_segments",  // crossJoin of the 1-row global max-day scalar
       "churn_flags",   // crossJoin of the 1-row dataset-end scalar
       "rolling_wau",   // crossJoin of the 1-row day-span scalar
       "dau_mau",       // crossJoin of the 1-row day-span scalar
       "merge_upsert",  // crossJoin of the 1-row max-key scalar
       "merge_partitioned", // crossJoin of the 1-row max-key scalar
       "fk_orphans",    // crossJoins of three 1-row audit aggregates
-      "equi_depth_hist", // crossJoin of the 1-row global-count scalar
       "bpe_merges",    // K crossJoins of the 1-row argmax merge rule
       "bpe_encode",    // same K 1-row argmax crossJoins as bpe_merges
       "semdedup",      // crossJoin of the 8-row seed centroid set
@@ -261,8 +259,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "hard_negatives", // crossJoin of the 8-row anchor batch
       "interval_overlaps", // crossJoin of the two 1-row grid-bound
       //                  aggregates
-      "perplexity_mix", // crossJoins of the 1-row corpus-total and
-      //                  1-row doc-count scalars
+      "perplexity_mix", // crossJoin of the 1-row corpus-total scalar
       "epoch_plan",    // crossJoin of the 1-row budget/denominator
       //                  totals scalar
       "semdedup_append", // crossJoins of the 1-row max-vec_id scalar
@@ -319,7 +316,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val boundedGlobalWindow = Map(
       "window_frame" -> "per-day rollup: calendar-sized at any SF",
       "session_concurrency" -> "per-day carry rollup: calendar-sized",
-      "decile_lift" -> "10-row decile rollup cum-share",
+      "decile_lift" -> "10-row decile rollup cum-share and total",
       "interval_overlaps" -> "day-grid prefix sums: calendar-sized",
       "ccnet_buckets" -> "per-lang rank-offset rollup: ≤|langs| rows")
     val globals = SparkEntry.queries.toSeq.sortBy(_._1).map {
@@ -365,9 +362,10 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("decile_lift/rfm_segments never sort per-customer data globally") {
     // regression guard for the r5 'weak' finding: their only global
-    // windows must order config-bounded helper tables (__pid offsets,
-    // the 10-row decile rollup), never the per-customer sort keys
-    val perCustomerKeys = Seq("cust_cents", "recency", "freq", "monetary")
+    // windows must order config-bounded helper tables (the 10-row
+    // decile rollup), never the per-customer sort keys
+    val perCustomerKeys =
+      Seq("cust_cents", "recency", "last_day", "freq", "monetary")
     for (name <- Seq("decile_lift", "rfm_segments")) {
       val globals = q(name).queryExecution.optimizedPlan.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window
@@ -378,6 +376,23 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(bad.isEmpty,
         s"$name plans a global window over per-customer keys:\n" +
           bad.mkString("\n"))
+    }
+    // every op on the rank/prefix-sum kernel plans it as the PrefixSum
+    // node, and no kernel output comes back as an RDD scan: the only
+    // LogicalRDD left is a checkpoint the op takes itself (ccnet's
+    // per-lang dictionary)
+    val ownCheckpoints = Map("ccnet_buckets" -> Set("lang", "g", "c"))
+    for (name <- Seq("decile_lift", "rfm_segments", "equi_depth_hist",
+        "vocab_build", "zipf_fit", "perplexity_mix", "ccnet_buckets")) {
+      val plan = q(name).queryExecution.optimizedPlan
+      assert(plan.collect { case p: graft.plans.PrefixSum => p }.nonEmpty,
+        s"$name plans no PrefixSum node:\n$plan")
+      val rddScans = plan.collect {
+        case p if p.getClass.getSimpleName == "LogicalRDD" =>
+          p.output.map(_.name).toSet
+      }
+      assert(rddScans.forall(cols => ownCheckpoints.get(name).contains(cols)),
+        s"$name scans an RDD: ${rddScans.mkString(", ")}")
     }
   }
 

@@ -473,35 +473,6 @@ class SourcesSpec extends AnyFunSuite {
     (df.schema, df.collect().map(_.toString).sorted.toSeq)
   }
 
-  /** The number of Spark jobs `body` starts on this thread. They are
-    * tagged with a job group; a fence job started afterwards shows
-    * once the listener bus has delivered every earlier job start. */
-  private def jobsStartedBy(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"counted-${java.util.UUID.randomUUID()}"
-    val fence = s"fence-$group"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(fence, "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.contains(fence) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(seen.contains(fence), "the fence job's start never arrived")
-      seen.toArray.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("snapshots: a recorded #schema reads back the inference path's " +
       "schema and rows for seed, incremental and escaped/NULL versions") {
     import spark.implicits._
