@@ -32,18 +32,54 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    The only ordered scan is within a day partition; the carry is
   *    a calendar-sized prefix sum. 100 TB of sessions reduce to
   *    |distinct boundary instants| rows before any ordered work.
+  *
+  * Event time and session identity come from [[GaSessions]]. The page
+  * id (`page`, `campaign`) and its oracle CTEs (`TouchSql`,
+  * `LaggedSql`) are defined here once, for this module and JourneyOps.
   */
 object FlowOps extends OpModule {
 
-  /** pages are the `props.k` custom dimension (0..99 catalog). */
+  /** The page id: the `props.k` custom dimension (0..99 catalog). */
+  private[ga] val page = get_json_object(col("props"), "$.k").cast("int")
+
   private def hits(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .withColumn("us", unix_micros(col("ts")))
-      .withColumn("page", get_json_object(col("props"), "$.k").cast("int"))
+    GaSessions.ev(s, d).withColumn("page", page)
 
   /** The attribution ops' channel: the `props.k` dimension mod 5. */
-  private[ga] val campaign =
-    get_json_object(col("props"), "$.k").cast("int") % 5
+  private[ga] val campaign = page % 5
+
+  /** The attribution oracles' touch extraction, the SQL twin of
+    * `campaign` and the click/view-touch, purchase-conversion
+    * predicates: `ev` (events with `us` and `campaign`), `t` (the
+    * touches) and `p` (the purchases, value in integer cents). Opens
+    * the oracle's WITH; continue with `,` and the next CTE. */
+  private[ga] val TouchSql = """WITH ev AS (
+        SELECT event_id, user_id, event_type, value,
+               epoch_us(CAST(ts AS TIMESTAMP)) AS us,
+               CAST(json_extract_string(props, '$.k') AS INT) % 5
+                 AS campaign
+        FROM events),
+      t AS (
+        SELECT user_id AS t_user, campaign, us AS t_us,
+               event_id AS t_id
+        FROM ev WHERE event_type IN ('click', 'view')),
+      p AS (
+        SELECT user_id AS p_user, event_id AS p_id, us AS p_us,
+               CAST(FLOOR(value * 100) AS BIGINT) AS cents
+        FROM ev WHERE event_type = 'purchase')"""
+
+  /** The navigation oracles' hit sequence: `seq` (pages with `us`)
+    * and `lagged` (each page with its per-user previous page, in
+    * (us, event_id) order). Opens the oracle's WITH. */
+  private val LaggedSql = """WITH seq AS (
+        SELECT user_id, event_id,
+               CAST(json_extract_string(props, '$.k') AS INT) AS page,
+               epoch_us(CAST(ts AS TIMESTAMP)) AS us
+        FROM events),
+      lagged AS (
+        SELECT page, LAG(page) OVER (PARTITION BY user_id
+                                     ORDER BY us, event_id) AS prev_page
+        FROM seq)"""
 
   private val perUser = Window
     .partitionBy(col("user_id"))
@@ -60,16 +96,8 @@ object FlowOps extends OpModule {
         .filter(col("prev_page").isNotNull)
         .groupBy(col("prev_page"), col("page"))
         .agg(count(lit(1)).as("n_trans")),
-    Some("""
-      WITH seq AS (
-        SELECT user_id, event_id,
-               CAST(json_extract_string(props, '$.k') AS INT) AS page,
-               epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        FROM events),
-      lagged AS (
-        SELECT page, LAG(page) OVER (PARTITION BY user_id
-                                     ORDER BY us, event_id) AS prev_page
-        FROM seq)
+    Some(s"""
+      $LaggedSql
       SELECT prev_page, page, COUNT(*) AS n_trans
       FROM lagged WHERE prev_page IS NOT NULL
       GROUP BY 1, 2"""))
@@ -128,16 +156,8 @@ object FlowOps extends OpModule {
       }
       ranks.select(col("page"), round(col("r"), 8).as("rank"))
     },
-    Some("""
-      WITH seq AS (
-        SELECT user_id, event_id,
-               CAST(json_extract_string(props, '$.k') AS INT) AS page,
-               epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        FROM events),
-      lagged AS (
-        SELECT page, LAG(page) OVER (PARTITION BY user_id
-                                     ORDER BY us, event_id) AS prev_page
-        FROM seq),
+    Some(s"""
+      $LaggedSql,
       trans AS (
         SELECT prev_page AS src, page AS dst, COUNT(*) AS w
         FROM lagged WHERE prev_page IS NOT NULL GROUP BY 1, 2),
@@ -222,24 +242,12 @@ object FlowOps extends OpModule {
     "session_concurrency",
     (s, d) => Graft.peakConcurrency(GaOps.sessionize.run(s, d),
       "start_us", "end_us"),
-    Some("""
+    Some(s"""
       WITH ev AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS us
         FROM events),
-      flagged AS (
-        SELECT *, CASE WHEN LAG(us) OVER w IS NULL
-                         OR us - LAG(us) OVER w > 1800000000
-                       THEN 1 ELSE 0 END AS new_s
-        FROM ev
-        WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-      sess AS (
-        SELECT user_id,
-               SUM(new_s) OVER (PARTITION BY user_id
-                                ORDER BY us, event_id
-                                ROWS UNBOUNDED PRECEDING) AS sid,
-               us
-        FROM flagged),
+      ${GaSessions.SessSql},
       bounds AS (
         SELECT user_id, sid, MIN(us) AS start_us, MAX(us) AS end_us
         FROM sess GROUP BY 1, 2),
@@ -447,8 +455,7 @@ object FlowOps extends OpModule {
   val markovTransitions = Op(
     "markov_transitions",
     (s, d) =>
-      Graft.markovTransitions(
-        Tables.events(s, d).withColumn("us", unix_micros(col("ts"))),
+      Graft.markovTransitions(GaSessions.ev(s, d),
         "user_id", "event_type", Seq(col("us"), col("event_id")))
         .select(col("prev_state").as("prev_type"),
           col("state").as("event_type"), col("n"), col("p")),
@@ -477,8 +484,7 @@ object FlowOps extends OpModule {
       val w = Window
         .partitionBy(col("user_id"))
         .orderBy(col("us"), col("event_id"))
-      val perUserFirst = Tables.events(s, d)
-        .withColumn("us", unix_micros(col("ts")))
+      val perUserFirst = GaSessions.ev(s, d)
         .withColumn("rn", row_number().over(w))
         .withColumn("converted",
           max(when(col("event_type") === "purchase", 1).otherwise(0))
@@ -519,8 +525,7 @@ object FlowOps extends OpModule {
     "conversion_lag",
     (s, d) => {
       val wU = Window.partitionBy(col("user_id"))
-      val lags = Tables.events(s, d)
-        .withColumn("us", unix_micros(col("ts")))
+      val lags = GaSessions.ev(s, d)
         .withColumn("signup_us",
           min(when(col("event_type") === "signup", col("us"))).over(wU))
         .filter(col("event_type") === "purchase" &&
@@ -768,21 +773,8 @@ object FlowOps extends OpModule {
         campaign, col("event_type").isin("click", "view"),
         col("event_type") === "purchase", col("value"), "linear")
         .withColumnRenamed("channel", "campaign"),
-    Some("""
-      WITH ev AS (
-        SELECT event_id, user_id, event_type, value,
-               epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-               CAST(json_extract_string(props, '$.k') AS INT) % 5
-                 AS campaign
-        FROM events),
-      t AS (
-        SELECT user_id AS t_user, campaign, us AS t_us,
-               event_id AS t_id
-        FROM ev WHERE event_type IN ('click', 'view')),
-      p AS (
-        SELECT user_id AS p_user, event_id AS p_id, us AS p_us,
-               CAST(FLOOR(value * 100) AS BIGINT) AS cents
-        FROM ev WHERE event_type = 'purchase'),
+    Some(s"""
+      $TouchSql,
       paired AS (
         SELECT p.p_id, p.cents, t.campaign, t.t_us, t.t_id
         FROM p LEFT JOIN t

@@ -2,9 +2,7 @@ package graft.ga
 
 import graft.{Op, OpModule, Tables}
 import graft.api.Graft
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** GA-semantic composite operators (SURVEY.md §2.10): the reference's
   * distinctive query surface — sessions, funnels, cohorts, and the
@@ -16,19 +14,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * sort never explodes; at 100 TB the same plan holds with
   * user_id-hash exchange + AQE skew splitting.
   *
-  * All event timestamps are handled as integral epoch microseconds
-  * (`unix_micros`) — never raw ns timestamps — per SURVEY §2 rule 4.
+  * Event time (`ev`: integral epoch microseconds, never raw ns
+  * timestamps, per SURVEY §2 rule 4) and session identity (the
+  * 30-min gap kernel and its oracle CTEs) come from [[GaSessions]].
   */
 object GaOps extends OpModule {
-
-  private val GapUs = 1800L * 1000000L // 30-minute inactivity gap
-
-  private def ev(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).withColumn("us", unix_micros(col("ts")))
-
-  private val perUser = Window
-    .partitionBy(col("user_id"))
-    .orderBy(col("us"), col("event_id"))
+  import GaSessions.{ev, withSid, SessSql}
 
   /** Gap-based sessionization (GA's 30-min session definition):
     * lag → new-session flag → running sum = session id → per-session
@@ -36,38 +27,19 @@ object GaOps extends OpModule {
   val sessionize = Op(
     "sessionize",
     (s, d) =>
-      ev(s, d)
-        .withColumn("prev_us", lag(col("us"), 1).over(perUser))
-        .withColumn(
-          "new_s",
-          when(col("prev_us").isNull ||
-            col("us") - col("prev_us") > GapUs, 1L).otherwise(0L))
-        .withColumn(
-          "sid",
-          sum(col("new_s")).over(
-            perUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      withSid(ev(s, d), "sid")
         .groupBy(col("user_id"), col("sid"))
         .agg(
           count(lit(1)).as("n_events"),
           min(col("us")).as("start_us"),
           max(col("us")).as("end_us"),
           round(sum(col("value")), 2).as("session_value")),
-    Some("""
+    Some(s"""
       WITH ev AS (
         SELECT user_id, event_id, value,
                epoch_us(CAST(ts AS TIMESTAMP)) AS us
         FROM events),
-      flagged AS (
-        SELECT *, CASE WHEN LAG(us) OVER w IS NULL
-                         OR us - LAG(us) OVER w > 1800000000
-                       THEN 1 ELSE 0 END AS new_s
-        FROM ev
-        WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-      sess AS (
-        SELECT *, SUM(new_s) OVER (PARTITION BY user_id
-                                   ORDER BY us, event_id
-                                   ROWS UNBOUNDED PRECEDING) AS sid
-        FROM flagged)
+      $SessSql
       SELECT user_id, CAST(sid AS BIGINT) AS sid, COUNT(*) AS n_events,
              MIN(us) AS start_us, MAX(us) AS end_us,
              ROUND(SUM(value), 2) AS session_value
@@ -75,8 +47,10 @@ object GaOps extends OpModule {
 
   /** Native Spark session_window (the Structured-Streaming-ready
     * session operator) cross-checked against the classic gap SQL.
-    * session_window closes a session when the next event is >= last
-    * + gap, hence the `>=` in the oracle (vs `>` in `sessionize`). */
+    * session_window closes a session at last event + gap, so the next
+    * event opens a new one when it is >= last + gap: the oracle keeps
+    * its own `>=` chain on purpose instead of the shared
+    * [[GaSessions.SessSql]] (`>`, GA's rule). */
   val sessionWindow = Op(
     "session_window",
     (s, d) =>
@@ -88,13 +62,13 @@ object GaOps extends OpModule {
           max(col("us")).as("end_us"))
         .select(col("user_id"), col("n_events"), col("start_us"),
           col("end_us")),
-    Some("""
+    Some(s"""
       WITH ev AS (
         SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
         FROM events),
       flagged AS (
         SELECT *, CASE WHEN LAG(us) OVER w IS NULL
-                         OR us - LAG(us) OVER w >= 1800000000
+                         OR us - LAG(us) OVER w >= ${GaSessions.GapUs}
                        THEN 1 ELSE 0 END AS new_s
         FROM ev
         WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
@@ -326,8 +300,7 @@ object GaOps extends OpModule {
   val sessionMetrics = Op(
     "session_metrics",
     (s, d) =>
-      GaSessions.addSessionId(ev(s, d), col("user_id"), col("us"),
-        Seq(col("us"), col("event_id")), GapUs, "sid")
+      withSid(ev(s, d), "sid")
         .groupBy(col("user_id"), col("sid"))
         .agg(
           count(lit(1)).as("n_events"),
@@ -339,22 +312,12 @@ object GaOps extends OpModule {
           round(avg(when(col("n_events") === 1, 1.0).otherwise(0.0)), 4)
             .as("bounce_rate"),
           round(avg(col("end_us") - col("start_us")), 2).as("avg_dur_us")),
-    Some("""
+    Some(s"""
       WITH ev AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS us
         FROM events),
-      flagged AS (
-        SELECT *, CASE WHEN LAG(us) OVER w IS NULL
-                         OR us - LAG(us) OVER w > 1800000000
-                       THEN 1 ELSE 0 END AS new_s
-        FROM ev
-        WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-      sess AS (
-        SELECT *, SUM(new_s) OVER (PARTITION BY user_id
-                                   ORDER BY us, event_id
-                                   ROWS UNBOUNDED PRECEDING) AS sid
-        FROM flagged),
+      $SessSql,
       per_session AS (
         SELECT user_id, sid, COUNT(*) AS n_events,
                MIN(us) AS start_us, MAX(us) AS end_us
@@ -382,22 +345,12 @@ object GaOps extends OpModule {
         .metrics(GaMetrics.sessions, GaMetrics.totalValue)
         .sortDesc(GaMetrics.SessionsKey)
         .toDF(s, d),
-    Some("""
+    Some(s"""
       WITH ev AS (
         SELECT user_id, event_type, value, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS us
         FROM events),
-      flagged AS (
-        SELECT *, CASE WHEN LAG(us) OVER w IS NULL
-                         OR us - LAG(us) OVER w > 1800000000
-                       THEN 1 ELSE 0 END AS new_s
-        FROM ev
-        WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-      sess AS (
-        SELECT *, SUM(new_s) OVER (PARTITION BY user_id
-                                   ORDER BY us, event_id
-                                   ROWS UNBOUNDED PRECEDING) AS sid
-        FROM flagged),
+      $SessSql,
       seg AS (
         SELECT DISTINCT user_id, sid FROM sess
         WHERE event_type = 'purchase')
@@ -452,8 +405,7 @@ object GaOps extends OpModule {
   val cdcLatest = Op(
     "cdc_latest",
     (s, d) =>
-      Tables.events(s, d)
-        .withColumn("us", unix_micros(col("ts")))
+      ev(s, d)
         .groupBy(col("user_id"))
         .agg(
           max(struct(col("us"), col("event_id"), col("event_type"),
@@ -567,15 +519,7 @@ object GaOps extends OpModule {
   val bounceRate = Op(
     "bounce_rate",
     (s, d) => {
-      val sessions = ev(s, d)
-        .withColumn("prev_us", lag(col("us"), 1).over(perUser))
-        .withColumn("new_s",
-          when(col("prev_us").isNull ||
-            col("us") - col("prev_us") > GapUs, 1L).otherwise(0L))
-        .withColumn("sid",
-          sum(col("new_s")).over(
-            perUser.rowsBetween(Window.unboundedPreceding,
-              Window.currentRow)))
+      val sessions = withSid(ev(s, d), "sid")
         .groupBy(col("user_id"), col("sid"))
         .agg(count(lit(1)).as("n_events"), min(col("us")).as("start_us"))
       sessions
@@ -587,22 +531,12 @@ object GaOps extends OpModule {
         .withColumn("bounce_bp",
           expr("n_bounced * 10000 div n_sessions"))
     },
-    Some("""
+    Some(s"""
       WITH ev AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS us
         FROM events),
-      flagged AS (
-        SELECT *, CASE WHEN LAG(us) OVER w IS NULL
-                         OR us - LAG(us) OVER w > 1800000000
-                       THEN 1 ELSE 0 END AS new_s
-        FROM ev
-        WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-      sess AS (
-        SELECT *, SUM(new_s) OVER (PARTITION BY user_id
-                                   ORDER BY us, event_id
-                                   ROWS UNBOUNDED PRECEDING) AS sid
-        FROM flagged),
+      $SessSql,
       sessions AS (
         SELECT user_id, sid, COUNT(*) AS n_events, MIN(us) AS start_us
         FROM sess GROUP BY user_id, sid)

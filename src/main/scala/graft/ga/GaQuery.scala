@@ -1,6 +1,5 @@
 package graft.ga
 
-import graft.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -123,8 +122,7 @@ final case class GaQuery(
   }
 
   def toDF(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = Tables.events(spark, sfDir)
-      .withColumn("us", unix_micros(col("ts")))
+    val raw = GaSessions.ev(spark, sfDir)
 
     // session scope and session-count metrics need a session id on
     // every row; compute it once over the UNFILTERED stream (GA
@@ -133,8 +131,7 @@ final case class GaQuery(
     val needsSessions = sessionSegment.isDefined ||
       mets.exists(_._1 == GaMetrics.SessionsKey)
     val base = if (!needsSessions) raw else
-      GaSessions.addSessionId(raw, col("user_id"), col("us"),
-        Seq(col("us"), col("event_id")), 1800L * 1000000L, "_sid")
+      GaSessions.withSid(raw, "_sid")
 
     require(mets.nonEmpty,
       "GaQuery needs at least one metric (GA reports always carry metrics); " +

@@ -4,7 +4,6 @@ import graft.{Op, OpModule, Tables}
 import graft.api.Graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** User-journey operators over the `events` hit stream (SURVEY.md
   * §2.10, round-6 batch 2): time-decay multi-touch attribution, the
@@ -32,17 +31,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * are integer powers of two (shiftleft — POWER() is double and
   * never used); gap buckets come from integer bin-string length,
   * not floating log2.
+  *
+  * Event time, session identity and their oracle CTEs come from
+  * [[GaSessions]]; the attribution touch extraction (`campaign`,
+  * `TouchSql`) and the page id from [[FlowOps]].
   */
 object JourneyOps extends OpModule {
-
-  private val GapUs = 1800L * 1000000L // 30-minute inactivity gap
-
-  private def ev(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).withColumn("us", unix_micros(col("ts")))
-
-  private val perUser = Window
-    .partitionBy(col("user_id"))
-    .orderBy(col("us"), col("event_id"))
+  import GaSessions.{ev, withSid, SessSql}
 
   /** Time-decay multi-touch attribution — the GA model that weights
     * recent touches over old ones: every click/view touch before a
@@ -67,21 +62,8 @@ object JourneyOps extends OpModule {
         FlowOps.campaign, col("event_type").isin("click", "view"),
         col("event_type") === "purchase", col("value"), "time_decay", 30)
         .withColumnRenamed("channel", "campaign"),
-    Some("""
-      WITH ev AS (
-        SELECT event_id, user_id, event_type, value,
-               epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-               CAST(json_extract_string(props, '$.k') AS INT) % 5
-                 AS campaign
-        FROM events),
-      t AS (
-        SELECT user_id AS t_user, campaign, us AS t_us,
-               event_id AS t_id
-        FROM ev WHERE event_type IN ('click', 'view')),
-      p AS (
-        SELECT user_id AS p_user, event_id AS p_id, us AS p_us,
-               CAST(FLOOR(value * 100) AS BIGINT) AS cents
-        FROM ev WHERE event_type = 'purchase'),
+    Some(s"""
+      ${FlowOps.TouchSql},
       paired AS (
         SELECT p.p_id, p.cents, t.campaign, t.t_us, t.t_id,
                COALESCE(CAST(1 AS BIGINT) <<
@@ -117,16 +99,7 @@ object JourneyOps extends OpModule {
   val sessionPaths = Op(
     "session_paths",
     (s, d) => {
-      val hits = ev(s, d)
-        .withColumn("page",
-          get_json_object(col("props"), "$.k").cast("int"))
-        .withColumn("prev_us", lag(col("us"), 1).over(perUser))
-        .withColumn("new_s",
-          when(col("prev_us").isNull ||
-            col("us") - col("prev_us") > GapUs, 1L).otherwise(0L))
-        .withColumn("sid",
-          sum(col("new_s")).over(perUser.rowsBetween(
-            Window.unboundedPreceding, Window.currentRow)))
+      val hits = withSid(ev(s, d).withColumn("page", FlowOps.page), "sid")
       val perSess = Window
         .partitionBy(col("user_id"), col("sid"))
         .orderBy(col("us"), col("event_id"))
@@ -140,23 +113,13 @@ object JourneyOps extends OpModule {
         .orderBy(col("n_paths").desc, col("p1"), col("p2"), col("p3"))
         .limit(20)
     },
-    Some("""
+    Some(s"""
       WITH ev AS (
         SELECT user_id, event_id,
                epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-               CAST(json_extract_string(props, '$.k') AS INT) AS page
+               CAST(json_extract_string(props, '$$.k') AS INT) AS page
         FROM events),
-      flagged AS (
-        SELECT *, CASE WHEN LAG(us) OVER w IS NULL
-                         OR us - LAG(us) OVER w > 1800000000
-                       THEN 1 ELSE 0 END AS new_s
-        FROM ev
-        WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-      sess AS (
-        SELECT *, SUM(new_s) OVER (PARTITION BY user_id
-                                   ORDER BY us, event_id
-                                   ROWS UNBOUNDED PRECEDING) AS sid
-        FROM flagged),
+      $SessSql,
       grams AS (
         SELECT page AS p1,
                LEAD(page, 1) OVER w2 AS p2,
@@ -237,21 +200,8 @@ object JourneyOps extends OpModule {
         FlowOps.campaign, col("event_type").isin("click", "view"),
         col("event_type") === "purchase", col("value"), "position")
         .withColumnRenamed("channel", "campaign"),
-    Some("""
-      WITH ev AS (
-        SELECT event_id, user_id, event_type, value,
-               epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-               CAST(json_extract_string(props, '$.k') AS INT) % 5
-                 AS campaign
-        FROM events),
-      t AS (
-        SELECT user_id AS t_user, campaign, us AS t_us,
-               event_id AS t_id
-        FROM ev WHERE event_type IN ('click', 'view')),
-      p AS (
-        SELECT user_id AS p_user, event_id AS p_id, us AS p_us,
-               CAST(FLOOR(value * 100) AS BIGINT) AS cents
-        FROM ev WHERE event_type = 'purchase'),
+    Some(s"""
+      ${FlowOps.TouchSql},
       paired AS (
         SELECT p.p_id, p.cents, t.campaign, t.t_us, t.t_id
         FROM p LEFT JOIN t
@@ -294,15 +244,7 @@ object JourneyOps extends OpModule {
   val cartAbandonment = Op(
     "cart_abandonment",
     (s, d) => {
-      val sessions = ev(s, d)
-        .withColumn("prev_us", lag(col("us"), 1).over(perUser))
-        .withColumn("new_s",
-          when(col("prev_us").isNull ||
-            col("us") - col("prev_us") > GapUs, 1L).otherwise(0L))
-        .withColumn("sid",
-          sum(col("new_s")).over(
-            perUser.rowsBetween(Window.unboundedPreceding,
-              Window.currentRow)))
+      val sessions = withSid(ev(s, d), "sid")
         .groupBy(col("user_id"), col("sid"))
         .agg(min(col("us")).as("start_us"),
           max(when(col("event_type") === "click", 1L).otherwise(0L))
@@ -318,22 +260,12 @@ object JourneyOps extends OpModule {
         .withColumn("abandon_bp",
           expr("n_abandoned * 10000 div n_cart_sessions"))
     },
-    Some("""
+    Some(s"""
       WITH ev AS (
         SELECT user_id, event_id, event_type,
                epoch_us(CAST(ts AS TIMESTAMP)) AS us
         FROM events),
-      flagged AS (
-        SELECT *, CASE WHEN LAG(us) OVER w IS NULL
-                         OR us - LAG(us) OVER w > 1800000000
-                       THEN 1 ELSE 0 END AS new_s
-        FROM ev
-        WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-      sess AS (
-        SELECT *, SUM(new_s) OVER (PARTITION BY user_id
-                                   ORDER BY us, event_id
-                                   ROWS UNBOUNDED PRECEDING) AS sid
-        FROM flagged),
+      $SessSql,
       sessions AS (
         SELECT user_id, sid, MIN(us) AS start_us,
                MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)

@@ -640,7 +640,7 @@ object Snapshots {
   /** A writer-unique /tmp snapshot base for a declared op's fixture
     * demo (`/tmp/graft_<tag>_<sfDirHash>_p<pid>`), with any prior dir
     * for the same (tag, fixture, process) removed — ONE definition
-    * for the append-op modules (the path scheme appears in test
+    * for the append ops and SourceOps (the path scheme appears in test
     * assertions, so it must not drift per module). */
   def freshTmpBase(s: SparkSession, tag: String, sfDir: String): String = {
     val base = s"/tmp/graft_${tag}_${Integer.toHexString(sfDir.hashCode)}" +

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * inference is an extra full scan — production readers always pin
   * the schema), and returns a result the oracle computes from the
   * original parquet: hash equality proves the round-trip is
-  * lossless. Paths are keyed by the sfDir hash so concurrent Verify
-  * runs at different SFs never collide.
+  * lossless. Paths come from `Snapshots.freshTmpBase` (keyed by the
+  * sfDir hash and pid, emptied first) so concurrent Verify runs never
+  * collide and snapshot ops re-commit from scratch each run.
   *
   * `sink_partitioned` is the 100 TB layout primitive: a
   * `partitionBy(col)` parquet write produces the hive-style directory
@@ -22,19 +23,13 @@ import org.apache.spark.sql.functions._
   */
 object SourceOps extends OpModule {
 
-  private def tmp(name: String, sfDir: String): String =
-    // keyed by SF *and* pid: two concurrent runs at the same SF must
-    // not overwrite each other's files mid-read
-    s"/tmp/graft_src_${name}_${Integer.toHexString(sfDir.hashCode)}" +
-      s"_p${ProcessHandle.current().pid()}"
-
   /** nation -> csv (header) -> explicit-schema read -> projection.
     * Integer/string columns only: csv is a textual format, so the op
     * sticks to types with exact textual round-trips. */
   val csvRoundtrip = Op(
     "csv_roundtrip",
     (s, d) => {
-      val path = tmp("csv", d)
+      val path = Snapshots.freshTmpBase(s, "src_csv", d)
       Tables(s, d, "nation")
         .write.mode("overwrite").option("header", "true").csv(path)
       s.read
@@ -51,7 +46,7 @@ object SourceOps extends OpModule {
   val jsonRoundtrip = Op(
     "json_roundtrip",
     (s, d) => {
-      val path = tmp("json", d)
+      val path = Snapshots.freshTmpBase(s, "src_json", d)
       Tables(s, d, "supplier").write.mode("overwrite").json(path)
       s.read
         .schema("s_suppkey BIGINT, s_name STRING, s_nationkey INT, " +
@@ -70,7 +65,7 @@ object SourceOps extends OpModule {
   val sinkPartitioned = Op(
     "sink_partitioned",
     (s, d) => {
-      val path = tmp("part", d)
+      val path = Snapshots.freshTmpBase(s, "src_part", d)
       Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"), col("value"),
           col("event_type"))
@@ -104,7 +99,7 @@ object SourceOps extends OpModule {
   val mergePartitioned = Op(
     "merge_partitioned",
     (s, d) => {
-      val path = tmp("mergepart", d)
+      val path = Snapshots.freshTmpBase(s, "src_mergepart", d)
       Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("value"),
           col("event_type"))
@@ -166,7 +161,7 @@ object SourceOps extends OpModule {
   val orcRoundtrip = Op(
     "orc_roundtrip",
     (s, d) => {
-      val path = tmp("orc", d)
+      val path = Snapshots.freshTmpBase(s, "src_orc", d)
       Tables(s, d, "part")
         .select(col("p_partkey"), col("p_name"), col("p_brand"),
           col("p_retailprice"))
@@ -194,7 +189,7 @@ object SourceOps extends OpModule {
   val bucketJoin = Op(
     "bucket_join",
     (s, d) => {
-      val path = tmp("bucket", d)
+      val path = Snapshots.freshTmpBase(s, "src_bucket", d)
       val tag = Integer.toHexString(d.hashCode) +
         "_p" + ProcessHandle.current().pid()
       Tables(s, d, "orders")
@@ -295,7 +290,7 @@ object SourceOps extends OpModule {
       s.conf.set(
         "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
         "false")
-      val path = tmp("dpp", d)
+      val path = Snapshots.freshTmpBase(s, "src_dpp", d)
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("value"),
           to_date(col("ts")).as("day"))
@@ -341,8 +336,7 @@ object SourceOps extends OpModule {
   val snapshotRead = Op(
     "snapshot_read",
     (s, d) => {
-      val base = tmp("snap_read", d)
-      fresh(s, base)
+      val base = Snapshots.freshTmpBase(s, "src_snap_read", d)
       val o = Tables(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"))
@@ -371,8 +365,7 @@ object SourceOps extends OpModule {
   val snapshotDiff = Op(
     "snapshot_diff",
     (s, d) => {
-      val base = tmp("snap_diff", d)
-      fresh(s, base)
+      val base = Snapshots.freshTmpBase(s, "src_snap_diff", d)
       val o = Tables(s, d, "orders").select(col("o_orderkey"))
       Snapshots.commit(o.filter(col("o_orderkey") % 2 === 0), base) // v1
       Snapshots.commit(o.filter(col("o_orderkey") % 3 <= 1), base)  // v2
@@ -403,8 +396,7 @@ object SourceOps extends OpModule {
   val snapshotCompact = Op(
     "snapshot_compact",
     (s, d) => {
-      val base = tmp("snap_compact", d)
-      fresh(s, base)
+      val base = Snapshots.freshTmpBase(s, "src_snap_compact", d)
       val l = Tables(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_quantity"), col("l_returnflag"))
@@ -438,8 +430,7 @@ object SourceOps extends OpModule {
   val snapshotMerge = Op(
     "snapshot_merge",
     (s, d) => {
-      val base = tmp("snap_merge", d)
-      fresh(s, base)
+      val base = Snapshots.freshTmpBase(s, "src_snap_merge", d)
       val ev = Tables.events(s, d)
         .select(col("event_id"),
           floor(col("value") * 100).cast("long").as("cents"),
@@ -512,8 +503,7 @@ object SourceOps extends OpModule {
   val zorderWrite = Op(
     "zorder_write",
     (s, d) => {
-      val base = tmp("zorder", d)
-      fresh(s, base)
+      val base = Snapshots.freshTmpBase(s, "src_zorder", d)
       val spread8 = (c: String) =>
         (0 until 8).map(i =>
           s"(((($c) >> $i) & 1) << ${2 * i})").mkString(" + ")
@@ -567,8 +557,7 @@ object SourceOps extends OpModule {
   val compactPartitions = Op(
     "compact_partitions",
     (s, d) => {
-      val base = tmp("compact_parts", d)
-      fresh(s, base)
+      val base = Snapshots.freshTmpBase(s, "src_compact_parts", d)
       val ev = Tables.events(s, d)
         .select(col("event_id"),
           floor(col("value") * 100).cast("long").as("cents"),
@@ -593,16 +582,6 @@ object SourceOps extends OpModule {
                       + CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
                AS BIGINT) AS total_cents
       FROM events GROUP BY event_type"""))
-
-  /** Recursive delete for a per-run snapshot base: the declared ops
-    * re-commit from scratch each run (versions would otherwise
-    * accumulate across invocations of the same JVM). */
-  private def fresh(s: org.apache.spark.sql.SparkSession,
-      base: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(base)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (f.exists(p)) f.delete(p, true)
-  }
 
   override def ops: Seq[Op] =
     Seq(csvRoundtrip, jsonRoundtrip, sinkPartitioned, mergePartitioned,

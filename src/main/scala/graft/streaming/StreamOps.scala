@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ga.GaSessions.GapUs
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -151,8 +152,6 @@ object StreamOps {
 
   case class SessionOut(user_id: Long, start_us: Long, end_us: Long,
       n_events: Long, session_value: Double)
-
-  val GapUs: Long = 1800L * 1000000L
 
   /** µs since epoch; Timestamp.getTime is ms-truncated, sub-ms lives
     * in getNanos. */

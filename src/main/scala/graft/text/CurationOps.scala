@@ -950,27 +950,6 @@ object CurationOps extends OpModule {
              ROUND(2.0 * corpus * sq / (den * n_tokens), 4) AS epochs
       FROM per2, tot"""))
 
-  /** The PERSISTED exact-dedup index with incremental ingest — how a
-    * rolling-crawl dedup actually lives at 100 TB: the index is a
-    * snapshot table of (content hash → keeper doc, group count),
-    * hive-partitioned by hash prefix, built once from the base corpus
-    * (`commitPartitioned`) and maintained by MERGING each ingest
-    * batch's rolled-up hashes into it (`commitPartitions`) — keeper =
-    * least(old, new), count = sum. Only the partitions that received
-    * batch hashes rewrite (write amplification O(touched)·index/16,
-    * never O(corpus)); no document text is ever stored or re-read on
-    * the ingest path, the index rows are ~50 B each regardless of doc
-    * size. The batch is the 10 NEWEST doc_ids — a bounded ingest
-    * tick, so touched partitions ≤ 10 of 16 at every SF. Because the
-    * merge is associative (min and + over disjoint doc sets), the
-    * merged index is row-identical to hashing the full corpus at once
-    * — which is what the oracle computes — so any hash lost,
-    * double-counted, or mis-kept by the incremental path
-    * hash-mismatches. Output = the ENTIRE merged index (singletons
-    * included): every (hash, keeper, count) row must equal the
-    * one-shot build — stronger than reporting only dup groups, and
-    * non-empty at every SF (the fixtures below sf0.1 contain no exact
-    * clones, so a dup-only report would gate on empty-vs-empty). */
   /** The exact-dedup index rollup — `dedup_append`'s kernel, shared
     * with the streaming ingest (StreamOps.dedupIndexMerge) so the
     * streamed index cannot drift from the batch op it is documented
@@ -1017,6 +996,27 @@ object CurationOps extends OpModule {
           coalesce(col("b_n"), lit(0L))).as("n"))
   }
 
+  /** The PERSISTED exact-dedup index with incremental ingest — how a
+    * rolling-crawl dedup actually lives at 100 TB: the index is a
+    * snapshot table of (content hash → keeper doc, group count),
+    * hive-partitioned by hash prefix, built once from the base corpus
+    * (`commitPartitioned`) and maintained by MERGING each ingest
+    * batch's rolled-up hashes into it (`commitPartitions`) — keeper =
+    * least(old, new), count = sum. Only the partitions that received
+    * batch hashes rewrite (write amplification O(touched)·index/16,
+    * never O(corpus)); no document text is ever stored or re-read on
+    * the ingest path, the index rows are ~50 B each regardless of doc
+    * size. The batch is the 10 NEWEST doc_ids — a bounded ingest
+    * tick, so touched partitions ≤ 10 of 16 at every SF. Because the
+    * merge is associative (min and + over disjoint doc sets), the
+    * merged index is row-identical to hashing the full corpus at once
+    * — which is what the oracle computes — so any hash lost,
+    * double-counted, or mis-kept by the incremental path
+    * hash-mismatches. Output = the ENTIRE merged index (singletons
+    * included): every (hash, keeper, count) row must equal the
+    * one-shot build — stronger than reporting only dup groups, and
+    * non-empty at every SF (the fixtures below sf0.1 contain no exact
+    * clones, so a dup-only report would gate on empty-vs-empty). */
   val dedupAppend = Op(
     "dedup_append",
     (s, d) => {
@@ -1078,6 +1078,34 @@ object CurationOps extends OpModule {
       FROM documents
       GROUP BY 1"""))
 
+  /** Exact-dedup keepers of a (doc_id, text, …) frame: the rows
+    * whose doc_id is their md5-group minimum — `dedup_exact`'s keeper
+    * rule, for `Graft.curate` (whose docs promise exact
+    * reconciliation). `curation_funnel` applies the same rule inline
+    * over its checkpointed hashes, so it never re-reads text. */
+  private[graft] def exactKeepers(
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    docs.join(
+      docs.groupBy(md5(col("text")).as("_h"))
+        .agg(min(col("doc_id")).as("doc_id"))
+        .select(col("doc_id")),
+      Seq("doc_id"), "left_semi")
+
+  /** Near-dup survivors: drop any doc with a LOWER-id minhash partner
+    * at jaccard ≥ `threshold` (the EXISTS-lower-id rule over the
+    * `minhash_det` band→verify kernel), for `Graft.curate`.
+    * `curation_funnel` applies the same rule inline to its skinny
+    * exact-dedup survivors, joined against a re-read of their text. */
+  private[graft] def nearDupSurvivors(
+      docs: org.apache.spark.sql.DataFrame, threshold: Double)
+      : org.apache.spark.sql.DataFrame =
+    docs.join(
+      SimilarityOps
+        .minhashDetPairs(docs.select(col("doc_id"), col("text")),
+          threshold)
+        .select(col("doc_b").as("doc_id")).distinct(),
+      Seq("doc_id"), "left_anti")
+
   /** The curation funnel report — stage-by-stage document/token
     * attrition through the standard pre-training pipeline order
     * (raw → quality battery → exact dedup → near-dup), the one table
@@ -1109,32 +1137,6 @@ object CurationOps extends OpModule {
     * minhash chain's banded candidate join, both established
     * scale-clean kernels; every stage row is a map-side-combined
     * 1-row rollup. */
-  /** Exact-dedup keepers of a (doc_id, text, …) frame: the rows
-    * whose doc_id is their md5-group minimum — `dedup_exact`'s keeper
-    * rule, ONE definition for `curation_funnel` and `Graft.curate`
-    * (whose docs promise exact reconciliation). */
-  private[graft] def exactKeepers(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    docs.join(
-      docs.groupBy(md5(col("text")).as("_h"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
-
-  /** Near-dup survivors: drop any doc with a LOWER-id minhash partner
-    * at jaccard ≥ `threshold` (the EXISTS-lower-id rule over the
-    * `minhash_det` band→verify kernel) — shared by `curation_funnel`
-    * and `Graft.curate`. */
-  private[graft] def nearDupSurvivors(
-      docs: org.apache.spark.sql.DataFrame, threshold: Double)
-      : org.apache.spark.sql.DataFrame =
-    docs.join(
-      SimilarityOps
-        .minhashDetPairs(docs.select(col("doc_id"), col("text")),
-          threshold)
-        .select(col("doc_b").as("doc_id")).distinct(),
-      Seq("doc_id"), "left_anti")
-
   val curationFunnel = Op(
     "curation_funnel",
     (s, d) => {

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** GA composite-operator invariants (SURVEY.md §5.2 item 4):
   * sessionization bounds and gap property, DSL-vs-handwritten
-  * equality, session_window vs classic-gap cross-check, funnel and
+  * equality, session_window vs classic-gap cross-check, one session
+  * identity across the declared ops and the facade, funnel and
   * cohort sanity.
   */
 class GaSpec extends AnyFunSuite {
@@ -46,6 +47,19 @@ class GaSpec extends AnyFunSuite {
     // fixture timestamps are µs-random so exact 30:00.000000 gaps
     // don't occur -> equal counts
     assert(native == classic)
+  }
+
+  test("bounce_rate and session_metrics count Graft.sessionize's sessions") {
+    // one session identity across entry points: the declared ops'
+    // summed per-day session counts equal the facade's distinct
+    // (user, session) pairs at the same gap and tie-break
+    val expected = api.Graft
+      .sessionize(events, "user_id", "ts", tieBreak = Seq("event_id"))
+      .select("user_id", "session_id").distinct().count()
+    Seq("bounce_rate", "session_metrics").foreach { k =>
+      val n = q(k).agg(sum("n_sessions")).collect().head.getLong(0)
+      assert(n == expected, s"$k: $n sessions != $expected")
+    }
   }
 
   test("funnel_seq: purchase strictly after signup for every row") {
